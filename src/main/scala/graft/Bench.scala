@@ -36,8 +36,8 @@ object Bench {
       // (collect_list neighbor/basket lists) run 1.2–2.3× SLOWER
       // hash-resident at sf0.1 (bellman_ford_3 2.90 → 6.75 s). The sf0.1
       // bench is list-agg-heavy, so the default wins; the third-decade
-      // tools (ScaleDemo1000, AbFallback) set 8M where the heap aggs
-      // dominate. Env-overridable for A/Bs.
+      // tool (ScaleDemo1000) sets 8M where the heap aggs dominate.
+      // Env-overridable for A/Bs.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         sys.env.getOrElse("SPARK_GRAFT_OBJAGG_THR", "128"))
       .getOrCreate()

@@ -355,11 +355,13 @@ object ScaleDemo100 {
       .map(_.split(",").toSet).getOrElse(Set.empty)
     // round 17: positive filter for targeted row runs (the skip list
     // would need ~60 entries to isolate one new row) — comma-separated
-    // "query@tag" PREFIXES to run; unset = run everything not skipped
+    // entries to run, each a full "query@tag" key or a bare query name
+    // (all of that query's rows); unset = run everything not skipped
     val onlyRows: Option[Set[String]] = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").toSet)
     def skip(key: String): Boolean =
-      skipSet(key) || onlyRows.exists(o => !o.exists(key.startsWith))
+      skipSet(key) || onlyRows.exists(o =>
+        !o.exists(p => key == p || key.startsWith(p + "@")))
 
     // the scaled-knob production rows: every decade, knobs ∝ corpus.
     // mm_phash_neardup_pairs deliberately stops at 10×: its 4×8-bit

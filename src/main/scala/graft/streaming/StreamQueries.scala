@@ -160,15 +160,11 @@ object StreamQueries {
     spark.table(name)
   }
 
-  /** One-file store-write width for the incremental screens (A/B knob,
-    * round 16): `repartition(1)` (default — the round-16 1000× fix:
-    * `coalesce(1)` is NARROW and collapses the upstream batch×store band
-    * join to one task) vs `coalesce(1)` via
-    * SPARK_GRAFT_STORE_ONEFILE=coalesce for the fixture-scale A/B. */
-  private def oneFileStore(df: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_STORE_ONEFILE").contains("coalesce"))
-      df.coalesce(1)
-    else df.repartition(1)
+  /** One-file store-write width for the incremental screens:
+    * `repartition(1)`, the round-16 1000× fix — `coalesce(1)` is NARROW
+    * and collapses the upstream batch×store band join to one task
+    * (BASELINE.md round-16 records the A/B). */
+  private def oneFileStore(df: DataFrame): DataFrame = df.repartition(1)
 
   /** Recursive delete for /dev/shm scratch that is rebuilt per invocation
     * — file-sink queries key their output on the sf dir and wipe it here
@@ -227,17 +223,6 @@ object StreamQueries {
     def close(): Unit = { parts.values.foreach(_.unpersist()); parts.clear() }
   }
   private[streaming] object BatchAcc { val FoldAt = 32 }
-
-  /** Debug hook (round 17): print a screen's PER-BATCH join plan when
-    * `SPARK_GRAFT_EXPLAIN_BATCH` is set. The accumulator change lives
-    * inside foreachBatch, where graft.Plans cannot see it (the drains
-    * are excluded from the dump by design) — the plans/r17 before/after
-    * evidence for the store-side InMemory scan is captured through this.
-    * No-op in every graded run (the driver never sets the variable). */
-  private def explainBatch(tag: String, bid: Long, df: DataFrame): Unit =
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN_BATCH"))
-      println(s"==== $tag batch=$bid ====\n" + df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
 
   val all: Seq[Reg] = Seq(
 
@@ -1856,7 +1841,6 @@ object StreamQueries {
               when(col("ntok") < col("otok"), col("ocnt")).otherwise(col("ncnt")).as("cnt_b"))
             .distinct()
             .filter(levenshtein(col("tok_a"), col("tok_b")) <= 1)
-          explainBatch("editdist-pairs", bid, pairs)
           pairs.transform(oneFileStore).write.mode("overwrite")
             .parquet(s"$pairsOut/batch=$bid")
         }
@@ -1933,7 +1917,6 @@ object StreamQueries {
             .select(greatest(col("nid"), col("oid")).as("doc_id"),
               least(col("nid"), col("oid")).as("dup_cand"))
             .distinct()
-          explainBatch("phash-pairs", bid, pairs)
           pairs.transform(oneFileStore).write.mode("overwrite")
             .parquet(s"$pairsOut/batch=$bid")
         }
@@ -2048,7 +2031,6 @@ object StreamQueries {
             .select(least(col("nid"), col("oid")).as("a_id"),
               greatest(col("nid"), col("oid")).as("b_id"))
             .distinct()
-          explainBatch("wj-pairs", bid, pairs)
           pairs.transform(oneFileStore).write.mode("overwrite")
             .parquet(s"$pairsOut/batch=$bid")
         }
@@ -2178,7 +2160,6 @@ object StreamQueries {
           // but the same batchId keying keeps the sink uniformly
           // idempotent; repartition(1) for the same narrow-collapse
           // reason as the store write above
-          explainBatch("semdedup-pairs", bid, pairs)
           pairs.transform(oneFileStore).write.mode("overwrite")
             .parquet(s"$pairsOut/batch=$bid")
         }

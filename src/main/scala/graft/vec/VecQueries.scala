@@ -1,6 +1,7 @@
 package graft.vec
 
 import graft.{Reg, Tables}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Graded similarity-search queries over `embeddings` (SURVEY.md §1.2).
@@ -11,6 +12,37 @@ object VecQueries {
 
   private val duckDot =
     "list_sum(list_transform(range(1, 65), i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))"
+
+  /** DuckDB hp + sig CTEs mirroring [[VecOps.lshBucket]] (planes = 4):
+    * md5-derived ±1 hyperplanes over the first `dims` dims of `src`, one
+    * 4-bit bucket per vector. `dims` = 16 is the matryoshka prefix form;
+    * `src` = emb2 is the OPQ-rotated corpus. Ends with
+    * `sig(vec_id, embedding, bucket)`. */
+  private def hpSigCtes(dims: Int, src: String = "embeddings"): String = s"""
+        hp AS (SELECT j.j, i.i,
+                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
+                           THEN 1.0 ELSE -1.0 END AS sgn
+                    FROM range(4) j(j), range($dims) i(i)),
+        sig AS (SELECT e.vec_id, e.embedding,
+                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
+                FROM $src e JOIN (
+                  SELECT e2.vec_id, hp.j,
+                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
+                  FROM $src e2 JOIN hp ON true
+                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
+                GROUP BY e.vec_id, e.embedding)"""
+
+  /** The sampled brute-force truth, mirroring [[VecOps.bruteTop5Shared]]
+    * before its top-5 cut: every query in the 25% md5 sample scored
+    * against the full corpus. Ends with `br(qid, nid, d, rank)`; read by
+    * cosine_topk_brute and both ANN lens oracle templates. */
+  private val bruteSampleCtes: String = s"""
+        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
+               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
+               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
+        br AS (SELECT qid, nid, d,
+                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
+               FROM bp)"""
 
   /** DuckDB CTEs mirroring [[VecOps.lshCandidatePairs]] exactly: the same
     * md5-derived hyperplanes, `tables` tables of `planes` planes, candidate
@@ -216,23 +248,31 @@ object VecQueries {
         ORDER BY a.vec_id
       """
 
-  /** The PQ-ANN oracle pipeline (mirrors [[VecOps.pqTopK]] exactly),
-    * parameterized on the source relation so the OPQ variant can prepend
-    * rotation CTEs and run the identical pipeline over `emb2`. */
-  private def pqOracleSql(prefixCtes: String, src: String): String = s"""
-        WITH $prefixCtes
-        hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM $src e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM $src e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
+  /** pm + sg + emb2 CTEs mirroring [[VecOps.opqTop3Shared]]'s rotation:
+    * an md5-derived signed coordinate permutation of every vector. Ends
+    * with `emb2(vec_id, embedding)`. */
+  private val opqRotCtes: String = """
+        pm AS (SELECT list(i ORDER BY ('0x' || substr(md5('perm' || i), 1, 15))::BIGINT, i) AS p
+               FROM range(64) t(i)),
+        sg AS (SELECT list(CASE WHEN (('0x' || substr(md5('sf' || i), 1, 15))::BIGINT & 1) = 1
+                                THEN 1.0 ELSE -1.0 END ORDER BY i) AS s
+               FROM range(64) t(i)),
+        emb2 AS (SELECT e.vec_id,
+                        [CAST(sg.s[j + 1] * e.embedding[pm.p[j + 1] + 1] AS REAL)
+                         FOR j IN range(64)] AS embedding
+                 FROM embeddings e, pm, sg)"""
+
+  /** The 25% md5 query sample as a WHERE clause on the query side `a`. */
+  private val sampleWhere: String =
+    "WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0"
+
+  /** The PQ-ANN pipeline over `src`, mirroring [[VecOps.pqTopK]] exactly:
+    * LSH signature, the 4×8 codebook (slices of the md5-seeded vectors),
+    * per-subspace encode, reconstruction, bucketed asymmetric rerank.
+    * `sample` narrows the query side ("" = all queries). Ends with
+    * `pr(qid, nid, d, rank)`. */
+  private def pqRankCtes(src: String, sample: String): String = s"""
+        ${hpSigCtes(64, src)},
         seeds AS (
           SELECT vec_id AS cid, embedding AS ce
           FROM $src
@@ -259,32 +299,65 @@ object VecQueries {
                        i -> a.embedding[i]::DOUBLE * r.recon[i]::DOUBLE)) AS d
               FROM sig a
               JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              JOIN recon r ON r.nid = b.vec_id),
-        r AS (SELECT qid, nid, d,
-                     row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-              FROM p)
+              JOIN recon r ON r.nid = b.vec_id
+              $sample),
+        pr AS (SELECT qid, nid, d,
+                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
+               FROM p)"""
+
+  /** The PQ top-3 oracle: `prefixCtes` (empty, or the OPQ rotation plus
+    * a trailing comma) then the identical pipeline over `src`. */
+  private def pqOracleSql(prefixCtes: String, src: String): String = s"""
+        WITH $prefixCtes
+        ${pqRankCtes(src, "")}
         SELECT qid, rank, nid, round(d, 4) AS score
-        FROM r WHERE rank <= 3
+        FROM pr WHERE rank <= 3
         ORDER BY qid, rank
       """
 
-  // ---- shared NDCG@3 machinery (round 11 lsh; round 12 ivf/pq/binary) --
-  // The ranking-quality member of the ANN evaluation family, beside
-  // recall@3: rel(nid) = 4 − brute_rank for the true top-3 (else 0),
-  // position discounts 1/log₂(pos+1) micro-quantized offline to the
-  // THREE integer constants (1000000, 630930, 500000) used identically
-  // in DCG and IDCG — the whole query is integer arithmetic, zero float
-  // risk. IDCG is summed PER QUERY from its own brute rows (ADVICE r11:
-  // the former constant 4761860 assumed every query has 3 brute
-  // neighbors; a < 4-vector corpus would under-normalize), so queries
-  // with < 3 neighbors normalize by their own shorter ideal list.
-  // Anchored on the brute sample's query set: queries whose index
-  // returned nothing score 0, not missing.
+  // ---- the ANN evaluation lenses: recall@3 and NDCG@3 -------------------
+  // Every graded index family carries both lenses, graded against ONE
+  // shared truth: the sampled brute top-3 ([[VecOps.bruteTop5Shared]]),
+  // on a deterministic 25% md5 query sample. That is how the ground
+  // truth runs at 100 TB: the quadratic side scales with |sample|·n, the
+  // index side is the production path. recall@3 counts, per query, how
+  // many true top-3 neighbors the index returned (0..3). NDCG@3 also
+  // scores WHERE it put them: rel(nid) = 4 − brute_rank for the true
+  // top-3 (else 0), position discounts 1/log₂(pos+1) micro-quantized
+  // offline to the THREE integer constants (1000000, 630930, 500000)
+  // used identically in DCG and IDCG — the whole query is integer
+  // arithmetic, zero float risk. IDCG is summed PER QUERY from its own
+  // brute rows (ADVICE r11: a constant 4761860 assumed every query has
+  // 3 brute neighbors), so queries with < 3 neighbors normalize by
+  // their own shorter ideal list. Both lenses are anchored on the brute
+  // sample's query set: a query whose index returned nothing scores 0,
+  // not missing. Each oracle replays the index pipeline and the brute
+  // truth independently in DuckDB, no tolerance.
 
-  /** Per-query DCG/NDCG of an (qid, nid, pos ≤ 3) index result against
-    * the shared sampled brute ground truth. */
-  private def annNdcg3(emb: org.apache.spark.sql.DataFrame, dir: String,
-                       idx: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  /** The sample filter on a top-3 relation's query column. */
+  private def sampleKeep: Column =
+    graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
+
+  /** Per-query recall@3 of an index family's top-3 relation against the
+    * shared sampled brute ground truth. */
+  private def annRecall3(emb: DataFrame, dir: String,
+                         top3: (DataFrame, String) => DataFrame): DataFrame = {
+    val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
+      .select(col("qid"), col("nid"))
+    val hits = top3(emb, dir).filter(sampleKeep)
+      .select(col("qid"), col("nid")).withColumn("hit", lit(1))
+    brute.join(hits, Seq("qid", "nid"), "left")
+      .groupBy(col("qid"))
+      .agg(count(col("hit")).as("n_hit"))
+      .orderBy("qid")
+  }
+
+  /** Per-query DCG/NDCG of an index family's top-3 relation, read as
+    * (qid, nid, pos ≤ 3), against the shared sampled brute ground truth. */
+  private def annNdcg3(emb: DataFrame, dir: String,
+                       top3: (DataFrame, String) => DataFrame): DataFrame = {
+    val idx = top3(emb, dir).filter(sampleKeep)
+      .select(col("qid"), col("nid"), col("rank").as("pos"))
     val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
       .select(col("qid"), col("nid"), (lit(4L) - col("rank")).as("rel"),
         expr("CASE rank WHEN 1 THEN 1000000L WHEN 2 THEN 630930L" +
@@ -304,17 +377,23 @@ object VecQueries {
       .orderBy("qid")
   }
 
-  /** Oracle template for [[annNdcg3]]: `indexCtes` must end with
-    * `idx(qid, nid, pos)` — the variant's ranked top-3 over the 25% md5
-    * query sample, stage-for-stage as in its recall twin. */
+  /** Oracle template for [[annRecall3]]: `indexCtes` must end with
+    * `idx(qid, nid, pos)` — the family's ranked top-3 over the 25% md5
+    * query sample. */
+  private def recall3OracleSql(indexCtes: String): String = s"""
+        WITH $indexCtes,
+        $bruteSampleCtes,
+        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
+        SELECT b.qid, count(i.nid) AS n_hit
+        FROM brute b LEFT JOIN idx i ON b.qid = i.qid AND b.nid = i.nid
+        GROUP BY 1 ORDER BY 1
+      """
+
+  /** Oracle template for [[annNdcg3]], over the same `indexCtes` as
+    * [[recall3OracleSql]]. */
   private def ndcg3OracleSql(indexCtes: String): String = s"""
         WITH $indexCtes,
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
+        $bruteSampleCtes,
         bruter AS (SELECT qid, nid, CAST(4 - rank AS BIGINT) AS rel,
                           CAST(CASE rank WHEN 1 THEN 1000000 WHEN 2 THEN 630930
                                ELSE 500000 END AS BIGINT) AS disc
@@ -334,36 +413,32 @@ object VecQueries {
         ORDER BY i.qid
       """
 
-  /** hp + sig CTEs (4 hyperplanes over 64 dims) shared by the lsh /
-    * binary / pq index mirrors. */
-  private val ndcgHpSig: String = s"""
-        hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding)"""
+  // ---- per-family index CTEs, each ending in idx(qid, nid, pos) --------
 
-  private val ndcgLshIdxCtes: String = s"""
-        $ndcgHpSig,
-        lp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        lr AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM lp),
-        idx AS (SELECT qid, nid, rank AS pos FROM lr
+  /** `idx` as the sampled top-3 of a ranked `(qid, nid, …, rank)` CTE
+    * computed over all queries. */
+  private def sampledTop3Idx(ranked: String): String = s"""
+        idx AS (SELECT qid, nid, rank AS pos FROM $ranked
                 WHERE rank <= 3
                   AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0)"""
 
+  /** Single-table LSH search ([[VecOps.annLshTopK]], planes = 4): exact
+    * dots within each bucket, ending in `lr(qid, nid, d, rank)`. */
+  private val lshRankCtes: String = s"""
+        ${hpSigCtes(64)},
+        lp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
+               FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
+        lr AS (SELECT qid, nid, d,
+                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
+               FROM lp)"""
 
-  private val ndcgBinIdxCtes: String = s"""
-        $ndcgHpSig,
+  private val lshIdxCtes: String = s"$lshRankCtes,${sampledTop3Idx("lr")}"
+
+  /** Binary-quantized search ([[VecOps.annBinaryTopK]]): LSH buckets
+    * reranked by sign-bit Hamming similarity; `sample` narrows the query
+    * side ("" = all queries). Ends with `ir(qid, nid, score, rank)`. */
+  private def binRankCtes(sample: String): String = s"""
+        ${hpSigCtes(64)},
         bq AS (SELECT s.vec_id, s.bucket,
                       CAST(sum(CASE WHEN s.embedding[i.i + 1]::DOUBLE > 0.0
                                     THEN (CAST(1 AS BIGINT) << i.i) ELSE 0 END) AS BIGINT) AS bq0,
@@ -374,63 +449,41 @@ object VecQueries {
                      CAST(64 - bit_count(xor(a.bq0, b.bq0))
                              - bit_count(xor(a.bq1, b.bq1)) AS INT) AS score
               FROM bq a JOIN bq b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
+              $sample),
         ir AS (SELECT qid, nid, score,
                       row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
-               FROM p),
+               FROM p)"""
+
+  private val binIdxCtes: String = s"""
+        ${binRankCtes(sampleWhere)},
         idx AS (SELECT qid, nid, rank AS pos FROM ir WHERE rank <= 3)"""
 
-  private val ndcgMpIdxCtes: String = s"""
-        $ndcgHpSig,
+  /** Multi-probe LSH search ([[VecOps.annMultiProbeTopK]]): each query
+    * probes its own bucket and every bucket XOR one bit, exact dots.
+    * Ends with `lr(qid, nid, d, rank)`. */
+  private val mpRankCtes: String = s"""
+        ${hpSigCtes(64)},
         probes AS (SELECT s.vec_id, s.embedding,
                           CASE f.f WHEN 0 THEN s.bucket ELSE xor(s.bucket, (1 << (f.f - 1))) END AS bucket
                    FROM sig s, range(5) f(f)),
         lp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
                FROM probes a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        lr AS (SELECT qid, nid,
+        lr AS (SELECT qid, nid, d,
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM lp),
-        idx AS (SELECT qid, nid, rank AS pos FROM lr
-                WHERE rank <= 3
-                  AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0)"""
+               FROM lp)"""
 
-  private val ndcgPqIdxCtes: String = s"""
-        $ndcgHpSig,
-        seeds AS (
-          SELECT vec_id AS cid, embedding AS ce
-          FROM embeddings
-          ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
-          LIMIT 8),
-        cb AS (SELECT s.s, cid, ce[s.s * 16 + 1 : s.s * 16 + 16] AS cw
-               FROM seeds, range(4) s(s)),
-        xs AS (SELECT vec_id, s.s, embedding[s.s * 16 + 1 : s.s * 16 + 16] AS x
-               FROM embeddings, range(4) s(s)),
-        assign AS (
-          SELECT x.vec_id, x.s, c.cid,
-                 row_number() OVER (PARTITION BY x.vec_id, x.s ORDER BY
-                   (list_sum(list_transform(range(1, 17), i -> x.x[i]::DOUBLE * c.cw[i]::DOUBLE))
-                    - 0.5 * list_sum(list_transform(range(1, 17), i -> c.cw[i]::DOUBLE * c.cw[i]::DOUBLE)))
-                   DESC, c.cid) AS crank
-          FROM xs x JOIN cb c ON x.s = c.s),
-        recon AS (
-          SELECT a.vec_id AS nid, flatten(list(c.cw ORDER BY a.s)) AS recon
-          FROM assign a JOIN cb c ON a.s = c.s AND a.cid = c.cid
-          WHERE a.crank = 1
-          GROUP BY a.vec_id),
-        p AS (SELECT a.vec_id AS qid, r.nid,
-                     list_sum(list_transform(range(1, 65),
-                       i -> a.embedding[i]::DOUBLE * r.recon[i]::DOUBLE)) AS d
-              FROM sig a
-              JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              JOIN recon r ON r.nid = b.vec_id
-              WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        pr AS (SELECT qid, nid, d,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM p),
+  private val mpIdxCtes: String = s"$mpRankCtes,${sampledTop3Idx("lr")}"
+
+  private val pqIdxCtes: String = s"""
+        ${pqRankCtes("embeddings", sampleWhere)},
         idx AS (SELECT qid, nid, rank AS pos FROM pr WHERE rank <= 3)"""
 
-  private val ndcgInt8IdxCtes: String = s"""
-        $ndcgHpSig,
+  /** int8-quantized search ([[VecOps.annInt8TopK]]): LSH buckets
+    * reranked by the integer dot of round(x·127) vectors; `sample`
+    * narrows the query side ("" = all queries). Ends with
+    * `ir(qid, nid, score, rank)`. */
+  private def int8RankCtes(sample: String): String = s"""
+        ${hpSigCtes(64)},
         q8 AS (SELECT vec_id, bucket,
                       list_transform(embedding, x -> CAST(round(x::DOUBLE * 127) AS INT)) AS q
                FROM sig),
@@ -438,86 +491,32 @@ object VecQueries {
                      CAST(list_sum(list_transform(range(1, 65),
                        i -> CAST(a.q[i] AS BIGINT) * b.q[i])) AS BIGINT) AS score
               FROM q8 a JOIN q8 b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
+              $sample),
         ir AS (SELECT qid, nid, score,
                       row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
-               FROM p),
+               FROM p)"""
+
+  private val int8IdxCtes: String = s"""
+        ${int8RankCtes(sampleWhere)},
         idx AS (SELECT qid, nid, rank AS pos FROM ir WHERE rank <= 3)"""
 
-  private val ndcgOpqIdxCtes: String = s"""
-        pm AS (SELECT list(i ORDER BY ('0x' || substr(md5('perm' || i), 1, 15))::BIGINT, i) AS p
-               FROM range(64) t(i)),
-        sg AS (SELECT list(CASE WHEN (('0x' || substr(md5('sf' || i), 1, 15))::BIGINT & 1) = 1
-                                THEN 1.0 ELSE -1.0 END ORDER BY i) AS s
-               FROM range(64) t(i)),
-        emb2 AS (SELECT e.vec_id,
-                        [CAST(sg.s[j + 1] * e.embedding[pm.p[j + 1] + 1] AS REAL)
-                         FOR j IN range(64)] AS embedding
-                 FROM embeddings e, pm, sg),
-        hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM emb2 e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM emb2 e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        seeds AS (
-          SELECT vec_id AS cid, embedding AS ce
-          FROM emb2
-          ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
-          LIMIT 8),
-        cb AS (SELECT s.s, cid, ce[s.s * 16 + 1 : s.s * 16 + 16] AS cw
-               FROM seeds, range(4) s(s)),
-        xs AS (SELECT vec_id, s.s, embedding[s.s * 16 + 1 : s.s * 16 + 16] AS x
-               FROM emb2, range(4) s(s)),
-        assign AS (
-          SELECT x.vec_id, x.s, c.cid,
-                 row_number() OVER (PARTITION BY x.vec_id, x.s ORDER BY
-                   (list_sum(list_transform(range(1, 17), i -> x.x[i]::DOUBLE * c.cw[i]::DOUBLE))
-                    - 0.5 * list_sum(list_transform(range(1, 17), i -> c.cw[i]::DOUBLE * c.cw[i]::DOUBLE)))
-                   DESC, c.cid) AS crank
-          FROM xs x JOIN cb c ON x.s = c.s),
-        recon AS (
-          SELECT a.vec_id AS nid, flatten(list(c.cw ORDER BY a.s)) AS recon
-          FROM assign a JOIN cb c ON a.s = c.s AND a.cid = c.cid
-          WHERE a.crank = 1
-          GROUP BY a.vec_id),
-        p AS (SELECT a.vec_id AS qid, r.nid,
-                     list_sum(list_transform(range(1, 65),
-                       i -> a.embedding[i]::DOUBLE * r.recon[i]::DOUBLE)) AS d
-              FROM sig a
-              JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              JOIN recon r ON r.nid = b.vec_id
-              WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        pr AS (SELECT qid, nid, d,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM p),
+  private val opqIdxCtes: String = s"""
+        $opqRotCtes,
+        ${pqRankCtes("emb2", sampleWhere)},
         idx AS (SELECT qid, nid, rank AS pos FROM pr WHERE rank <= 3)"""
 
-  private val ndcgMatIdxCtes: String = """
-        hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(16) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
+  /** Matryoshka two-stage search ([[VecOps.matryoshkaTopK]]): 16-dim
+    * prefix buckets and an 8-row prefix-dot shortlist, then the full
+    * 64-dim rerank; `sample` narrows the query side ("" = all queries).
+    * Ends with `mr(qid, nid, d, rank)`. */
+  private def matRankCtes(sample: String): String = s"""
+        ${hpSigCtes(16)},
         cand AS (SELECT a.vec_id AS qid, a.embedding AS qe,
                         b.vec_id AS nid, b.embedding AS ne,
                         list_sum(list_transform(range(1, 17),
                           i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE)) AS d16
                  FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-                 WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
+                 $sample),
         short AS (SELECT qid, nid, qe, ne,
                          row_number() OVER (PARTITION BY qid ORDER BY d16 DESC, nid) AS r16
                   FROM cand),
@@ -527,10 +526,17 @@ object VecQueries {
                    FROM short WHERE r16 <= 8),
         mr AS (SELECT qid, nid, d,
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM scored),
+               FROM scored)"""
+
+  private val matIdxCtes: String = s"""
+        ${matRankCtes(sampleWhere)},
         idx AS (SELECT qid, nid, rank AS pos FROM mr WHERE rank <= 3)"""
 
-  private lazy val ndcgHierIdxCtes: String = s"""
+  /** DuckDB CTEs mirroring [[VecOps.ivfHierTopK]] at the graded
+    * fprobes = 2 dial over the shared lloyd2/hierAssign blocks: qf (the
+    * 2 best fine cells per query), sc (candidates in those cells). Ends
+    * with `hr(qid, nid, d, rank)`. */
+  private lazy val hierCoreCtes: String = s"""
         $lloyd2Ctes,
         $hierAssignCtes,
         qf AS (
@@ -546,12 +552,11 @@ object VecQueries {
                  list_sum(list_transform(range(1, 65),
                    i -> q.qe[i]::DOUBLE * a.embedding[i]::DOUBLE)) AS d
           FROM qf q JOIN assigned a ON q.cid = a.cid AND q.qid <> a.vec_id),
-        hr AS (SELECT qid, nid,
+        hr AS (SELECT qid, nid, d,
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM sc),
-        idx AS (SELECT qid, nid, rank AS pos FROM hr
-                WHERE rank <= 3
-                  AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0)"""
+               FROM sc)"""
+
+  private lazy val hierIdxCtes: String = s"$hierCoreCtes,${sampledTop3Idx("hr")}"
 
   /** DuckDB CTEs mirroring [[VecOps.ivfHierRefineTopK]] (fprobes = 2,
     * shortlist = 16, mDims = 32) stage-for-stage over the shared
@@ -640,7 +645,7 @@ object VecQueries {
     * float re-score, ending in `rr(qid, nid, d, rank)`. `sample` narrows
     * the query side for the recall/NDCG lenses ("" = all queries). */
   private def refineCoreCtes(sample: String): String = s"""
-        $ndcgHpSig,
+        ${hpSigCtes(64)},
         q8 AS (SELECT vec_id, bucket,
                       list_transform(embedding, x -> CAST(round(x::DOUBLE * 127) AS INT)) AS q
                FROM sig),
@@ -660,11 +665,8 @@ object VecQueries {
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
                FROM rx)"""
 
-  private val refineSample: String =
-    "WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0"
-
-  private val ndcgRefineIdxCtes: String = s"""
-        ${refineCoreCtes(refineSample)},
+  private val refineIdxCtes: String = s"""
+        ${refineCoreCtes(sampleWhere)},
         idx AS (SELECT qid, nid, rank AS pos FROM rr WHERE rank <= 3)"""
 
   /** Hier search CTEs at the WIDE fine-probe dial (fprobes = 3) — the
@@ -693,11 +695,7 @@ object VecQueries {
                        row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
                 FROM sc3)"""
 
-  private lazy val ndcgHierF3IdxCtes: String = s"""
-        $hierF3CoreCtes,
-        idx AS (SELECT qid, nid, rank AS pos FROM h3r
-                WHERE rank <= 3
-                  AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0)"""
+  private lazy val hierF3IdxCtes: String = s"$hierF3CoreCtes,${sampledTop3Idx("h3r")}"
 
   /** DuckDB CTEs mirroring [[VecOps.ivfPqHierTopK]] over the shared
     * scaled-k Lloyd table, ending in `hr(qid, nid, d, rank)` — sliced by
@@ -753,6 +751,48 @@ object VecQueries {
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
                FROM hsc)"""
 
+  private lazy val ivfpqIdxCtes: String = s"${ivfpqHierCtes(3)},${sampledTop3Idx("hr")}"
+
+  private lazy val ivfpqHierIdxCtes: String = s"${ivfpqHierCtes(2)},${sampledTop3Idx("hr")}"
+
+  private lazy val hierRefineIdxCtes: String = s"$hierRefineCoreCtes,${sampledTop3Idx("rr")}"
+
+  /** One graded ANN index family: `ann_recall_<suffix>` and
+    * `ann_ndcg_<suffix>` both read `top3`, the family's session-shared
+    * top-3 relation, and both oracles replay `idxCtes`, which ends with
+    * `idx(qid, nid, pos)` over the 25% md5 query sample. `why` says
+    * what the lens pair prices for this family. */
+  private final case class AnnFamily(suffix: String,
+      top3: (DataFrame, String) => DataFrame, idxCtes: String, why: String)
+
+  private val annFamilies: Seq[AnnFamily] = Seq(
+    AnnFamily("lsh", VecOps.lshTop3Shared, lshIdxCtes,
+      "one table of hyperplane buckets, exact-dot rerank: the baseline rung"),
+    AnnFamily("ivf", VecOps.hier3Top3Shared, hierF3IdxCtes,
+      "hier search at fprobes = 3: probes a superset of hier's cells, so never recalls less"),
+    AnnFamily("hier", VecOps.hierTop3Shared, hierIdxCtes,
+      "hier search at fprobes = 2: loses a neighbor whose cell's anchor is not probed"),
+    AnnFamily("int8", VecOps.int8Top3Shared, int8IdxCtes,
+      "LSH buckets ranked by the int8 dot: what 4x compression costs"),
+    AnnFamily("binary", VecOps.binaryTop3Shared, binIdxCtes,
+      "LSH buckets ranked by sign-bit Hamming: the 1-bit, tie-heavy rung"),
+    AnnFamily("multiprobe", VecOps.multiprobeTop3Shared, mpIdxCtes,
+      "own bucket plus its Hamming-1 buckets: recall bought by probing, not tables"),
+    AnnFamily("pq", VecOps.pqTop3Shared, pqIdxCtes,
+      "4x8-codeword reconstructions, asymmetric rerank: recall vs compression"),
+    AnnFamily("opq", VecOps.opqTop3Shared, opqIdxCtes,
+      "PQ after a signed coordinate permutation: does decorrelation beat PQ"),
+    AnnFamily("matryoshka", VecOps.matryoshkaTop3Shared, matIdxCtes,
+      "16-dim prefix shortlist of 8, full rerank: truth lost before the rerank"),
+    AnnFamily("ivfpq", VecOps.ivfpqF3Top3Shared, ivfpqIdxCtes,
+      "hier residual PQ at fprobes = 3: the wide-probe residual rung"),
+    AnnFamily("refine", VecOps.refineTop3Shared, refineIdxCtes,
+      "int8's top-10 reranked exactly: same candidates, so never recalls less"),
+    AnnFamily("ivfpq_hier", VecOps.ivfpqHierTop3Shared, ivfpqHierIdxCtes,
+      "hier residual PQ at fprobes = 2: the rung whose lists grow with n"),
+    AnnFamily("hier_refine", VecOps.hierRefineTop3Shared, hierRefineIdxCtes,
+      "hier search, 32-dim prefix shortlist of 16, exact rerank: rescore bound"))
+
   val all: Seq[Reg] = Seq(
 
     // ---- embedding hygiene validation (norms ≈ 1) -----------------------
@@ -789,22 +829,18 @@ object VecQueries {
     // recall family's move) — per-query semantics are unchanged (each
     // sampled query still scores the FULL corpus); |sample|·n is the only
     // quadratic anyone runs at 100 TB. Round-7: the sampled brute pass is
-    // now derived ONCE per session via bruteTop5Shared and reused by the
-    // five ann_recall_* queries — one quadratic job instead of six.
+    // derived ONCE per session via bruteTop5Shared and reused by the 26
+    // ANN lenses (recall@3 and NDCG@3 of 13 families) — one quadratic
+    // job instead of 27.
     Reg("cosine_topk_brute",
       (s, dir) =>
         VecOps.bruteTop5Shared(Tables(s, dir).embeddings, dir)
           .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
           .orderBy("qid", "rank"),
       Some(s"""
-        WITH p AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-                   FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-                   WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        r AS (SELECT qid, nid, d,
-                     row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-              FROM p)
+        WITH $bruteSampleCtes
         SELECT qid, rank, nid, round(d, 4) AS score
-        FROM r WHERE rank <= 5
+        FROM br WHERE rank <= 5
         ORDER BY qid, rank
       """)),
 
@@ -816,25 +852,9 @@ object VecQueries {
         .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
         .orderBy("qid", "rank"),
       Some(s"""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        p AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-              FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        r AS (SELECT qid, nid, d,
-                     row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-              FROM p)
+        WITH $lshRankCtes
         SELECT qid, rank, nid, round(d, 4) AS score
-        FROM r WHERE rank <= 3
+        FROM lr WHERE rank <= 3
         ORDER BY qid, rank
       """)),
 
@@ -880,25 +900,9 @@ object VecQueries {
           .orderBy("qid", "rank")
       },
       Some(s"""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        p AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-              FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        r AS (SELECT qid, nid, d,
-                     row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-              FROM p)
+        WITH $lshRankCtes
         SELECT qid, rank, nid, round(d, 4) AS score
-        FROM r WHERE rank <= 3
+        FROM lr WHERE rank <= 3
         ORDER BY qid, rank
       """)),
 
@@ -933,28 +937,9 @@ object VecQueries {
         .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
         .orderBy("qid", "rank"),
       Some(s"""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        probes AS (SELECT s.vec_id, s.embedding,
-                          CASE f.f WHEN 0 THEN s.bucket ELSE xor(s.bucket, (1 << (f.f - 1))) END AS bucket
-                   FROM sig s, range(5) f(f)),
-        p AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-              FROM probes a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        r AS (SELECT qid, nid, d,
-                     row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-              FROM p)
+        WITH $mpRankCtes
         SELECT qid, rank, nid, round(d, 4) AS score
-        FROM r WHERE rank <= 3
+        FROM lr WHERE rank <= 3
         ORDER BY qid, rank
       """)),
 
@@ -993,30 +978,9 @@ object VecQueries {
         .select(col("qid"), col("rank"), col("nid"), col("score"))
         .orderBy("qid", "rank"),
       Some(s"""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        q8 AS (SELECT vec_id, bucket,
-                      list_transform(embedding, x -> CAST(round(x::DOUBLE * 127) AS INT)) AS q
-               FROM sig),
-        p AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-                     CAST(list_sum(list_transform(range(1, 65),
-                       i -> CAST(a.q[i] AS BIGINT) * b.q[i])) AS BIGINT) AS score
-              FROM q8 a JOIN q8 b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        r AS (SELECT qid, nid, score,
-                     row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
-              FROM p)
+        WITH ${int8RankCtes("")}
         SELECT qid, rank, nid, score
-        FROM r WHERE rank <= 3
+        FROM ir WHERE rank <= 3
         ORDER BY qid, rank
       """)),
 
@@ -1029,34 +993,10 @@ object VecQueries {
       (s, dir) => VecOps.binaryTop3Shared(Tables(s, dir).embeddings, dir)
         .select(col("qid"), col("rank"), col("nid"), col("score"))
         .orderBy("qid", "rank"),
-      Some("""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        bq AS (SELECT s.vec_id, s.bucket,
-                      CAST(sum(CASE WHEN s.embedding[i.i + 1]::DOUBLE > 0.0
-                                    THEN (CAST(1 AS BIGINT) << i.i) ELSE 0 END) AS BIGINT) AS bq0,
-                      CAST(sum(CASE WHEN s.embedding[i.i + 33]::DOUBLE > 0.0
-                                    THEN (CAST(1 AS BIGINT) << i.i) ELSE 0 END) AS BIGINT) AS bq1
-               FROM sig s, range(32) i(i) GROUP BY 1, 2),
-        p AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-                     CAST(64 - bit_count(xor(a.bq0, b.bq0))
-                             - bit_count(xor(a.bq1, b.bq1)) AS INT) AS score
-              FROM bq a JOIN bq b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        r AS (SELECT qid, nid, score,
-                     row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
-              FROM p)
+      Some(s"""
+        WITH ${binRankCtes("")}
         SELECT qid, rank, nid, score
-        FROM r WHERE rank <= 3
+        FROM ir WHERE rank <= 3
         ORDER BY qid, rank
       """)),
 
@@ -1072,7 +1012,7 @@ object VecQueries {
       (s, dir) => VecOps.pqTop3Shared(Tables(s, dir).embeddings, dir)
         .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
         .orderBy("qid", "rank"),
-      Some(pqOracleSql(prefixCtes = "", src = "embeddings"))),
+      Some(pqOracleSql("", "embeddings"))),
 
     // ---- OPQ-lite PQ ANN: rotate, then product-quantize -----------------
     // The Optimized-PQ idea at the determinism-preserving end: a SIGNED
@@ -1090,16 +1030,7 @@ object VecQueries {
       (s, dir) => VecOps.opqTop3Shared(Tables(s, dir).embeddings, dir)
         .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
         .orderBy("qid", "rank"),
-      Some(pqOracleSql(prefixCtes = s"""
-        pm AS (SELECT list(i ORDER BY ('0x' || substr(md5('perm' || i), 1, 15))::BIGINT, i) AS p
-               FROM range(64) t(i)),
-        sg AS (SELECT list(CASE WHEN (('0x' || substr(md5('sf' || i), 1, 15))::BIGINT & 1) = 1
-                                THEN 1.0 ELSE -1.0 END ORDER BY i) AS s
-               FROM range(64) t(i)),
-        emb2 AS (SELECT e.vec_id,
-                        [CAST(sg.s[j + 1] * e.embedding[pm.p[j + 1] + 1] AS REAL)
-                         FOR j IN range(64)] AS embedding
-                 FROM embeddings e, pm, sg),""", src = "emb2"))),
+      Some(pqOracleSql(s"$opqRotCtes,", "emb2"))),
 
     // ---- IVF ANN over the 2-iteration Lloyd build -----------------------
     // The distributed k-means build graded end to end: the shared
@@ -1251,80 +1182,10 @@ object VecQueries {
         .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
         .orderBy("qid", "rank"),
       Some(s"""
-        WITH $lloyd2Ctes,
-        $hierAssignCtes,
-        qf AS (
-          SELECT vec_id AS qid, embedding AS qe, cid FROM (
-            SELECT v.vec_id, v.embedding, f.cid,
-                   row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                     list_sum(list_transform(range(1, 65),
-                       i -> v.embedding[i]::DOUBLE * f.ce[i]::DOUBLE)) DESC, f.cid) AS fr
-            FROM vp v JOIN f2g f ON v.gid = f.gid)
-          WHERE fr <= 2),
-        sc AS (
-          SELECT q.qid, a.vec_id AS nid,
-                 list_sum(list_transform(range(1, 65),
-                   i -> q.qe[i]::DOUBLE * a.embedding[i]::DOUBLE)) AS d
-          FROM qf q JOIN assigned a ON q.cid = a.cid AND q.qid <> a.vec_id),
-        r AS (SELECT qid, nid, d,
-                     row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-              FROM sc)
+        WITH $hierCoreCtes
         SELECT qid, rank, nid, round(d, 4) AS score
-        FROM r WHERE rank <= 3
+        FROM hr WHERE rank <= 3
         ORDER BY qid, rank
-      """)),
-
-    // ---- ANN accuracy contract: recall@3 of the two-level IVF (round-12)
-    // A new retriever without an accuracy receipt is an unpriced trade:
-    // this prices ivf_hier_topk's coarse-routing loss (a true neighbor is
-    // missed iff its fine cell's ANCHOR falls outside the query's probed
-    // pair) against the same shared brute truth as the other seven
-    // families. Same 25% md5 sample; both pipelines replayed in full.
-    Reg("ann_recall_hier",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val h = VecOps.hierTop3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(h, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH $lloyd2Ctes,
-        $hierAssignCtes,
-        qf AS (
-          SELECT vec_id AS qid, embedding AS qe, cid FROM (
-            SELECT v.vec_id, v.embedding, f.cid,
-                   row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                     list_sum(list_transform(range(1, 65),
-                       i -> v.embedding[i]::DOUBLE * f.ce[i]::DOUBLE)) DESC, f.cid) AS fr
-            FROM vp v JOIN f2g f ON v.gid = f.gid)
-          WHERE fr <= 2),
-        sc AS (
-          SELECT q.qid, a.vec_id AS nid,
-                 list_sum(list_transform(range(1, 65),
-                   i -> q.qe[i]::DOUBLE * a.embedding[i]::DOUBLE)) AS d
-          FROM qf q JOIN assigned a ON q.cid = a.cid AND q.qid <> a.vec_id),
-        hr AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM sc),
-        hier AS (SELECT qid, nid FROM hr
-                 WHERE rank <= 3
-                   AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(h.nid) AS n_hit
-        FROM brute b LEFT JOIN hier h ON b.qid = h.qid AND b.nid = h.nid
-        GROUP BY 1 ORDER BY 1
       """)),
 
     // ---- embedding-cosine near-duplicate pairs (LSH-bucketed) -----------
@@ -1447,226 +1308,6 @@ object VecQueries {
         FROM scored GROUP BY 1 ORDER BY 1
       """)),
 
-    // ---- ANN accuracy contract: recall@3 of LSH vs brute ground truth ---
-    // The sketch-accuracy gate every ANN deployment needs: per query, how
-    // many of the true top-3 neighbors the single-table LSH search
-    // returned (0..3). Measured on a DETERMINISTIC 25% query sample (the
-    // sample_hash_10pct md5 bucket, mirrored in the oracle) — exactly how
-    // the brute ground-truth anchor runs at 100 TB: the quadratic side
-    // scales with |sample|·n, the index side is untouched. The filter
-    // sits BELOW the brute top-k window (qid is the partition key, so it
-    // pushes to the cross-join's query side). Hash-match is exact: the
-    // oracle replays both pipelines and intersects, no tolerance.
-    Reg("ann_recall_lsh",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val lsh = VecOps.lshTop3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(lsh, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        lp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        lr AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM lp),
-        lsh AS (SELECT qid, nid FROM lr
-                WHERE rank <= 3
-                  AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(l.nid) AS n_hit
-        FROM brute b LEFT JOIN lsh l ON b.qid = l.qid AND b.nid = l.nid
-        GROUP BY 1 ORDER BY 1
-      """)),
-
-    // ---- ANN ranking-quality contract: NDCG@3 of LSH vs brute (round-11)
-    // recall@3 counts hits; NDCG@3 also scores WHERE the index put them —
-    // the ranking-quality member of the evaluation family (a near-miss
-    // that returns the true #1 at position 3 recalls 1/3 but NDCGs
-    // lower than one returning it at position 1). All shared machinery
-    // (integer discounts, per-query IDCG, sample anchoring) lives in
-    // [[annNdcg3]] / [[ndcg3OracleSql]] above — one NDCG contract per
-    // index family: lsh here (round 11), ivf / binary / pq below
-    // (round 12, completing the eval family).
-    Reg("ann_ndcg_lsh",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir, VecOps.lshTop3Shared(emb, dir)
-          .filter(keep)
-          .select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(ndcgLshIdxCtes))),
-
-    // ---- NDCG@3 of the wide-fine-probe hier search (re-platformed r16) --
-    // Same index pipeline as ann_recall_ivf (scaled-k hier routing,
-    // fprobes = 3), scored for ranking quality instead of hit count.
-    Reg("ann_ndcg_ivf",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir, VecOps.hier3Top3Shared(emb, dir)
-          .filter(keep)
-          .select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(ndcgHierF3IdxCtes))),
-
-    // ---- NDCG@3 of the 1-bit Hamming index (round-12) -------------------
-    // ann_recall_binary's pipeline (sign-bit fingerprints, bucketed
-    // Hamming rerank) under the ranking-quality lens: 1-bit scores tie
-    // pervasively, so position quality — which the nid tiebreak decides —
-    // is exactly what recall@3 cannot see.
-    Reg("ann_ndcg_binary",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir, VecOps.binaryTop3Shared(emb, dir)
-          .filter(keep)
-          .select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(ndcgBinIdxCtes))),
-
-    // ---- NDCG@3 of multi-probe LSH (round-12) ---------------------------
-    // The probing axis under the ranking lens: multi-probe recovers
-    // recall by visiting Hamming-1 buckets, but probe candidates enter
-    // the SAME exact-dot rerank — so its NDCG should track its recall
-    // closely, unlike the quantized rungs whose ordering degrades first.
-    Reg("ann_ndcg_multiprobe",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir, VecOps.multiprobeTop3Shared(emb, dir)
-          .filter(keep)
-          .select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(ndcgMpIdxCtes))),
-
-    // ---- NDCG@3 of the PQ asymmetric-distance index (round-12) ----------
-    // ann_recall_pq's pipeline (4×8 codebook reconstructions, bucketed
-    // ADC rerank) scored for ranking quality — reconstruction error
-    // perturbs ORDER long before it evicts a true neighbor from the
-    // top-3, so PQ's NDCG degrades ahead of its recall.
-    Reg("ann_ndcg_pq",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir, VecOps.pqTop3Shared(emb, dir)
-          .filter(keep)
-          .select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(ndcgPqIdxCtes))),
-
-    // ---- NDCG@3 of the remaining index rungs (round-12) -----------------
-    // Completes the eval MATRIX: all nine graded index families now carry
-    // BOTH lenses (recall@3 and NDCG@3) against the one shared brute
-    // truth — int8 (integer-dot rerank), opq (rotated-space PQ),
-    // matryoshka (two-stage prefix retriever), and the two-level hier
-    // search join lsh/multiprobe/ivf/binary/pq. Each is the template
-    // applied to the pipeline its recall twin already mirrors.
-    Reg("ann_ndcg_int8",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir, VecOps.int8Top3Shared(emb, dir)
-          .filter(keep)
-          .select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(ndcgInt8IdxCtes))),
-
-    Reg("ann_ndcg_opq",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir,
-          VecOps.opqTop3Shared(emb, dir)
-            .filter(keep)
-            .select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(ndcgOpqIdxCtes))),
-
-    Reg("ann_ndcg_matryoshka",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir, VecOps.matryoshkaTop3Shared(emb, dir)
-          .filter(keep)
-          .select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(ndcgMatIdxCtes))),
-
-    Reg("ann_ndcg_hier",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir,
-          VecOps.hierTop3Shared(emb, dir)
-          .filter(keep)
-          .select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(ndcgHierIdxCtes))),
-
-    // ---- ANN accuracy contract: recall@3 of the wide-fine-probe rung ----
-    // Re-platformed round 16 with its topk sibling: per query, how many
-    // of the true top-3 the fprobes = 3 hierarchical search returned.
-    // Same deterministic 25% query sample as ann_recall_lsh (the 100 TB
-    // shape: the quadratic ground-truth side runs on a sample, the index
-    // side is the production path). Must dominate ann_recall_hier
-    // per-query (probed cells are a superset — the dial's measurable
-    // value). Both pipelines replayed stage-for-stage in the oracle.
-    Reg("ann_recall_ivf",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val ivf = VecOps.hier3Top3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(ivf, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH $hierF3CoreCtes,
-        ivf AS (SELECT qid, nid FROM h3r
-                WHERE rank <= 3
-                  AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(i.nid) AS n_hit
-        FROM brute b LEFT JOIN ivf i ON b.qid = i.qid AND b.nid = i.nid
-        GROUP BY 1 ORDER BY 1
-      """)),
-
     // ---- label-centroid separation matrix --------------------------------
     // Cluster-geometry diagnostic: per-label mean vector, every component
     // snapped to the 1e-4 integer grid (the lloydStep snap — the float
@@ -1699,339 +1340,6 @@ object VecQueries {
         FROM comp a JOIN comp b ON a.i = b.i AND a.label < b.label
         GROUP BY 1, 2
         ORDER BY 1, 2
-      """)),
-
-    // ---- ANN accuracy contract: recall@3 of int8 vs FLOAT ground truth --
-    // Completes the recall family (lsh / ivf / int8): how much the
-    // combination of LSH bucketing AND int8 quantization costs against
-    // the float brute-force truth — the number a vector store quotes
-    // when it turns on compression. Same deterministic 25% query sample;
-    // both pipelines replayed in the oracle, exact hash-match.
-    Reg("ann_recall_int8",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val i8 = VecOps.int8Top3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(i8, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        q8 AS (SELECT vec_id, bucket,
-                      list_transform(embedding, x -> CAST(round(x::DOUBLE * 127) AS INT)) AS q
-               FROM sig),
-        p AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-                     CAST(list_sum(list_transform(range(1, 65),
-                       i -> CAST(a.q[i] AS BIGINT) * b.q[i])) AS BIGINT) AS score
-              FROM q8 a JOIN q8 b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        ir AS (SELECT qid, nid, score,
-                      row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
-               FROM p),
-        i8 AS (SELECT qid, nid FROM ir WHERE rank <= 3),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(i.nid) AS n_hit
-        FROM brute b LEFT JOIN i8 i ON b.qid = i.qid AND b.nid = i.nid
-        GROUP BY 1 ORDER BY 1
-      """)),
-
-    // ---- ANN accuracy contract: recall@3 of 1-BIT fingerprints ----------
-    // The bottom of the compression-recall ladder (lsh / ivf / int8 / pq
-    // / binary): what Hamming ranking over sign bits costs against the
-    // float brute truth — the recall number that decides whether 256×
-    // compression is shippable. Same deterministic 25% query sample.
-    Reg("ann_recall_binary",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val bin = VecOps.binaryTop3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(bin, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        bq AS (SELECT s.vec_id, s.bucket,
-                      CAST(sum(CASE WHEN s.embedding[i.i + 1]::DOUBLE > 0.0
-                                    THEN (CAST(1 AS BIGINT) << i.i) ELSE 0 END) AS BIGINT) AS bq0,
-                      CAST(sum(CASE WHEN s.embedding[i.i + 33]::DOUBLE > 0.0
-                                    THEN (CAST(1 AS BIGINT) << i.i) ELSE 0 END) AS BIGINT) AS bq1
-               FROM sig s, range(32) i(i) GROUP BY 1, 2),
-        p AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
-                     CAST(64 - bit_count(xor(a.bq0, b.bq0))
-                             - bit_count(xor(a.bq1, b.bq1)) AS INT) AS score
-              FROM bq a JOIN bq b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        ir AS (SELECT qid, nid, score,
-                      row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
-               FROM p),
-        bin AS (SELECT qid, nid FROM ir WHERE rank <= 3),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(i.nid) AS n_hit
-        FROM brute b LEFT JOIN bin i ON b.qid = i.qid AND b.nid = i.nid
-        GROUP BY 1 ORDER BY 1
-      """)),
-
-    // ---- ANN accuracy contract: recall@3 of multi-probe LSH (round-12) --
-    // Completes the recall ladder over the probing axis: single-bucket
-    // LSH recovers recall by adding TABLES (6× signature cost), the
-    // multi-probe form by visiting the planes+1 Hamming-1 buckets of ONE
-    // table — this contract prices that trade against the same brute
-    // truth as its siblings. Same 25% md5 sample, shared brute relation.
-    Reg("ann_recall_multiprobe",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val mp = VecOps.multiprobeTop3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(mp, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        probes AS (SELECT s.vec_id, s.embedding,
-                          CASE f.f WHEN 0 THEN s.bucket ELSE xor(s.bucket, (1 << (f.f - 1))) END AS bucket
-                   FROM sig s, range(5) f(f)),
-        mp0 AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-                FROM probes a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-                WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        mr AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM mp0),
-        mp AS (SELECT qid, nid FROM mr WHERE rank <= 3),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(m.nid) AS n_hit
-        FROM brute b LEFT JOIN mp m ON b.qid = m.qid AND b.nid = m.nid
-        GROUP BY 1 ORDER BY 1
-      """)),
-
-    // ---- ANN accuracy contract: recall@3 of PQ vs FLOAT ground truth ----
-    // Closes the recall family (lsh / ivf / int8 / pq): what asymmetric-
-    // distance ranking over 4×8-codeword reconstructions costs against
-    // the float brute truth — recall-vs-compression is THE PQ tradeoff
-    // number. Same deterministic 25% query sample; the full PQ pipeline
-    // (codebook, encode, recon, bucket join, rank) replayed in the
-    // oracle, exact hash-match.
-    Reg("ann_recall_pq",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val pq = VecOps.pqTop3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(pq, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        seeds AS (
-          SELECT vec_id AS cid, embedding AS ce
-          FROM embeddings
-          ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
-          LIMIT 8),
-        cb AS (SELECT s.s, cid, ce[s.s * 16 + 1 : s.s * 16 + 16] AS cw
-               FROM seeds, range(4) s(s)),
-        xs AS (SELECT vec_id, s.s, embedding[s.s * 16 + 1 : s.s * 16 + 16] AS x
-               FROM embeddings, range(4) s(s)),
-        assign AS (
-          SELECT x.vec_id, x.s, c.cid,
-                 row_number() OVER (PARTITION BY x.vec_id, x.s ORDER BY
-                   (list_sum(list_transform(range(1, 17), i -> x.x[i]::DOUBLE * c.cw[i]::DOUBLE))
-                    - 0.5 * list_sum(list_transform(range(1, 17), i -> c.cw[i]::DOUBLE * c.cw[i]::DOUBLE)))
-                   DESC, c.cid) AS crank
-          FROM xs x JOIN cb c ON x.s = c.s),
-        recon AS (
-          SELECT a.vec_id AS nid, flatten(list(c.cw ORDER BY a.s)) AS recon
-          FROM assign a JOIN cb c ON a.s = c.s AND a.cid = c.cid
-          WHERE a.crank = 1
-          GROUP BY a.vec_id),
-        p AS (SELECT a.vec_id AS qid, r.nid,
-                     list_sum(list_transform(range(1, 65),
-                       i -> a.embedding[i]::DOUBLE * r.recon[i]::DOUBLE)) AS d
-              FROM sig a
-              JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              JOIN recon r ON r.nid = b.vec_id
-              WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        pr AS (SELECT qid, nid, d,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM p),
-        pq AS (SELECT qid, nid FROM pr WHERE rank <= 3),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(p.nid) AS n_hit
-        FROM brute b LEFT JOIN pq p ON b.qid = p.qid AND b.nid = p.nid
-        GROUP BY 1 ORDER BY 1
-      """)),
-
-    // ---- ANN accuracy contract: recall@3 of OPQ vs FLOAT truth (round-12)
-    // The rotated rung's recall twin, closing the ladder symmetry (every
-    // graded index family now carries a recall contract: lsh / multiprobe
-    // / ivf / int8 / binary / pq / opq / matryoshka): does the signed-
-    // permutation decorrelation actually buy recall over plain PQ on
-    // this corpus? Ground truth stays the ORIGINAL-space brute relation —
-    // the rotation is orthonormal, so true neighbors are identical; the
-    // index pipeline runs wholly in rotated space, replayed via the same
-    // pm/sg/emb2 CTEs as ann_opq_topk.
-    Reg("ann_recall_opq",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val opq = VecOps.opqTop3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(opq, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH pm AS (SELECT list(i ORDER BY ('0x' || substr(md5('perm' || i), 1, 15))::BIGINT, i) AS p
-               FROM range(64) t(i)),
-        sg AS (SELECT list(CASE WHEN (('0x' || substr(md5('sf' || i), 1, 15))::BIGINT & 1) = 1
-                                THEN 1.0 ELSE -1.0 END ORDER BY i) AS s
-               FROM range(64) t(i)),
-        emb2 AS (SELECT e.vec_id,
-                        [CAST(sg.s[j + 1] * e.embedding[pm.p[j + 1] + 1] AS REAL)
-                         FOR j IN range(64)] AS embedding
-                 FROM embeddings e, pm, sg),
-        hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM emb2 e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM emb2 e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        seeds AS (
-          SELECT vec_id AS cid, embedding AS ce
-          FROM emb2
-          ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
-          LIMIT 8),
-        cb AS (SELECT s.s, cid, ce[s.s * 16 + 1 : s.s * 16 + 16] AS cw
-               FROM seeds, range(4) s(s)),
-        xs AS (SELECT vec_id, s.s, embedding[s.s * 16 + 1 : s.s * 16 + 16] AS x
-               FROM emb2, range(4) s(s)),
-        assign AS (
-          SELECT x.vec_id, x.s, c.cid,
-                 row_number() OVER (PARTITION BY x.vec_id, x.s ORDER BY
-                   (list_sum(list_transform(range(1, 17), i -> x.x[i]::DOUBLE * c.cw[i]::DOUBLE))
-                    - 0.5 * list_sum(list_transform(range(1, 17), i -> c.cw[i]::DOUBLE * c.cw[i]::DOUBLE)))
-                   DESC, c.cid) AS crank
-          FROM xs x JOIN cb c ON x.s = c.s),
-        recon AS (
-          SELECT a.vec_id AS nid, flatten(list(c.cw ORDER BY a.s)) AS recon
-          FROM assign a JOIN cb c ON a.s = c.s AND a.cid = c.cid
-          WHERE a.crank = 1
-          GROUP BY a.vec_id),
-        p AS (SELECT a.vec_id AS qid, r.nid,
-                     list_sum(list_transform(range(1, 65),
-                       i -> a.embedding[i]::DOUBLE * r.recon[i]::DOUBLE)) AS d
-              FROM sig a
-              JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              JOIN recon r ON r.nid = b.vec_id
-              WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        pr AS (SELECT qid, nid, d,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM p),
-        opq AS (SELECT qid, nid FROM pr WHERE rank <= 3),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(o.nid) AS n_hit
-        FROM brute b LEFT JOIN opq o ON b.qid = o.qid AND b.nid = o.nid
-        GROUP BY 1 ORDER BY 1
       """)),
 
     // ---- PQ reconstruction error per subspace -----------------------------
@@ -2117,36 +1425,10 @@ object VecQueries {
       (s, dir) => VecOps.matryoshkaTop3Shared(Tables(s, dir).embeddings, dir)
         .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
         .orderBy("qid", "rank"),
-      Some("""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(16) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        cand AS (SELECT a.vec_id AS qid, a.embedding AS qe,
-                        b.vec_id AS nid, b.embedding AS ne,
-                        list_sum(list_transform(range(1, 17),
-                          i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE)) AS d16
-                 FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        short AS (SELECT qid, nid, qe, ne,
-                         row_number() OVER (PARTITION BY qid ORDER BY d16 DESC, nid) AS r16
-                  FROM cand),
-        scored AS (SELECT qid, nid,
-                          list_sum(list_transform(range(1, 65),
-                            i -> qe[i]::DOUBLE * ne[i]::DOUBLE)) AS d
-                   FROM short WHERE r16 <= 8),
-        r AS (SELECT qid, nid, d,
-                     row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-              FROM scored)
+      Some(s"""
+        WITH ${matRankCtes("")}
         SELECT qid, rank, nid, round(d, 4) AS score
-        FROM r WHERE rank <= 3
+        FROM mr WHERE rank <= 3
         ORDER BY qid, rank
       """)),
 
@@ -2191,45 +1473,12 @@ object VecQueries {
           .orderBy("qid", "rank")
       },
       Some(s"""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        lp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        lr AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM lp),
+        WITH $lshRankCtes,
         lsh AS (SELECT qid, nid, 1000000 // (60 + rank) AS c_lsh
                 FROM lr WHERE rank <= 5),
-        $lloyd2Ctes,
-        $hierAssignCtes,
-        qf AS (
-          SELECT vec_id AS qid, embedding AS qe, cid FROM (
-            SELECT v.vec_id, v.embedding, f.cid,
-                   row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                     list_sum(list_transform(range(1, 65),
-                       i -> v.embedding[i]::DOUBLE * f.ce[i]::DOUBLE)) DESC, f.cid) AS fr
-            FROM vp v JOIN f2g f ON v.gid = f.gid)
-          WHERE fr <= 2),
-        iscored AS (
-          SELECT q.qid, a.vec_id AS nid,
-                 list_sum(list_transform(range(1, 65),
-                   i -> q.qe[i]::DOUBLE * a.embedding[i]::DOUBLE)) AS d
-          FROM qf q JOIN assigned a ON q.cid = a.cid AND q.qid <> a.vec_id),
-        ir AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM iscored),
+        $hierCoreCtes,
         ivf AS (SELECT qid, nid, 1000000 // (60 + rank) AS c_ivf
-                FROM ir WHERE rank <= 5),
+                FROM hr WHERE rank <= 5),
         fused AS (SELECT coalesce(l.qid, i.qid) AS qid,
                          coalesce(l.nid, i.nid) AS nid,
                          coalesce(l.c_lsh, 0) + coalesce(i.c_ivf, 0) AS rrf_x1e6,
@@ -2409,19 +1658,8 @@ object VecQueries {
             col("p3_rel").as("rel"), col("p3_obj").as("obj")))
           .orderBy("qid", "step")
       },
-      Some("""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(64) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
+      Some(s"""
+        WITH ${hpSigCtes(64)},
         q8 AS (SELECT vec_id, bucket,
                       list_transform(embedding, x -> CAST(round(x::DOUBLE * 127) AS INT)) AS q
                FROM sig),
@@ -2462,67 +1700,6 @@ object VecQueries {
         UNION ALL
         SELECT qid, 3, p3_nid, CAST(p3_rel AS BIGINT), CAST(p3_obj AS BIGINT) FROM p3
         ORDER BY qid, step
-      """)),
-
-    // ---- ANN accuracy contract: recall@3 of Matryoshka vs brute ---------
-    // Closes the recall family over the two-STAGE retriever (the others
-    // grade single-stage indexes): how much truth the truncated-16-dim
-    // shortlist loses before the full-dim re-rank can recover it. Same
-    // contract as ann_recall_lsh — 25% md5 query sample, session-shared
-    // brute ground truth, hit counting by (qid, nid) equi-join.
-    Reg("ann_recall_matryoshka",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val mat = VecOps.matryoshkaTop3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(mat, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH hp AS (SELECT j.j, i.i,
-                      CASE WHEN (('0x' || substr(md5('hp' || j.j || '_' || i.i), 1, 15))::BIGINT & 1) = 1
-                           THEN 1.0 ELSE -1.0 END AS sgn
-                    FROM range(4) j(j), range(16) i(i)),
-        sig AS (SELECT e.vec_id, e.embedding,
-                       CAST(sum(CASE WHEN sub.d > 0.0 THEN (1 << sub.j) ELSE 0 END) AS BIGINT) AS bucket
-                FROM embeddings e JOIN (
-                  SELECT e2.vec_id, hp.j,
-                         sum(e2.embedding[hp.i + 1]::DOUBLE * hp.sgn) AS d
-                  FROM embeddings e2 JOIN hp ON true
-                  GROUP BY e2.vec_id, hp.j) sub ON e.vec_id = sub.vec_id
-                GROUP BY e.vec_id, e.embedding),
-        cand AS (SELECT a.vec_id AS qid, a.embedding AS qe,
-                        b.vec_id AS nid, b.embedding AS ne,
-                        list_sum(list_transform(range(1, 17),
-                          i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE)) AS d16
-                 FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-                 WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        short AS (SELECT qid, nid, qe, ne,
-                         row_number() OVER (PARTITION BY qid ORDER BY d16 DESC, nid) AS r16
-                  FROM cand),
-        scored AS (SELECT qid, nid,
-                          list_sum(list_transform(range(1, 65),
-                            i -> qe[i]::DOUBLE * ne[i]::DOUBLE)) AS d
-                   FROM short WHERE r16 <= 8),
-        mr AS (SELECT qid, nid, d,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM scored),
-        mat AS (SELECT qid, nid FROM mr WHERE rank <= 3),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(m.nid) AS n_hit
-        FROM brute b LEFT JOIN mat m ON b.qid = m.qid AND b.nid = m.nid
-        GROUP BY 1 ORDER BY 1
       """)),
 
     // ---- embedding drift between corpus halves (round-9) ----------------
@@ -2691,53 +1868,6 @@ object VecQueries {
         ORDER BY qid, rank
       """)),
 
-    // recall@3 lens for the wide-probe residual rung — the same contract
-    // as the other families: hits against the shared brute truth.
-    Reg("ann_recall_ivfpq",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val ipq = VecOps.ivfpqF3Top3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(ipq, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH ${ivfpqHierCtes(3)},
-        ipq AS (SELECT qid, nid FROM hr
-                WHERE rank <= 3
-                  AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(i.nid) AS n_hit
-        FROM brute b LEFT JOIN ipq i ON b.qid = i.qid AND b.nid = i.nid
-        GROUP BY 1 ORDER BY 1
-      """)),
-
-    // NDCG@3 lens for the wide-probe residual rung — the ranking-quality
-    // twin, keeping the eval matrix at two lenses per family.
-    Reg("ann_ndcg_ivfpq",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir, VecOps.ivfpqF3Top3Shared(emb, dir)
-          .filter(keep).select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(s"""
-        ${ivfpqHierCtes(3)},
-        idx AS (SELECT qid, nid, rank AS pos FROM hr
-                WHERE rank <= 3
-                  AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0)"""))),
-
     // ---- hard-negative mining (contrastive training-data prep) ----------
     // The embedding-side curation op a contrastive trainer consumes: for
     // each anchor, the top-3 most-similar vectors with a DIFFERENT label
@@ -2843,47 +1973,6 @@ object VecQueries {
         ORDER BY qid, rank
       """)),
 
-    // recall@3 — must dominate ann_recall_int8 (same candidates, exact
-    // ranking), which is the measurable value of the refine stage.
-    Reg("ann_recall_refine",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val ref = VecOps.refineTop3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(ref, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH ${refineCoreCtes(refineSample)},
-        ref AS (SELECT qid, nid FROM rr WHERE rank <= 3),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(i.nid) AS n_hit
-        FROM brute b LEFT JOIN ref i ON b.qid = i.qid AND b.nid = i.nid
-        GROUP BY 1 ORDER BY 1
-      """)),
-
-    // NDCG@3 — the 11×2 eval-matrix closer for the refine rung.
-    Reg("ann_ndcg_refine",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir,
-          VecOps.refineTop3Shared(emb, dir)
-            .filter(keep).select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(ndcgRefineIdxCtes))),
-
     // ---- hierarchical IVF-PQ (the lists ∝ n residual rung) --------------
     // The escalation BASELINE.md's refusal-arithmetic row names, shipped:
     // the fixed-lists ivfpq family's coarse quantizer replaced by the
@@ -2910,51 +1999,6 @@ object VecQueries {
         ORDER BY qid, rank
       """)),
 
-    // recall@3 + NDCG@3 lenses for the hierarchical residual rung — the
-    // 12×2 eval-matrix closers (every graded index family carries both).
-    Reg("ann_recall_ivfpq_hier",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val h = VecOps.ivfpqHierTop3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(h, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH ${ivfpqHierCtes(2)},
-        hq AS (SELECT qid, nid FROM hr
-               WHERE rank <= 3
-                 AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(i.nid) AS n_hit
-        FROM brute b LEFT JOIN hq i ON b.qid = i.qid AND b.nid = i.nid
-        GROUP BY 1 ORDER BY 1
-      """)),
-
-    Reg("ann_ndcg_ivfpq_hier",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir, VecOps.ivfpqHierTop3Shared(emb, dir)
-          .filter(keep).select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(s"""
-        ${ivfpqHierCtes(2)},
-        idx AS (SELECT qid, nid, rank AS pos FROM hr
-                WHERE rank <= 3
-                  AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0)"""))),
-
     // ---- hier IVF + prefix-prescored refine (the THIRTEENTH family) -----
     // Round 14: the hier family's rescore bound as a graded rung (the
     // VERDICT r13 watch item — ivf_hier's 1000× row is dominated by
@@ -2979,49 +2023,14 @@ object VecQueries {
         SELECT qid, rank, nid, round(d, 4) AS score
         FROM rr WHERE rank <= 3
         ORDER BY qid, rank
-      """)),
-
-    Reg("ann_recall_hier_refine",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
-          .select(col("qid"), col("nid"))
-        val h = VecOps.hierRefineTop3Shared(emb, dir).filter(keep)
-          .select(col("qid"), col("nid")).withColumn("hit", lit(1))
-        brute.join(h, Seq("qid", "nid"), "left")
-          .groupBy(col("qid"))
-          .agg(count(col("hit")).as("n_hit"))
-          .orderBy("qid")
-      },
-      Some(s"""
-        WITH $hierRefineCoreCtes,
-        ref AS (SELECT qid, nid FROM rr
-                WHERE rank <= 3
-                  AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        bp AS (SELECT a.vec_id AS qid, b.vec_id AS nid, $duckDot AS d
-               FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-               WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0),
-        br AS (SELECT qid, nid,
-                      row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
-               FROM bp),
-        brute AS (SELECT qid, nid FROM br WHERE rank <= 3)
-        SELECT b.qid, count(i.nid) AS n_hit
-        FROM brute b LEFT JOIN ref i ON b.qid = i.qid AND b.nid = i.nid
-        GROUP BY 1 ORDER BY 1
-      """)),
-
-    Reg("ann_ndcg_hier_refine",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        val keep = graft.text.TextOps.hash60(col("qid").cast("string")) % 4 === 0
-        annNdcg3(emb, dir, VecOps.hierRefineTop3Shared(emb, dir)
-          .filter(keep).select(col("qid"), col("nid"), col("rank").as("pos")))
-      },
-      Some(ndcg3OracleSql(s"""
-        $hierRefineCoreCtes,
-        idx AS (SELECT qid, nid, rank AS pos FROM rr
-                WHERE rank <= 3
-                  AND ('0x' || substr(md5(CAST(qid AS VARCHAR)), 1, 15))::BIGINT % 4 = 0)""")))
-  )
+      """))
+  ) ++ annFamilies.flatMap { f =>
+    Seq(
+      Reg(s"ann_recall_${f.suffix}",
+        (s, dir) => annRecall3(Tables(s, dir).embeddings, dir, f.top3),
+        Some(recall3OracleSql(f.idxCtes))),
+      Reg(s"ann_ndcg_${f.suffix}",
+        (s, dir) => annNdcg3(Tables(s, dir).embeddings, dir, f.top3),
+        Some(ndcg3OracleSql(f.idxCtes))))
+  }
 }

@@ -32,4 +32,25 @@ class StreamingDecontamSpec extends SparkSpec {
     assert(streamed == batch,
       "online (interleaved batches) and batch decontamination diverge")
   }
+
+  test("the decontam-evalg Shared entry holds the src0 grams, not the corpus's") {
+    val dir = sf("sf0.001")
+    val docs = Tables(spark, dir).documents
+    val src = java.nio.file.Files
+      .createTempDirectory("graft_decon_size").toString
+    docs.write.mode("overwrite").parquet(src)
+    StreamQueries.decontamIncrementalRun(spark, dir, src, "spec_size").count()
+
+    val evalG = graft.Shared.relation(spark, dir, "decontam-evalg")(
+      fail("the screen did not register its eval index"))
+    def grams(d: org.apache.spark.sql.DataFrame): Long =
+      d.select(col("doc_id"),
+        explode(graft.text.TextOps.shingles(col("text"), 5)).as("g")).count()
+    val src0Grams = grams(docs.filter(col("source") === "src0"))
+    val src0Docs = docs.filter(col("source") === "src0").count()
+    assert(evalG.count() == src0Grams,
+      "eval index must hold one row per (src0 doc, gram)")
+    assert(src0Grams < grams(docs), "src0 must be a strict slice of the corpus")
+    assert(src0Grams > src0Docs, "the entry is per gram, not per document")
+  }
 }
