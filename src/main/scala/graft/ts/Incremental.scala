@@ -1,9 +1,15 @@
 package graft.ts
 
-import java.time.temporal.ChronoUnit
+import java.io.FileNotFoundException
+import java.time.{LocalDate, ZoneOffset}
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, TruncTimestamp}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
 /** The reference warehouse's update lifecycle (SURVEY.md §3.1 #2),
   * Spark-native: the candle store is a parquet dataset
@@ -14,23 +20,82 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: at 100 TB of candle history the per-tick cost is
   * O(new data + one day of candles), not O(history) — the property the
-  * incremental operator exists for. The high-water-mark read is a
-  * metadata-cheap max() over the store; the incremental aggregation's
-  * `ts >= dayStart` filter is sargable and pushes to the parquet scan.
-  * Candle `unit` must be finer than or equal to a day (hour/minute/…) so
-  * a bucket never spans two day-partitions.
+  * incremental operator exists for. The high-water day is the newest
+  * `pdate=YYYY-MM-DD` directory under the store that holds a data file,
+  * found by listing the store root (and that one day directory) through
+  * the Hadoop FileSystem API: no Spark job, no history file read. It equals
+  * `to_date(max(bucket))` because `pdate = to_date(bucket)` under the
+  * session time zone, which is pinned to UTC (build.sbt), so the day's
+  * UTC midnight is `max(bucket)` truncated to the day. The incremental
+  * aggregation's `ts >= dayStart` filter is sargable and pushes to the
+  * parquet scan.
+  *
+  * Only when no day directory qualifies does `update` read the store:
+  * a missing store rebuilds, a readable store with zero rows (null
+  * `max(bucket)`) rebuilds, and an unreadable one throws. Any
+  * `date_trunc` unit works — a week or month bucket maps to its start
+  * day, which the tail re-aggregation from that day's midnight covers —
+  * but an unknown one is refused up front: `date_trunc` would make every
+  * bucket NULL and land all candles in `__HIVE_DEFAULT_PARTITION__`.
   */
 object Incremental {
+
+  private val DayDir = """pdate=(\d{4}-\d{2}-\d{2})""".r
+
+  /** Refuses, before any Spark job, a unit `date_trunc` does not know (it
+    * would return NULL for every bucket rather than fail). */
+  private def checkUnit(unit: String): Unit =
+    require(TruncTimestamp(Literal(unit), Literal(0L, TimestampType), Some("UTC")).eval() != null,
+      s"unknown candle unit '$unit'")
 
   private def withPdate(candles: DataFrame): DataFrame =
     candles.withColumn("pdate", to_date(col("bucket")))
 
   /** Full rebuild: candles for all events → overwrite the whole store. */
-  def rebuild(events: DataFrame, storePath: String, unit: String = "hour"): Unit =
+  def rebuild(events: DataFrame, storePath: String, unit: String = "hour"): Unit = {
+    checkUnit(unit)
     withPdate(TimeSeries.candles(events, unit))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("pdate")
       .parquet(storePath)
+  }
+
+  /** The newest `pdate=YYYY-MM-DD` directory directly under the store, if
+    * it holds a data file (a name not starting with `_` or `.`). Staging
+    * dirs, `_SUCCESS` and `__HIVE_DEFAULT_PARTITION__` never match. */
+  private[ts] def listedDay(spark: SparkSession, storePath: String): Option[LocalDate] = {
+    val root = new Path(storePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val days =
+      try fs.listStatus(root).toSeq.flatMap { st =>
+        st.getPath.getName match {
+          case DayDir(d) if st.isDirectory => Try(LocalDate.parse(d)).toOption.map(_ -> st.getPath)
+          case _ => None
+        }
+      } catch { case _: FileNotFoundException => Seq.empty }
+    days.maxByOption(_._1).collect {
+      case (day, dir) if fs.listStatus(dir).exists(f =>
+        f.isFile && !f.getPath.getName.matches("[_.].*")) => day
+    }
+  }
+
+  /** The high-water day from reading the store: `to_date(max(bucket))`,
+    * None for a missing store or one with zero rows. */
+  private def scannedDay(spark: SparkSession, storePath: String): Option[LocalDate] = {
+    val existing =
+      try Some(spark.read.parquet(storePath))
+      catch {
+        // ONLY a missing store means "first build"; a corrupt or
+        // unreadable store must surface as an error, not silently
+        // trigger a full rebuild
+        case e: AnalysisException
+            if e.getMessage.contains("PATH_NOT_FOUND") ||
+              e.getMessage.contains("Path does not exist") => None
+      }
+    existing.flatMap(store =>
+      Option(store.agg(max(col("bucket"))).head().getTimestamp(0)))
+      .map(_.toInstant.atZone(ZoneOffset.UTC).toLocalDate)
+  }
 
   /** MERGE-style upsert classification (the batch warehouse surface the
     * file-overwrite path doesn't expose): given a `base` candle snapshot
@@ -77,28 +142,15 @@ object Incremental {
     * those tail partitions. */
   def update(spark: SparkSession, events: DataFrame, storePath: String,
              unit: String = "hour"): Unit = {
-    val existing =
-      try Some(spark.read.parquet(storePath))
-      catch {
-        // ONLY a missing store means "first build"; a corrupt or
-        // unreadable store must surface as an error, not silently
-        // trigger a full rebuild
-        case e: AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.contains("Path does not exist") => None
-      }
-    val mark = existing.flatMap(store =>
-      Option(store.agg(max(col("bucket"))).head().getTimestamp(0)))
-    (existing, mark) match {
-      // no store, or a store that reads empty (null high-water mark —
-      // both filters below would drop every row): full rebuild
-      case (None, _) | (_, None) => rebuild(events, storePath, unit)
-      case (_, Some(m)) =>
-        // session TZ is pinned UTC (build.sbt), so UTC instant truncation
-        // equals date_trunc('day') — and the literal comparison below
-        // stays sargable (pushed to parquet row-group stats)
-        val dayStart = java.sql.Timestamp.from(
-          m.toInstant.truncatedTo(ChronoUnit.DAYS))
+    checkUnit(unit)
+    listedDay(spark, storePath).orElse(scannedDay(spark, storePath)) match {
+      // no store, or a store that reads empty (both filters below would
+      // drop every row): full rebuild
+      case None => rebuild(events, storePath, unit)
+      case Some(day) =>
+        // a literal UTC midnight keeps the comparison sargable (pushed to
+        // parquet row-group stats)
+        val dayStart = java.sql.Timestamp.from(day.atStartOfDay(ZoneOffset.UTC).toInstant)
         val fresh = withPdate(TimeSeries.candles(
           events.filter(col("ts") >= lit(dayStart)), unit))
         fresh.write.mode(SaveMode.Overwrite)

@@ -7,8 +7,11 @@ Reads each <outDir>/<name>/ parquet (written by graft.Verify), runs the
 matching oracle SQL from <outDir>/oracle_sql.json in DuckDB against the
 base tables in <sfDir>, sorts columns by name (the driver's protocol),
 and compares cell-by-cell. Exact match required — any diff is printed.
+A FAIL line is followed by the query's own exception when
+<outDir>/verify_errors.json (written by graft.Verify) records one.
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -29,6 +32,14 @@ def main(out_dir: str, sf_dir: str) -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    errors_path = f"{out_dir}/verify_errors.json"
+    errors = json.load(open(errors_path)) if os.path.exists(errors_path) else {}
+
+    def note(name):
+        if name in errors:
+            e = errors[name]
+            print(f"    verify error: {e['class']}: " + " ".join(e["message"].split())[:500])
+
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
         try:
@@ -37,15 +48,18 @@ def main(out_dir: str, sf_dir: str) -> int:
             duck_df = norm(con.execute(sql).df())
         except Exception as e:
             print(f"FAIL {name}: load/exec error: {e}")
+            note(name)
             n_bad += 1
             continue
         if list(spark_df.columns) != list(duck_df.columns):
             print(f"FAIL {name}: columns spark={list(spark_df.columns)} "
                   f"duck={list(duck_df.columns)}")
+            note(name)
             n_bad += 1
             continue
         if len(spark_df) != len(duck_df):
             print(f"FAIL {name}: rows spark={len(spark_df)} duck={len(duck_df)}")
+            note(name)
             n_bad += 1
             continue
         # KIND check first: the driver's hash protocol is value-FORMAT
@@ -68,6 +82,7 @@ def main(out_dir: str, sf_dir: str) -> int:
                   f"is format-sensitive): "
                   + ", ".join(f"{c}: spark={spark_df[c].dtype} "
                               f"duck={duck_df[c].dtype}" for c in kind_bad))
+            note(name)
             n_bad += 1
             continue
         # exact compare; dtypes may differ (int32 vs int64) — compare values
@@ -85,6 +100,7 @@ def main(out_dir: str, sf_dir: str) -> int:
                 diff_cols.append(c)
         if diff_cols:
             print(f"FAIL {name}: value diffs in {diff_cols}")
+            note(name)
             for c in diff_cols[:3]:
                 mask = ~(spark_df[c].astype(object).where(pd.notnull(spark_df[c]), None)
                          == duck_df[c].astype(object).where(pd.notnull(duck_df[c]), None))
