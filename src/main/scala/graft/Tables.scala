@@ -1,6 +1,10 @@
 package graft
 
+import java.time.LocalDateTime
+
+import graft.functions.ParamLiteral
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 
 /** Lazy handles to the warehouse's base tables (one parquet dataset each).
   *
@@ -49,36 +53,36 @@ final case class Tables(spark: SparkSession, dir: String) {
   }
 
   /** The tsdb core read path: time-range scan over events with the range
-    * predicate applied to the RAW nanos column, BEFORE the µs conversion —
-    * a filter on the converted column is opaque to parquet pushdown
+    * predicate applied to the RAW column, BEFORE the µs conversion — a
+    * filter on the converted nanos column is opaque to parquet pushdown
     * (PushedFilters shows only IsNotNull), while this formulation reaches
     * the row-group stats. `from`/`until` are "yyyy-MM-dd[ HH:mm:ss]" UTC,
-    * half-open. */
+    * half-open.
+    *
+    * The bounds are [[graft.functions.ParamLiteral]]s: parameters of the
+    * generated code rather than constants inlined into it, so reads over
+    * different ranges reuse one compiled, JIT-warm stage instead of
+    * compiling new source per request. They are still `Literal`s to the
+    * optimizer, so the range stays in the scan's PushedFilters. */
   def eventsRange(from: String, until: String): DataFrame = {
-    def norm(s: String): String = if (s.length == 10) s + " 00:00:00" else s
-    def nanos(s: String): Long =
-      java.time.LocalDateTime
-        .parse(norm(s).replace(' ', 'T'))
-        .toInstant(java.time.ZoneOffset.UTC)
-        .toEpochMilli * 1000000L
+    def micros(s: String): Long = DateTimeUtils.localDateTimeToMicros(
+      LocalDateTime.parse((if (s.length == 10) s + " 00:00:00" else s).replace(' ', 'T')))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     import org.apache.spark.sql.functions.{col, expr}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
     val raw = t("events")
+    def range(scale: Long, dt: DataType): DataFrame =
+      raw.filter(col("ts") >= ParamLiteral(micros(from) * scale, dt) &&
+        col("ts") < ParamLiteral(micros(until) * scale, dt))
     raw.schema("ts").dataType match {
       case LongType =>
-        raw.filter(col("ts") >= nanos(from) && col("ts") < nanos(until))
-          .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        range(1000L, LongType).withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType =>
-        // literals typed NTZ so the comparison stays on the RAW column
+        // bounds typed NTZ so the comparison stays on the RAW column
         // (pushdown-eligible); the cast to TIMESTAMP happens above it
-        raw.filter(col("ts") >= expr(s"TIMESTAMP_NTZ '${norm(from)}'") &&
-            col("ts") < expr(s"TIMESTAMP_NTZ '${norm(until)}'"))
-          .withColumn("ts", col("ts").cast(TimestampType))
-      case _ =>
-        raw.filter(col("ts") >= expr(s"TIMESTAMP '${norm(from)}'") &&
-          col("ts") < expr(s"TIMESTAMP '${norm(until)}'"))
+        range(1L, TimestampNTZType).withColumn("ts", col("ts").cast(TimestampType))
+      case _ => range(1L, TimestampType)
     }
   }
 

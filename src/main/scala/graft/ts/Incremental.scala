@@ -7,9 +7,7 @@ import scala.util.Try
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Literal, TruncTimestamp}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
 
 /** The reference warehouse's update lifecycle (SURVEY.md §3.1 #2),
   * Spark-native: the candle store is a parquet dataset
@@ -42,23 +40,15 @@ object Incremental {
 
   private val DayDir = """pdate=(\d{4}-\d{2}-\d{2})""".r
 
-  /** Refuses, before any Spark job, a unit `date_trunc` does not know (it
-    * would return NULL for every bucket rather than fail). */
-  private def checkUnit(unit: String): Unit =
-    require(TruncTimestamp(Literal(unit), Literal(0L, TimestampType), Some("UTC")).eval() != null,
-      s"unknown candle unit '$unit'")
-
   private def withPdate(candles: DataFrame): DataFrame =
     candles.withColumn("pdate", to_date(col("bucket")))
 
   /** Full rebuild: candles for all events → overwrite the whole store. */
-  def rebuild(events: DataFrame, storePath: String, unit: String = "hour"): Unit = {
-    checkUnit(unit)
+  def rebuild(events: DataFrame, storePath: String, unit: String = "hour"): Unit =
     withPdate(TimeSeries.candles(events, unit))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("pdate")
       .parquet(storePath)
-  }
 
   /** The newest `pdate=YYYY-MM-DD` directory directly under the store, if
     * it holds a data file (a name not starting with `_` or `.`). Staging
@@ -142,7 +132,7 @@ object Incremental {
     * those tail partitions. */
   def update(spark: SparkSession, events: DataFrame, storePath: String,
              unit: String = "hour"): Unit = {
-    checkUnit(unit)
+    TimeSeries.checkUnit(unit)
     listedDay(spark, storePath).orElse(scannedDay(spark, storePath)) match {
       // no store, or a store that reads empty (both filters below would
       // drop every row): full rebuild

@@ -1,8 +1,11 @@
 package graft.ts
 
+import graft.functions.ParamLiteral
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Literal, TruncTimestamp}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Time-series operators over an event stream — the Spark-first
   * re-expression of the reference warehouse's trades→candles pipeline
@@ -22,13 +25,27 @@ import org.apache.spark.sql.functions._
   */
 object TimeSeries {
 
+  /** Refuses, before any Spark job, a unit `date_trunc` does not know (it
+    * would return NULL for every bucket rather than fail, putting each
+    * series' rows into one NULL bucket). */
+  private[ts] def checkUnit(unit: String): Unit =
+    require(TruncTimestamp(Literal(unit), Literal(0L, TimestampType), Some("UTC")).eval() != null,
+      s"unknown candle unit '$unit'")
+
+  /** Refuses a bucket width or spine step <= 0 before any Spark job: 0
+    * divides by zero inside the job (ANSI mode), and a negative width
+    * gives buckets that start after their events (`pmod` by a negative). */
+  private def checkWidth(seconds: Long): Unit =
+    require(seconds > 0, s"bucket width must be positive, got $seconds s")
+
   /** OHLCV candles per (bucket, series) at a calendar `unit` ("hour",
     * "day", ...). open/close use min_by/max_by on ts — order-safe, unlike
     * first()/last() which depend on partition order. volume is the raw
     * (unrounded) sum so that hierarchical resampling stays exact; round at
     * the presentation edge. */
   def candles(events: DataFrame, unit: String, seriesCol: String = "event_type",
-              tsCol: String = "ts", valCol: String = "value"): DataFrame =
+              tsCol: String = "ts", valCol: String = "value"): DataFrame = {
+    checkUnit(unit)
     events
       .groupBy(date_trunc(unit, col(tsCol)).as("bucket"), col(seriesCol).as("series"))
       .agg(
@@ -38,14 +55,20 @@ object TimeSeries {
         max_by(col(valCol), col(tsCol)).as("close"),
         sum(col(valCol)).as("volume"),
         count(lit(1)).as("trades"))
+  }
 
   /** Fixed-width bucket start for widths date_trunc can't express (15 min,
-    * 4 h, ...). Integer µs arithmetic — exact, no double rounding. */
+    * 4 h, ...). Integer µs arithmetic — exact, no double rounding.
+    *
+    * The width is a [[graft.functions.ParamLiteral]], a parameter of the
+    * generated code rather than an inlined constant, so every width of one
+    * read kind runs the same compiled stage. */
   def bucketStart(ts: org.apache.spark.sql.Column, seconds: Long): org.apache.spark.sql.Column = {
-    val us = seconds * 1000000L
+    checkWidth(seconds)
+    val us = ParamLiteral(seconds * 1000000L, LongType)
     // integer arithmetic only: ns-epoch µs values are near double's
     // 53-bit mantissa edge, so no float division here
-    timestamp_micros(unix_micros(ts) - pmod(unix_micros(ts), lit(us)))
+    timestamp_micros(unix_micros(ts) - pmod(unix_micros(ts), us))
   }
 
   /** OHLCV candles at a fixed-width bucket of `seconds` (15 min etc.). */
@@ -81,13 +104,15 @@ object TimeSeries {
   /** Per-series calendar spine: one row per (series, bucket) from that
     * series' min to max bucket. The sequence() explode happens on the
     * 1-row-per-series aggregate, never on raw data. */
-  def spine(candles: DataFrame, intervalSeconds: Long): DataFrame =
+  def spine(candles: DataFrame, intervalSeconds: Long): DataFrame = {
+    checkWidth(intervalSeconds)
     candles
       .groupBy(col("series"))
       .agg(min(col("bucket")).as("lo"), max(col("bucket")).as("hi"))
       .select(col("series"),
         explode(sequence(col("lo"), col("hi"),
           expr(s"INTERVAL $intervalSeconds SECONDS"))).as("bucket"))
+  }
 
   /** Buckets with no data: spine ANTI JOIN present buckets — the
     * reference's missing-candle validation (SURVEY.md §2.4). */
@@ -141,13 +166,15 @@ object TimeSeries {
 
   /** Volume-weighted average price per (bucket, series): sum(p·v)/sum(v). */
   def vwap(events: DataFrame, unit: String, priceCol: String, volCol: String,
-           seriesCol: String = "event_type", tsCol: String = "ts"): DataFrame =
+           seriesCol: String = "event_type", tsCol: String = "ts"): DataFrame = {
+    checkUnit(unit)
     events
       .groupBy(date_trunc(unit, col(tsCol)).as("bucket"), col(seriesCol).as("series"))
       // NULL vwap for an all-zero-volume bucket (ANSI mode would throw)
       .agg((sum(col(priceCol) * col(volCol)) /
         when(sum(col(volCol)) =!= 0.0, sum(col(volCol)))).as("vwap"),
         sum(col(volCol)).as("total_vol"))
+  }
 
   /** Z-score outliers per series — the reference's sanity validation.
     * Group stats via one aggregate then a broadcast-friendly join (the agg

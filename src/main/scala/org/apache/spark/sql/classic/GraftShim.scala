@@ -1,13 +1,17 @@
 package org.apache.spark.sql.classic
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge to the `private[sql]` Dataset.ofRows — the standard technique
   * public Spark extension libraries use to materialize a custom
   * LogicalPlan as a DataFrame (a one-line shim placed inside the sql
-  * package namespace). Used by graft.plans.AsofJoinNative. */
+  * package namespace). Used by graft.plans.AsofJoinNative; `column` wraps
+  * a custom Expression (graft.functions.ParamLiteral) as a Column. */
 object GraftShim {
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: LogicalPlan): org.apache.spark.sql.DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
+
+  def column(e: Expression): org.apache.spark.sql.Column = ExpressionUtils.column(e)
 }
