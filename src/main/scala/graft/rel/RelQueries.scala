@@ -61,44 +61,23 @@ object RelQueries {
         FROM l7 GROUP BY 1 ORDER BY 1"""
   }
 
-  /** Session memo for the bounded graph artifacts below (round 16,
-    * guide §2.4 — remove shuffles outright): the five tradeGraph
-    * consumers (pagerank ×2, label_prop, bfs, recursive_cte) and the four
-    * co-purchase consumers (lcc, assortativity, adamic_adar, cosine) each
-    * re-derived the SAME localCheckpointed relation per query — one
-    * lineitem⋈orders distinct (resp. one basket self-join + pair agg) per
-    * consumer per bench rep. Key discipline matches [[graft.Shared]] /
-    * Tables.readCache (appId + session identity + dir); the relations are
-    * bounded artifacts (distinct qty≥45 trade edges; support-≥2 pairs),
-    * never corpus-sized. */
-  private val graphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  private def graphMemo[T <: AnyRef](
-      s: org.apache.spark.sql.SparkSession, dir: String, tag: String)(
-      build: => T): T = {
-    // check-then-put, not computeIfAbsent — the Shared.relation
-    // reentrancy discipline (a nested memo call inside a build would
-    // throw "Recursive update" on a same-bin collision)
-    val key = s.sparkContext.applicationId + "#" +
-      System.identityHashCode(s) + "|" + dir + "|" + tag
-    val got = graphCache.get(key)
-    if (got != null) got.asInstanceOf[T]
-    else {
-      val v = build
-      val prev = graphCache.putIfAbsent(key, v)
-      (if (prev != null) prev else v).asInstanceOf[T]
-    }
-  }
+  // The graph artifacts below are session memos ([[graft.Shared.memo]],
+  // round 16, guide §2.4 — remove shuffles outright): the five tradeGraph
+  // consumers (pagerank ×2, label_prop, bfs, recursive_cte) and the four
+  // co-purchase consumers (lcc, assortativity, adamic_adar, cosine) each
+  // re-derived the SAME localCheckpointed relation per query — one
+  // lineitem⋈orders distinct (resp. one basket self-join + pair agg) per
+  // consumer per bench rep. The relations are bounded artifacts
+  // (distinct qty≥45 trade edges; support-≥2 pairs), never corpus-sized.
 
   /** Undirected high-volume trade graph (cust↔supp edges from
     * lineitem⋈orders with l_quantity ≥ 45) + out-degrees, both
     * localCheckpointed (loop-invariant across the PageRank-family
-    * iterations) and session-memoized via [[graphMemo]] — five
+    * iterations) and session-memoized via [[graft.Shared.memo]] — five
     * consumers share one build per (session, dir). */
   private def tradeGraph(s: org.apache.spark.sql.SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    graphMemo(s, dir, "tradeGraph") {
+    graft.Shared.memo(s, dir, "tradeGraph") {
       val t = Tables(s, dir)
       val li = t.lineitem.filter(col("l_quantity") >= 45)
       val ord = t.orders
@@ -123,7 +102,7 @@ object RelQueries {
   private def purchaseGraph(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
-    graphMemo(s, dir, "purchaseGraph") {
+    graft.Shared.memo(s, dir, "purchaseGraph") {
       val t = Tables(s, dir)
       t.lineitem
         .join(t.orders, col("l_orderkey") === col("o_orderkey"))
@@ -142,7 +121,7 @@ object RelQueries {
   private def copurchasePairsAll(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
-    graphMemo(s, dir, "copurchasePairsAll") {
+    graft.Shared.memo(s, dir, "copurchasePairsAll") {
       val li = Tables(s, dir).lineitem
         .select(col("l_orderkey"), col("l_partkey")).distinct()
       li.as("a").join(li.as("b"), "l_orderkey")
@@ -3435,7 +3414,7 @@ object RelQueries {
         // pair set), so their two checkpoint materializations ride the same
         // session memo instead of being rebuilt per rep — only the peel
         // rounds themselves re-execute per invocation.
-        val (sym, dBase) = graphMemo(s, dir, "kcoreBase") {
+        val (sym, dBase) = graft.Shared.memo(s, dir, "kcoreBase") {
           val und = copurchasePairsAll(s, dir)
             .select(col("u").as("pa"), col("v").as("pb"))
           val symE = und.select(col("pa").as("src"), col("pb").as("dst"))

@@ -3,7 +3,9 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.Reg
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ts.TimeSeries.ohlcv
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -84,41 +86,75 @@ object StreamQueries {
     }
   }
 
-  /** Run a streaming query to a memory sink and return the final table.
-    * State-store instance count = shuffle partitions at query start; per-
-    * partition commit overhead dominates a small finite drain, so the
-    * stream runs with 2 partitions by default (round-8 A/B at sf0.1:
-    * −3 s over the family vs the round-4b setting of 4), with two
-    * deliberate exceptions re-A/B'd the same session: the stream-stream
-    * interval joins run at 1 (two-sided state doubles per-partition
-    * commit cost) and the session-window/dedup-watermark family stays at
-    * 4 (heavier per-key state; 2 was ~0.1 s slower each). The session
-    * setting is restored after. (On a live cluster this knob is sized to
-    * key cardinality.)
+  /** Root of every checkpoint the queries here write (RAM-backed tmpfs). */
+  private val CkptRoot = "/dev/shm/graft-ckpt"
+
+  /** Runs one streaming query from start to stop: the one lifecycle every
+    * query in this file goes through. It wipes `ckpt` and `scratch`
+    * (per-invocation outputs keyed on the sf dir, so repeated bench reps
+    * never accumulate copies), starts `sink(df.writeStream)` with `ckpt`
+    * as its checkpoint and `trigger` as its trigger, and drains it: under
+    * AvailableNow until the query ends on its own, under any other
+    * trigger until all available input is processed.
+    * Then it stops the query and deletes the checkpoint, whatever
+    * happened: every invocation starts fresh and nothing here resumes
+    * from a checkpoint (the memory sink cannot), so one left behind is
+    * only tmpfs held for the life of the host.
+    *
+    * Width: state-store instance count = shuffle partitions at query
+    * start, and per-partition commit overhead dominates a small finite
+    * drain, so `partitions` is set for the query's life and restored
+    * after. Memory-sink drains default to 2 (round-8 A/B at sf0.1: −3 s
+    * over the family vs the round-4b setting of 4), with two deliberate
+    * exceptions re-A/B'd the same session: the stream-stream interval
+    * joins run at 1 (two-sided state doubles per-partition commit cost)
+    * and the session-window/dedup-watermark family stays at 4 (heavier
+    * per-key state; 2 was ~0.1 s slower each). The sinks and incremental
+    * screens run at [[drainParts]]. (On a live cluster this knob is sized
+    * to key cardinality.) `rocksDb` runs the query on the RocksDB state
+    * store, which transformWithState requires.
     *
     * SEQUENTIAL CONTRACT: the temporary session-conf mutation means two
     * graded queries must not drain concurrently on one SparkSession —
     * Verify and Bench both run queries strictly sequentially. A service
     * embedding these ops concurrently should isolate each drain on
     * `spark.newSession()` (cheap: shares the SparkContext, forks conf). */
-  private def drain(df: DataFrame, mode: String, partitions: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    try {
-      // fresh checkpoint per start: the memory sink cannot recover one
-      val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation",
-          s"/dev/shm/graft-ckpt/${name}_${java.util.UUID.randomUUID().toString.take(8)}")
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name)
+  private def runStream(df: DataFrame, partitions: Int, ckpt: String,
+      scratch: Seq[String] = Nil, trigger: Trigger = Trigger.ProcessingTime(0L),
+      rocksDb: Boolean = false)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    (ckpt +: scratch).foreach(p => rmrf(new java.io.File(p)))
+    val confs = Seq("spark.sql.shuffle.partitions" -> partitions.toString) ++
+      (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil)
+    graft.Shared.withConf(df.sparkSession, confs: _*) {
+      try {
+        val q = sink(df.writeStream).option("checkpointLocation", ckpt).trigger(trigger).start()
+        try {
+          if (trigger == Trigger.AvailableNow())
+            require(q.awaitTermination(120000), "AvailableNow drain did not terminate")
+          else q.processAllAvailable()
+        } finally q.stop()
+      } finally rmrf(new java.io.File(ckpt))
+    }
   }
 
-  /** Micro-batch parallelism of the seven INCREMENTAL SCREENS (the
+  /** Drains `df` into a memory sink under a fresh query name and returns
+    * the sink's table. The default trigger is the micro-batch trigger;
+    * Trigger.AvailableNow is the scheduled-incremental-job trigger, which
+    * paces itself through the input and ends on its own. */
+  private def drain(df: DataFrame, mode: String, partitions: Int = 2,
+      trigger: Trigger = Trigger.ProcessingTime(0L), rocksDb: Boolean = false): DataFrame = {
+    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
+    runStream(df, partitions,
+      s"$CkptRoot/${name}_${java.util.UUID.randomUUID().toString.take(8)}",
+      trigger = trigger, rocksDb = rocksDb)(
+      _.format("memory").queryName(name).outputMode(mode))
+    df.sparkSession.table(name)
+  }
+
+  /** Micro-batch parallelism of the sinks and the INCREMENTAL SCREENS (the
     * foreachBatch store/band/read-out pipelines): 4 shuffle partitions
     * by default — at fixture scale each micro-batch shuffles a few
     * thousand rows and 32-way task overhead dominates — overridable via
@@ -129,49 +165,63 @@ object StreamQueries {
     * BASELINE.md round-16). On a real cluster this is sized to batch
     * volume like any shuffle width; the graded Verify/Bench surface
     * keeps 4 so fixture-scale plans are unchanged. */
-  private def drainParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_DRAIN_PARTS", "4")
+  private def drainParts: Int =
+    sys.env.getOrElse("SPARK_GRAFT_DRAIN_PARTS", "4").toInt
 
-  private def drainComplete(df: DataFrame, partitions: Int = 2): DataFrame =
-    drain(df, "complete", partitions)
+  /** The documents fixture's columns, as the doc stream files carry them. */
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType), StructField("source", StringType),
+    StructField("n_chars", LongType)))
 
-  private def drainAppend(df: DataFrame, partitions: Int = 2): DataFrame =
-    drain(df, "append", partitions)
+  /** A parquet file stream over `srcDir` that takes one file per trigger,
+    * so each stream file is its own micro-batch. */
+  private def fileStream(s: SparkSession, schema: StructType, srcDir: String): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(srcDir)
 
-  /** [[drain]] twin driven by Trigger.AvailableNow — the query paces
-    * itself through the available input and TERMINATES on its own
-    * (awaitTermination, no processAllAvailable/stop from the caller).
-    * This is the scheduled-incremental-job trigger; grading one candle
-    * query through it proves the trigger in the oracle-checked path, not
-    * just in AvailableNowSpec. Same SEQUENTIAL CONTRACT as drain(). */
-  private def drainAvailableNow(df: DataFrame, mode: String): DataFrame = {
-    val spark = df.sparkSession
-    val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", drainParts)
-    try {
-      val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation",
-          s"/dev/shm/graft-ckpt/${name}_${java.util.UUID.randomUUID().toString.take(8)}")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      require(q.awaitTermination(120000), "AvailableNow drain did not terminate")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(name)
+  /** Writes `df` as batch `bid` of the batchId-keyed store at `root`, as
+    * one file, and returns the part's path. OVERWRITE on the batch's own
+    * dir (round 14): foreachBatch is at-least-once, and a replayed batch
+    * replaces its earlier attempt instead of adding a second copy, so
+    * every store is idempotent. One file per batch because the stores are
+    * read back every batch. `repartition(1)`, not `coalesce(1)` (round
+    * 16): coalesce is NARROW and collapses the upstream batch×store band
+    * join to one task (BASELINE.md round-16 records the A/B). */
+  private def writeBatch(df: DataFrame, root: String, bid: Long): String = {
+    val path = s"$root/batch=$bid"
+    df.repartition(1).write.mode("overwrite").parquet(path)
+    path
   }
 
-  /** One-file store-write width for the incremental screens:
-    * `repartition(1)`, the round-16 1000× fix — `coalesce(1)` is NARROW
-    * and collapses the upstream batch×store band join to one task
-    * (BASELINE.md round-16 records the A/B). */
-  private def oneFileStore(df: DataFrame): DataFrame = df.repartition(1)
+  /** Runs an incremental screen: `stream` drains in append mode at
+    * [[drainParts]] through `body`, once per micro-batch, with checkpoint
+    * `<CkptRoot>/<ckptKey>`, after wiping `scratch`. `body` gets the batch,
+    * its batchId and the screen's [[Stores]], closed once the query stops. */
+  private def screen(stream: DataFrame, ckptKey: String, scratch: Seq[String])(
+      body: (DataFrame, Long, Stores) => Unit): Unit = {
+    val stores = new Stores
+    try runStream(stream, drainParts, s"$CkptRoot/$ckptKey", scratch)(
+      _.outputMode("append").foreachBatch { (batch: DataFrame, bid: Long) =>
+        body(batch, bid, stores)
+      })
+    finally stores.close()
+  }
 
-  /** Recursive delete for /dev/shm scratch that is rebuilt per invocation
-    * — file-sink queries key their output on the sf dir and wipe it here
-    * so repeated bench reps don't accumulate copies. */
+  /** Recursive delete for /dev/shm scratch that is rebuilt per invocation. */
   private def rmrf(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(rmrf)
     f.delete(): Unit
+  }
+
+  /** An incremental screen's accumulated stores: one [[BatchAcc]] per
+    * store root. */
+  private final class Stores {
+    private val accs = scala.collection.mutable.Map[String, BatchAcc]()
+    /** Writes `df` as batch `bid` of the store at `root` ([[writeBatch]])
+      * and returns (this batch's read-back, union of all batches so far). */
+    def append(df: DataFrame, root: String, bid: Long): (DataFrame, DataFrame) =
+      accs.getOrElseUpdate(root, new BatchAcc).add(df.sparkSession, bid, writeBatch(df, root, bid))
+    def close(): Unit = accs.values.foreach(_.close())
   }
 
   /** In-session accumulator over an incremental screen's batchId-keyed
@@ -191,30 +241,40 @@ object StreamQueries {
     * Idempotence: parts are keyed by batchId — an at-least-once replay
     * REPLACES its own earlier part (the same rule as the batchId-keyed
     * OVERWRITE sinks it mirrors). The parquet store stays the source of
-    * truth: every graded run wipes its store first (the rmrf above), so
+    * truth: every graded run wipes its store first ([[runStream]]), so
     * accumulator and store start — and stay — in lockstep; a deployment
     * resuming over an existing store would re-seed parts from the
     * surviving batch= dirs before starting the query.
     *
     * Plan growth: the union widens with the trigger count, so once it
     * passes [[BatchAcc.FoldAt]] parts the retired parts are folded into
-    * one localCheckpointed relation. Only the CURRENT batch can ever be
-    * replayed (a foreachBatch failure fails the run; a restart begins a
-    * fresh accumulator), so folding retired parts never loses a replay
-    * target. close() unpersists everything — the screens' read-outs
-    * re-read the final store from parquet exactly as before. */
+    * one localCheckpointed relation. Fold/replay rule: a folded part can
+    * no longer be replaced, so the accumulator remembers every batchId it
+    * folded and THROWS on a replay of one — appending it next to its
+    * folded copy would duplicate its rows (and double wj's document
+    * frequencies). In a screen only the CURRENT batch can be replayed (a
+    * foreachBatch failure fails the run; a restart begins a fresh
+    * accumulator), and the current batch is never folded, so the throw
+    * marks a broken caller, not a lost replay. close() unpersists
+    * everything — the screens' read-outs re-read the final store from
+    * parquet. */
   private[streaming] final class BatchAcc {
     private val parts =
       scala.collection.mutable.LinkedHashMap[Long, org.apache.spark.sql.DataFrame]()
+    private val folded = scala.collection.mutable.Set[Long]()
     /** Read `path` (the batch file just written for `bid`) back, persist
       * it, and return (this batch's relation, union of all batches). */
     def add(sp: SparkSession, bid: Long, path: String): (DataFrame, DataFrame) = {
+      if (folded.contains(bid))
+        throw new IllegalStateException(
+          s"batch $bid was already folded into the accumulator; its replay cannot replace it")
       parts.remove(bid).foreach(_.unpersist())
       if (parts.size >= BatchAcc.FoldAt) {
-        val folded = parts.values.reduce(_.union(_)).localCheckpoint()
+        val all = parts.values.reduce(_.union(_)).localCheckpoint()
         parts.values.foreach(_.unpersist())
+        folded ++= parts.keys.filter(_ != Long.MinValue)
         parts.clear()
-        parts.put(Long.MinValue, folded)
+        parts.put(Long.MinValue, all)
       }
       val p = sp.read.parquet(path).persist()
       parts.put(bid, p)
@@ -224,29 +284,22 @@ object StreamQueries {
   }
   private[streaming] object BatchAcc { val FoldAt = 32 }
 
-  val all: Seq[Reg] = Seq(
+  /** Hourly OHLCV candles per event type, streamed and drained under
+    * `trigger` at `partitions` (streaming_candles_1h and its AvailableNow
+    * twin). */
+  private def hourlyCandles(s: SparkSession, dir: String, partitions: Int,
+      trigger: Trigger): DataFrame = {
+    val fmt = "yyyy-MM-dd HH:mm:ss"
+    val candles = ohlcv(readEventsStream(s, dir)
+      .groupBy(window(col("ts"), "1 hour"), col("event_type")))
+    drain(candles, "complete", partitions, trigger)
+      .select(date_format(col("window.start"), fmt).as("bucket"),
+        col("event_type"), col("open"), col("high"), col("low"), col("close"),
+        round(col("volume"), 4).as("volume"), col("trades"))
+      .orderBy("bucket", "event_type")
+  }
 
-    // ---- streaming OHLCV candles: window agg over the event-time column -
-    // Same oracle as batch candles_1h — streaming must agree with batch.
-    Reg("streaming_candles_1h",
-      (s, dir) => {
-        val fmt = "yyyy-MM-dd HH:mm:ss"
-        val candles = readEventsStream(s, dir)
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(
-            min_by(col("value"), col("ts")).as("open"),
-            max(col("value")).as("high"),
-            min(col("value")).as("low"),
-            max_by(col("value"), col("ts")).as("close"),
-            sum(col("value")).as("volume"),
-            count(lit(1)).as("trades"))
-        drainComplete(candles)
-          .select(date_format(col("window.start"), fmt).as("bucket"),
-            col("event_type"), col("open"), col("high"), col("low"), col("close"),
-            round(col("volume"), 4).as("volume"), col("trades"))
-          .orderBy("bucket", "event_type")
-      },
-      Some("""
+  private val hourlyCandlesOracle = """
         SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS bucket,
                event_type,
                arg_min(value, ts) AS open,
@@ -258,7 +311,15 @@ object StreamQueries {
         FROM events
         GROUP BY 1, 2
         ORDER BY 1, 2
-      """)),
+      """
+
+  val all: Seq[Reg] = Seq(
+
+    // ---- streaming OHLCV candles: window agg over the event-time column -
+    // Same oracle as batch candles_1h — streaming must agree with batch.
+    Reg("streaming_candles_1h",
+      (s, dir) => hourlyCandles(s, dir, 2, Trigger.ProcessingTime(0L)),
+      Some(hourlyCandlesOracle)),
 
     // ---- candles through Trigger.AvailableNow ---------------------------
     // The scheduled-incremental-job trigger in the GRADED path: identical
@@ -268,36 +329,8 @@ object StreamQueries {
     // Same oracle as the batch candles: trigger choice must be
     // result-invisible.
     Reg("streaming_candles_availablenow",
-      (s, dir) => {
-        val fmt = "yyyy-MM-dd HH:mm:ss"
-        val candles = readEventsStream(s, dir)
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(
-            min_by(col("value"), col("ts")).as("open"),
-            max(col("value")).as("high"),
-            min(col("value")).as("low"),
-            max_by(col("value"), col("ts")).as("close"),
-            sum(col("value")).as("volume"),
-            count(lit(1)).as("trades"))
-        drainAvailableNow(candles, "complete")
-          .select(date_format(col("window.start"), fmt).as("bucket"),
-            col("event_type"), col("open"), col("high"), col("low"), col("close"),
-            round(col("volume"), 4).as("volume"), col("trades"))
-          .orderBy("bucket", "event_type")
-      },
-      Some("""
-        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS bucket,
-               event_type,
-               arg_min(value, ts) AS open,
-               max(value) AS high,
-               min(value) AS low,
-               arg_max(value, ts) AS close,
-               round(sum(value), 4) AS volume,
-               count(*) AS trades
-        FROM events
-        GROUP BY 1, 2
-        ORDER BY 1, 2
-      """)),
+      (s, dir) => hourlyCandles(s, dir, drainParts, Trigger.AvailableNow()),
+      Some(hourlyCandlesOracle)),
 
     // ---- streaming SLIDING-window candles: 1 h window, 15 m slide -------
     // Each event lands in windowDuration/slideDuration = 4 windows whose
@@ -306,16 +339,9 @@ object StreamQueries {
     Reg("streaming_candles_sliding",
       (s, dir) => {
         val fmt = "yyyy-MM-dd HH:mm:ss"
-        val candles = readEventsStream(s, dir)
-          .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-          .agg(
-            min_by(col("value"), col("ts")).as("open"),
-            max(col("value")).as("high"),
-            min(col("value")).as("low"),
-            max_by(col("value"), col("ts")).as("close"),
-            sum(col("value")).as("volume"),
-            count(lit(1)).as("trades"))
-        drainComplete(candles)
+        val candles = ohlcv(readEventsStream(s, dir)
+          .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type")))
+        drain(candles, "complete")
           .select(date_format(col("window.start"), fmt).as("wstart"),
             col("event_type"), col("open"), col("high"), col("low"), col("close"),
             round(col("volume"), 4).as("volume"), col("trades"))
@@ -348,17 +374,10 @@ object StreamQueries {
     Reg("streaming_candles_sliding_append",
       (s, dir) => {
         val fmt = "yyyy-MM-dd HH:mm:ss"
-        val candles = readEventsStream(s, dir)
+        val candles = ohlcv(readEventsStream(s, dir)
           .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-          .agg(
-            min_by(col("value"), col("ts")).as("open"),
-            max(col("value")).as("high"),
-            min(col("value")).as("low"),
-            max_by(col("value"), col("ts")).as("close"),
-            sum(col("value")).as("volume"),
-            count(lit(1)).as("trades"))
-        drainAppend(candles)
+          .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type")))
+        drain(candles, "append")
           .select(date_format(col("window.start"), fmt).as("wstart"),
             col("event_type"), col("open"), col("high"), col("low"), col("close"),
             round(col("volume"), 4).as("volume"), col("trades"))
@@ -392,17 +411,10 @@ object StreamQueries {
     Reg("streaming_candles_append",
       (s, dir) => {
         val fmt = "yyyy-MM-dd HH:mm:ss"
-        val candles = readEventsStream(s, dir)
+        val candles = ohlcv(readEventsStream(s, dir)
           .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(
-            min_by(col("value"), col("ts")).as("open"),
-            max(col("value")).as("high"),
-            min(col("value")).as("low"),
-            max_by(col("value"), col("ts")).as("close"),
-            sum(col("value")).as("volume"),
-            count(lit(1)).as("trades"))
-        drainAppend(candles)
+          .groupBy(window(col("ts"), "1 hour"), col("event_type")))
+        drain(candles, "append")
           .select(date_format(col("window.start"), fmt).as("bucket"),
             col("event_type"), col("open"), col("high"), col("low"), col("close"),
             round(col("volume"), 4).as("volume"), col("trades"))
@@ -433,7 +445,7 @@ object StreamQueries {
         val sessions = readEventsStream(s, dir)
           .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n_events"))
-        drainComplete(sessions, partitions = 4)
+        drain(sessions, "complete", 4)
           .select(col("user_id"),
             date_format(col("session_window.start"), fmt).as("start_ts"),
             date_format(col("session_window.end"), fmt).as("end_ts"),
@@ -472,7 +484,7 @@ object StreamQueries {
           .withWatermark("ts", "1 hour")
           .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n_events"))
-        drainAppend(sessions, partitions = 4)
+        drain(sessions, "append", 4)
           .select(col("user_id"),
             date_format(col("session_window.start"), fmt).as("start_ts"),
             date_format(col("session_window.end"), fmt).as("end_ts"),
@@ -524,7 +536,7 @@ object StreamQueries {
           col("p_user") === col("c_user") &&
             col("c_ts") >= col("p_ts") - expr("INTERVAL 5 MINUTES") &&
             col("c_ts") <= col("p_ts"))
-        drainAppend(joined, partitions = 1)
+        drain(joined, "append", 1)
           .select(col("p_id"), col("p_user").as("user_id"),
             date_format(col("p_ts"), fmt).as("p_ts"),
             date_format(col("c_ts"), fmt).as("c_ts"), col("c_val"))
@@ -572,7 +584,7 @@ object StreamQueries {
           col("p_user") === col("e_user") &&
             col("e_ts") >= col("p_ts") - expr("INTERVAL 5 MINUTES") &&
             col("e_ts") <= col("p_ts") + expr("INTERVAL 10 MINUTES"))
-        drainAppend(joined, partitions = 1)
+        drain(joined, "append", 1)
           .select(col("p_id"), col("e_id"), col("p_user").as("user_id"),
             date_format(col("p_ts"), fmt).as("p_start_ts"),
             date_format(col("e_ts"), fmt).as("e_start_ts"),
@@ -621,7 +633,7 @@ object StreamQueries {
           .withColumn("par", expr("user_id % 2"))
         val agg = src.groupBy(col("event_type"), col("par"))
           .agg(topk(-col("hv").cast("double"), col("event_id")).as("top"))
-        drainComplete(agg)
+        drain(agg, "complete")
           .select(col("event_type"), col("par"),
             posexplode(col("top")).as(Seq("i", "t")))
           .select(col("event_type"), col("par"),
@@ -659,15 +671,10 @@ object StreamQueries {
       (s, dir) => {
         val mg = udaf(new graft.functions.MisraGriesAggregator(2000),
           org.apache.spark.sql.Encoders.STRING)
-        val docSchema = StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("lang", StringType), StructField("source", StringType),
-          StructField("n_chars", LongType)))
         val srcDir = graft.sources.Fixtures.ensureDocStreamFiles(s, dir, n = 3)
-        val stream = s.readStream.schema(docSchema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
+        val stream = fileStream(s, docSchema, srcDir)
           .select(explode(graft.text.TextOps.tokens(col("text"))).as("tok"))
-        val summary = drainComplete(stream.agg(mg(col("tok")).as("summary")))
+        val summary = drain(stream.agg(mg(col("tok")).as("summary")), "complete")
         val cand = summary.select(explode(map_keys(col("summary"))).as("tok"))
         val toks = graft.Tables(s, dir).documents
           .select(explode(graft.text.TextOps.tokens(col("text"))).as("tok"))
@@ -720,7 +727,7 @@ object StreamQueries {
             col("c_ts") >= col("p_ts") - expr("INTERVAL 5 MINUTES") &&
             col("c_ts") <= col("p_ts"),
           "left_outer")
-        drainAppend(joined, partitions = 1)
+        drain(joined, "append", 1)
           .select(col("p_id"), col("p_user").as("user_id"),
             date_format(col("p_ts"), fmt).as("p_ts"),
             coalesce(date_format(col("c_ts"), fmt), lit("")).as("c_ts"),
@@ -751,22 +758,14 @@ object StreamQueries {
     Reg("streaming_gap_alarm",
       (s, dir) => {
         val fmt = "yyyy-MM-dd HH:mm:ss"
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val alarms = StatefulOps.gapAlarms(readEventsStream(s, dir),
-              gapUs = 1800L * 1000000L, delay = "0 seconds")
-            .toDF("event_type", "ts_us", "kind")
-          drain(alarms, "update")
-            .select(col("event_type"),
-              date_format(timestamp_micros(col("ts_us")), fmt).as("last_ts"),
-              col("kind"))
-            .orderBy("event_type", "last_ts")
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
+        val alarms = StatefulOps.gapAlarms(readEventsStream(s, dir),
+            gapUs = 1800L * 1000000L, delay = "0 seconds")
+          .toDF("event_type", "ts_us", "kind")
+        drain(alarms, "update", rocksDb = true)
+          .select(col("event_type"),
+            date_format(timestamp_micros(col("ts_us")), fmt).as("last_ts"),
+            col("kind"))
+          .orderBy("event_type", "last_ts")
       },
       Some("""
         WITH e AS (SELECT event_type, ts,
@@ -794,23 +793,15 @@ object StreamQueries {
     Reg("streaming_session_timers",
       (s, dir) => {
         val fmt = "yyyy-MM-dd HH:mm:ss"
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val sessions = StatefulOps.timerSessions(readEventsStream(s, dir),
-              gapUs = 1800L * 1000000L, delay = "0 seconds")
-            .toDF("user_id", "start_us", "last_us", "n_events")
-          drain(sessions, "update", partitions = 4)
-            .select(col("user_id"),
-              date_format(timestamp_micros(col("start_us")), fmt).as("start_ts"),
-              date_format(timestamp_micros(col("last_us")), fmt).as("end_ts"),
-              col("n_events"))
-            .orderBy("user_id", "start_ts")
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
+        val sessions = StatefulOps.timerSessions(readEventsStream(s, dir),
+            gapUs = 1800L * 1000000L, delay = "0 seconds")
+          .toDF("user_id", "start_us", "last_us", "n_events")
+        drain(sessions, "update", 4, rocksDb = true)
+          .select(col("user_id"),
+            date_format(timestamp_micros(col("start_us")), fmt).as("start_ts"),
+            date_format(timestamp_micros(col("last_us")), fmt).as("end_ts"),
+            col("n_events"))
+          .orderBy("user_id", "start_ts")
       },
       Some("""
         WITH e AS (
@@ -849,7 +840,7 @@ object StreamQueries {
         val candles = readEventsStream(s, dir)
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("trades"))
-        val present = drainComplete(candles)
+        val present = drain(candles, "complete")
           .select(col("event_type").as("series"), col("window.start").as("bucket"))
         graft.ts.TimeSeries.gapDetect(present, 3600)
           .select(col("series").as("event_type"),
@@ -880,7 +871,7 @@ object StreamQueries {
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("trades"))
-        val present = drainAppend(candles)
+        val present = drain(candles, "append")
           .select(col("event_type").as("series"), col("window.start").as("bucket"))
         graft.ts.TimeSeries.gapDetect(present, 3600)
           .select(col("series").as("event_type"),
@@ -925,7 +916,7 @@ object StreamQueries {
             col("c_ts") >= col("p_ts") - expr("INTERVAL 5 MINUTES") &&
             col("c_ts") <= col("p_ts"),
           "full_outer")
-        drainAppend(joined, partitions = 1)
+        drain(joined, "append", 1)
           .select(coalesce(col("p_id"), lit(-1L)).as("p_id"),
             coalesce(col("p_user"), col("c_user")).as("user_id"),
             coalesce(date_format(col("p_ts"), fmt), lit("")).as("p_ts"),
@@ -983,7 +974,7 @@ object StreamQueries {
             col("c_ts") >= col("p_ts") - expr("INTERVAL 5 MINUTES") &&
             col("c_ts") <= col("p_ts"),
           "right_outer")
-        drainAppend(joined, partitions = 1)
+        drain(joined, "append", 1)
           .select(coalesce(col("p_id"), lit(-1L)).as("p_id"),
             col("c_user").as("user_id"),
             coalesce(date_format(col("p_ts"), fmt), lit("")).as("p_ts"),
@@ -1026,31 +1017,14 @@ object StreamQueries {
         // the file sink's manifest only matches a checkpoint it wrote)
         val key = graft.sources.Fixtures.md5Hex(dir)
         val out = s"/dev/shm/graft-sink/candles_$key"
-        val ckpt = s"/dev/shm/graft-ckpt/sink_$key"
-        rmrf(new java.io.File(out)); rmrf(new java.io.File(ckpt))
-        val candles = readEventsStream(s, dir)
+        val candles = ohlcv(readEventsStream(s, dir)
           .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(
-            min_by(col("value"), col("ts")).as("open"),
-            max(col("value")).as("high"),
-            min(col("value")).as("low"),
-            max_by(col("value"), col("ts")).as("close"),
-            sum(col("value")).as("volume"),
-            count(lit(1)).as("trades"))
+          .groupBy(window(col("ts"), "1 hour"), col("event_type")))
           .select(date_format(col("window.start"), fmt).as("bucket"),
             col("event_type"), col("open"), col("high"), col("low"), col("close"),
             round(col("volume"), 4).as("volume"), col("trades"))
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", drainParts)
-        try {
-          val q = candles.writeStream.format("parquet").outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .start()
-          q.processAllAvailable()
-          q.stop()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        runStream(candles, drainParts, s"$CkptRoot/sink_$key", Seq(out))(
+          _.format("parquet").outputMode("append").option("path", out))
         s.read.parquet(out).orderBy("bucket", "event_type")
       },
       Some("""
@@ -1089,7 +1063,7 @@ object StreamQueries {
           .groupBy(window(col("ts"), "1 hour"), col("c_mktsegment"))
           .agg(round(sum(col("value")), 4).as("revenue"),
             count(lit(1)).as("n_purchases"))
-        drainAppend(agg)
+        drain(agg, "append")
           .select(date_format(col("window.start"), fmt).as("bucket"),
             col("c_mktsegment"), col("revenue"), col("n_purchases"))
           .orderBy("bucket", "c_mktsegment")
@@ -1123,33 +1097,16 @@ object StreamQueries {
         val fmt = "yyyy-MM-dd HH:mm:ss"
         val key = graft.sources.Fixtures.md5Hex(dir)
         val out = s"/dev/shm/graft-upsert/candles_$key"
-        val ckpt = s"/dev/shm/graft-ckpt/upsert_$key"
-        rmrf(new java.io.File(out)); rmrf(new java.io.File(ckpt))
-        val candles = readEventsStream(s, dir)
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(
-            min_by(col("value"), col("ts")).as("open"),
-            max(col("value")).as("high"),
-            min(col("value")).as("low"),
-            max_by(col("value"), col("ts")).as("close"),
-            sum(col("value")).as("volume"),
-            count(lit(1)).as("trades"))
+        val candles = ohlcv(readEventsStream(s, dir)
+          .groupBy(window(col("ts"), "1 hour"), col("event_type")))
           .select(date_format(col("window.start"), fmt).as("bucket"),
             col("event_type"), col("open"), col("high"), col("low"),
             col("close"), round(col("volume"), 4).as("volume"), col("trades"))
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", drainParts)
-        try {
-          val q = candles.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              batch.withColumn("batch_id", lit(batchId))
-                .write.mode("append").parquet(out)
-            }
-            .start()
-          q.processAllAvailable()
-          q.stop()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        runStream(candles, drainParts, s"$CkptRoot/upsert_$key", Seq(out))(
+          _.outputMode("update").foreachBatch { (batch: DataFrame, batchId: Long) =>
+            batch.withColumn("batch_id", lit(batchId))
+              .write.mode("append").parquet(out)
+          })
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("bucket"), col("event_type"))
           .orderBy(col("batch_id").desc)
@@ -1159,19 +1116,7 @@ object StreamQueries {
           .drop("rn", "batch_id")
           .orderBy("bucket", "event_type")
       },
-      Some("""
-        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS bucket,
-               event_type,
-               arg_min(value, ts) AS open,
-               max(value) AS high,
-               min(value) AS low,
-               arg_max(value, ts) AS close,
-               round(sum(value), 4) AS volume,
-               count(*) AS trades
-        FROM events
-        GROUP BY 1, 2
-        ORDER BY 1, 2
-      """)),
+      Some(hourlyCandlesOracle)),
 
     // ---- arbitrary-state running counts via flatMapGroupsWithState ------
     // The second arbitrary-state API, graded: per-user running event
@@ -1209,21 +1154,13 @@ object StreamQueries {
     // across engines at representation boundaries).
     Reg("ema_by_series",
       (s, dir) => {
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val ema = StatefulOps.emaBySeries(readEventsStream(s, dir), alpha = 0.5)
-            .toDF("event_type", "ts_us", "ema")
-          drain(ema, "update")
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n_events"),
-              max_by(col("ema"), col("ts_us")).as("ema_final"))
-            .orderBy("event_type")
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
+        val ema = StatefulOps.emaBySeries(readEventsStream(s, dir), alpha = 0.5)
+          .toDF("event_type", "ts_us", "ema")
+        drain(ema, "update", rocksDb = true)
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n_events"),
+            max_by(col("ema"), col("ts_us")).as("ema_final"))
+          .orderBy("event_type")
       },
       Some("""
         SELECT event_type, count(*) AS n_events,
@@ -1250,25 +1187,17 @@ object StreamQueries {
     // epoch in-order splits vs one-shot Java regex).
     Reg("streaming_event_seq_cep",
       (s, dir) => {
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val cep = StatefulOps.seqPatternCounts(readEventsStream(s, dir))
-            .toDF("user_id", "n_events", "n_conv", "n_alt_conv",
-              "max_error_run", "n_error_pairs")
-          drain(cep, "update")
-            .groupBy(col("user_id"))
-            .agg(max(col("n_events")).as("n_events"),
-              max(col("n_conv")).as("n_conv"),
-              max(col("n_alt_conv")).as("n_alt_conv"),
-              max(col("max_error_run")).as("max_error_run"),
-              max(col("n_error_pairs")).as("n_error_pairs"))
-            .orderBy("user_id")
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
+        val cep = StatefulOps.seqPatternCounts(readEventsStream(s, dir))
+          .toDF("user_id", "n_events", "n_conv", "n_alt_conv",
+            "max_error_run", "n_error_pairs")
+        drain(cep, "update", rocksDb = true)
+          .groupBy(col("user_id"))
+          .agg(max(col("n_events")).as("n_events"),
+            max(col("n_conv")).as("n_conv"),
+            max(col("n_alt_conv")).as("n_alt_conv"),
+            max(col("max_error_run")).as("max_error_run"),
+            max(col("n_error_pairs")).as("n_error_pairs"))
+          .orderBy("user_id")
       },
       Some("""
         WITH s AS (SELECT user_id,
@@ -1302,7 +1231,7 @@ object StreamQueries {
           .select(col("user_id"), explode(expr("array(0, 1, 2, 3)")).as("r"))
           .withColumn("bucket", bucket(col("r"), col("user_id")))
           .groupBy(col("r"), col("bucket")).count()
-        val cells = drain(cellsS, "update", partitions = 4)
+        val cells = drain(cellsS, "update", 4)
           .groupBy(col("r"), col("bucket")).agg(max(col("count")).as("cell"))
         val exact = graft.Tables(s, dir).events
           .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
@@ -1356,7 +1285,7 @@ object StreamQueries {
           .select(col("event_type"),
             expr("CAST(round(value * 100) AS BIGINT) div 2500").as("bin"))
           .groupBy(col("event_type"), col("bin")).count()
-        val bins = drain(cellsS, "update", partitions = 4)
+        val bins = drain(cellsS, "update", 4)
           .groupBy(col("event_type"), col("bin")).agg(max(col("count")).as("cnt"))
         val wc = Window.partitionBy(col("event_type")).orderBy(col("bin"))
           .rowsBetween(Window.unboundedPreceding, 0)
@@ -1425,7 +1354,7 @@ object StreamQueries {
           .join(broadcast(edges), "event_type")
           .withColumn("bin", expr("size(filter(edges, x -> c > x))"))
           .groupBy(col("event_type"), col("bin")).count()
-        val cur = drain(curS, "update", partitions = 4)
+        val cur = drain(curS, "update", 4)
           .groupBy(col("event_type"), col("bin")).agg(max(col("count")).as("cq"))
         val bb = base.join(broadcast(edges), "event_type")
           .withColumn("bin", expr("size(filter(edges, x -> c > x))"))
@@ -1465,22 +1394,14 @@ object StreamQueries {
     // counters monotone → max() per key grades any batching.
     Reg("streaming_funnel_timeout",
       (s, dir) => {
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val f = StatefulOps.funnelTimeouts(readEventsStream(s, dir),
-              timeoutUs = 4L * 3600L * 1000000L, delay = "0 seconds")
-            .toDF("user_id", "n_views", "n_abandoned")
-          drain(f, "update")
-            .groupBy(col("user_id"))
-            .agg(max(col("n_views")).as("n_views"),
-              max(col("n_abandoned")).as("n_abandoned"))
-            .orderBy("user_id")
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
+        val f = StatefulOps.funnelTimeouts(readEventsStream(s, dir),
+            timeoutUs = 4L * 3600L * 1000000L, delay = "0 seconds")
+          .toDF("user_id", "n_views", "n_abandoned")
+        drain(f, "update", rocksDb = true)
+          .groupBy(col("user_id"))
+          .agg(max(col("n_views")).as("n_views"),
+            max(col("n_abandoned")).as("n_abandoned"))
+          .orderBy("user_id")
       },
       Some("""
         WITH wm AS (SELECT epoch_us(max(ts)) // 1000 AS wm_ms FROM events),
@@ -1504,7 +1425,7 @@ object StreamQueries {
     Reg("streaming_dedup_counts",
       (s, dir) => {
         val deduped = readEventsStream(s, dir).dropDuplicates("event_id")
-        drainAppend(deduped, partitions = 4)
+        drain(deduped, "append", 4)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("n_ids"))
           .orderBy("event_type")
@@ -1525,7 +1446,7 @@ object StreamQueries {
         val deduped = readEventsStream(s, dir)
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
-        drainAppend(deduped, partitions = 4)
+        drain(deduped, "append", 4)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("n_ids"))
           .orderBy("event_type")
@@ -1654,7 +1575,7 @@ object StreamQueries {
           .selectExpr("idx",
             "CAST(CASE WHEN rest = 0 THEN 55 ELSE 55 - length(bin(rest)) END AS BIGINT) AS rho")
           .groupBy(col("idx")).agg(max(col("rho")).as("rho"))
-        drain(regs, "update", partitions = 4)
+        drain(regs, "update", 4)
           .groupBy(col("idx")).agg(max(col("rho")).as("rho"))
           .orderBy("idx")
       },
@@ -1679,25 +1600,17 @@ object StreamQueries {
     // every purchase emits exactly once, so the drain needs no re-agg.
     Reg("streaming_attribution",
       (s, dir) => {
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val att = StatefulOps
-            .lastTouchAttribution(readEventsStream(s, dir), 86400000000L)
-            .toDF("purchase_id", "user_id", "ts_us", "value_cents",
-              "touch_id", "touch_type", "mins_since_touch")
-          drain(att, "update", partitions = 4)
-            .select(col("purchase_id"), col("user_id"),
-              date_format(timestamp_micros(col("ts_us")), "yyyy-MM-dd HH:mm:ss")
-                .as("purchase_ts"),
-              col("value_cents"), col("touch_id"), col("touch_type"),
-              col("mins_since_touch"))
-            .orderBy("purchase_id")
-        } finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
+        val att = StatefulOps
+          .lastTouchAttribution(readEventsStream(s, dir), 86400000000L)
+          .toDF("purchase_id", "user_id", "ts_us", "value_cents",
+            "touch_id", "touch_type", "mins_since_touch")
+        drain(att, "update", 4, rocksDb = true)
+          .select(col("purchase_id"), col("user_id"),
+            date_format(timestamp_micros(col("ts_us")), "yyyy-MM-dd HH:mm:ss")
+              .as("purchase_ts"),
+            col("value_cents"), col("touch_id"), col("touch_type"),
+            col("mins_since_touch"))
+          .orderBy("purchase_id")
       },
       Some(graft.ts.TsQueries.attributionOracleSql)),
 
@@ -1742,30 +1655,21 @@ object StreamQueries {
     // as pareto_frontier_docs, partitioned by lang.
     Reg("streaming_pareto_frontier",
       (s, dir) => {
-        val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          import org.apache.spark.sql.expressions.Window
-          val path = graft.sources.Fixtures.ensureDocStreamFiles(s, dir, n = 3)
-          val schema = s.read.parquet(path).schema // footer-only probe
-          val t = graft.text.TextOps.tokens(col("text"))
-          val pts = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(path)
-            .select(col("lang"), col("doc_id").cast("long"),
-              size(t).cast("long"), size(array_distinct(t)).cast("long"))
-          val out = StatefulOps.skylineByKey(pts)
-            .toDF("lang", "seq", "doc_id", "n_tokens", "n_vocab")
-          drain(out, "update")
-            .withColumn("max_seq", max(col("seq")).over(
-              Window.partitionBy(col("lang"))))
-            .filter(col("seq") === col("max_seq"))
-            .select(col("lang"), col("doc_id"), col("n_tokens"), col("n_vocab"))
-            .orderBy(col("lang"), col("n_tokens").desc, col("doc_id"))
-        } finally prev match {
-          case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
+        import org.apache.spark.sql.expressions.Window
+        val path = graft.sources.Fixtures.ensureDocStreamFiles(s, dir, n = 3)
+        val schema = s.read.parquet(path).schema // footer-only probe
+        val t = graft.text.TextOps.tokens(col("text"))
+        val pts = fileStream(s, schema, path)
+          .select(col("lang"), col("doc_id").cast("long"),
+            size(t).cast("long"), size(array_distinct(t)).cast("long"))
+        val out = StatefulOps.skylineByKey(pts)
+          .toDF("lang", "seq", "doc_id", "n_tokens", "n_vocab")
+        drain(out, "update", rocksDb = true)
+          .withColumn("max_seq", max(col("seq")).over(
+            Window.partitionBy(col("lang"))))
+          .filter(col("seq") === col("max_seq"))
+          .select(col("lang"), col("doc_id"), col("n_tokens"), col("n_vocab"))
+          .orderBy(col("lang"), col("n_tokens").desc, col("doc_id"))
       },
       Some("""
         WITH d AS (SELECT doc_id, lang,
@@ -1793,63 +1697,32 @@ object StreamQueries {
       srcDir: String, tag: String): DataFrame = {
     val store = s"/dev/shm/graft-editdist/store_$tag"
     val pairsOut = s"/dev/shm/graft-editdist/pairs_$tag"
-    val ckpt = s"/dev/shm/graft-ckpt/editdist_$tag"
-    rmrf(new java.io.File(store)); rmrf(new java.io.File(pairsOut))
-    rmrf(new java.io.File(ckpt))
     val tokSchema = StructType(Seq(
       StructField("tok", StringType), StructField("cnt", LongType)))
-    val stream = s.readStream.schema(tokSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts)
-    val acc = new BatchAcc
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val sp = batch.sparkSession
-          val vars = batch.select(col("tok"), col("cnt"), explode(expr(
-            """array_union(array(tok),
-               transform(sequence(1, length(tok)),
-                 i -> concat(substring(tok, 1, i - 1), substring(tok, i + 1, length(tok)))))"""))
-            .as("v"))
-          // one part-file per batch (the semdedup store rationale): the
-          // index is read back every batch, so shuffle-partition-many tiny
-          // files per batch would make the read-back dominate the drain.
-          // batchId-keyed OVERWRITE (round 14): this screen's read-out
-          // is replay-tolerant (distinct), but the keyed sink keeps the
-          // whole incremental family uniformly idempotent.
-          // repartition(1), not coalesce(1), family-wide (round 16):
-          // see semdedupIncrementalRun's store write for the measured
-          // narrow-collapse mechanism (coalesce ran each screen's
-          // per-batch band join single-threaded).
-          vars.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$store/batch=$bid")
-          // round 17 (VERDICT r16 #1): the index side is the in-session
-          // accumulated union, not a rescan of the whole parquet store;
-          // the batch side reuses the read-back, so the variant explode
-          // runs once per batch instead of twice
-          val (varsB, all) = acc.add(sp, bid, s"$store/batch=$bid")
-          val pairs = varsB
-            .select(col("v"), col("tok").as("ntok"), col("cnt").as("ncnt"))
-            .join(all.select(col("v"), col("tok").as("otok"), col("cnt").as("ocnt")), "v")
-            .filter(col("ntok") =!= col("otok"))
-            .select(
-              when(col("ntok") < col("otok"), col("ntok")).otherwise(col("otok")).as("tok_a"),
-              when(col("ntok") < col("otok"), col("ncnt")).otherwise(col("ocnt")).as("cnt_a"),
-              when(col("ntok") < col("otok"), col("otok")).otherwise(col("ntok")).as("tok_b"),
-              when(col("ntok") < col("otok"), col("ocnt")).otherwise(col("ncnt")).as("cnt_b"))
-            .distinct()
-            .filter(levenshtein(col("tok_a"), col("tok_b")) <= 1)
-          pairs.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$pairsOut/batch=$bid")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      acc.close()
-      s.conf.set("spark.sql.shuffle.partitions", prev)
+    screen(fileStream(s, tokSchema, srcDir), s"editdist_$tag", Seq(store, pairsOut)) {
+      (batch, bid, stores) =>
+        val vars = batch.select(col("tok"), col("cnt"), explode(expr(
+          """array_union(array(tok),
+             transform(sequence(1, length(tok)),
+               i -> concat(substring(tok, 1, i - 1), substring(tok, i + 1, length(tok)))))"""))
+          .as("v"))
+        // round 17 (VERDICT r16 #1): the index side is the in-session
+        // accumulated union, not a rescan of the whole parquet store;
+        // the batch side reuses the read-back, so the variant explode
+        // runs once per batch instead of twice
+        val (varsB, all) = stores.append(vars, store, bid)
+        val pairs = varsB
+          .select(col("v"), col("tok").as("ntok"), col("cnt").as("ncnt"))
+          .join(all.select(col("v"), col("tok").as("otok"), col("cnt").as("ocnt")), "v")
+          .filter(col("ntok") =!= col("otok"))
+          .select(
+            when(col("ntok") < col("otok"), col("ntok")).otherwise(col("otok")).as("tok_a"),
+            when(col("ntok") < col("otok"), col("ncnt")).otherwise(col("ocnt")).as("cnt_a"),
+            when(col("ntok") < col("otok"), col("otok")).otherwise(col("ntok")).as("tok_b"),
+            when(col("ntok") < col("otok"), col("ocnt")).otherwise(col("ncnt")).as("cnt_b"))
+          .distinct()
+          .filter(levenshtein(col("tok_a"), col("tok_b")) <= 1)
+        writeBatch(pairs, pairsOut, bid)
     }
     // a pair can surface twice (both endpoints in one batch match each
     // other through the index's copy of each) — dedup once at the end
@@ -1860,12 +1733,6 @@ object StreamQueries {
       .distinct().orderBy("tok_a", "tok_b")
   }
 
-  /** Incremental-semdedup core behind `streaming_semdedup_keep`, srcDir
-    * and scratch tag injected so StreamingSemDedupSpec can feed it
-    * hash-INTERLEAVED files (smaller ids arriving in later batches) and
-    * assert the result still equals the batch [[graft.vec.VecOps
-    * .semDedupKeep]] — the order-independence proof for the pair-coverage
-    * argument above. */
   /** Incremental phash near-dup drain (see streaming_phash_neardup's
     * registration comment for semantics). Per micro-batch: fingerprint,
     * append to the store, chunk-band the batch against all-so-far, record
@@ -1876,56 +1743,30 @@ object StreamQueries {
       srcDir: String, tag: String): DataFrame = {
     val store = s"/dev/shm/graft-phash/store_$tag"
     val pairsOut = s"/dev/shm/graft-phash/pairs_$tag"
-    val ckpt = s"/dev/shm/graft-ckpt/phash_$tag"
-    rmrf(new java.io.File(store)); rmrf(new java.io.File(pairsOut))
-    rmrf(new java.io.File(ckpt))
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts)
-    val acc = new BatchAcc
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val sp = batch.sparkSession
-          val fp = graft.mm.MultiModal.phash32(batch.select(col("doc_id"),
-            encode(col("text"), "UTF-8").as("payload")))
-          // batchId-keyed OVERWRITE (round 14, the dsir ADVICE r13 fix
-          // applied family-wide): the read-out emits one row per stored
-          // fingerprint with no dedup — replay of an un-keyed append
-          // would duplicate output rows
-          fp.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$store/batch=$bid")
-          // round 17 (VERDICT r16 #1): store side = in-session union, not
-          // a full parquet rescan; batch side = the read-back, so the
-          // 32-term fingerprint pass runs once per batch instead of twice
-          val (fpB, all) = acc.add(sp, bid, s"$store/batch=$bid")
-          def chunked(df: DataFrame, idc: String, phc: String) =
-            df.select(col("doc_id").as(idc), col("phash").as(phc),
-              posexplode(expr(
-                s"transform(sequence(0, 3), c -> shiftright(phash, c * 8) & 255)"))
-                .as(Seq("c", "ck")))
-          val pairs = chunked(fpB, "nid", "nph")
-            .join(chunked(all, "oid", "oph"), Seq("c", "ck"))
-            .filter(col("nid") =!= col("oid"))
-            .filter(expr("bit_count(nph ^ oph) <= 3"))
-            .select(greatest(col("nid"), col("oid")).as("doc_id"),
-              least(col("nid"), col("oid")).as("dup_cand"))
-            .distinct()
-          pairs.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$pairsOut/batch=$bid")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      acc.close()
-      s.conf.set("spark.sql.shuffle.partitions", prev)
+    screen(fileStream(s, docSchema, srcDir), s"phash_$tag", Seq(store, pairsOut)) {
+      (batch, bid, stores) =>
+        val fp = graft.mm.MultiModal.phash32(batch.select(col("doc_id"),
+          encode(col("text"), "UTF-8").as("payload")))
+        // the read-out emits one row per stored fingerprint with no
+        // dedup, so the keyed store is what keeps a replay from
+        // duplicating output rows.
+        // round 17 (VERDICT r16 #1): store side = in-session union, not
+        // a full parquet rescan; batch side = the read-back, so the
+        // 32-term fingerprint pass runs once per batch instead of twice
+        val (fpB, all) = stores.append(fp, store, bid)
+        def chunked(df: DataFrame, idc: String, phc: String) =
+          df.select(col("doc_id").as(idc), col("phash").as(phc),
+            posexplode(expr(
+              s"transform(sequence(0, 3), c -> shiftright(phash, c * 8) & 255)"))
+              .as(Seq("c", "ck")))
+        val pairs = chunked(fpB, "nid", "nph")
+          .join(chunked(all, "oid", "oph"), Seq("c", "ck"))
+          .filter(col("nid") =!= col("oid"))
+          .filter(expr("bit_count(nph ^ oph) <= 3"))
+          .select(greatest(col("nid"), col("oid")).as("doc_id"),
+            least(col("nid"), col("oid")).as("dup_cand"))
+          .distinct()
+        writeBatch(pairs, pairsOut, bid)
     }
     val st = s.read.parquet(store)
     val d = s.read.parquet(pairsOut)
@@ -1973,74 +1814,40 @@ object StreamQueries {
     val dfStore = s"/dev/shm/graft-wj/df_$tag"
     val docsStore = s"/dev/shm/graft-wj/docs_$tag"
     val pairsOut = s"/dev/shm/graft-wj/pairs_$tag"
-    val ckpt = s"/dev/shm/graft-ckpt/wj_$tag"
-    rmrf(new java.io.File(store)); rmrf(new java.io.File(dfStore))
-    rmrf(new java.io.File(docsStore))
-    rmrf(new java.io.File(pairsOut)); rmrf(new java.io.File(ckpt))
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts)
-    val acc = new BatchAcc
-    val dfAcc = new BatchAcc
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val sp = batch.sparkSession
-          val toks = batch.select(col("lang"), col("source"), col("doc_id"),
-            explode(array_distinct(graft.text.TextOps.tokens(col("text")))).as("w"))
-          // batchId-keyed OVERWRITE sinks (round 14, the dsir ADVICE r13
-          // fix applied family-wide): the occurrence store feeds the
-          // read-out's df COUNTS and docsStore feeds n_docs — replaying
-          // an un-keyed append would double both and shift idf weights;
-          // keyed overwrite makes a replay replace its own attempt
-          toks.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$store/batch=$bid")
-          // round 17 (VERDICT r16 #1): the occurrence-store side of the
-          // candidate join is the in-session union, not a full parquet
-          // rescan per trigger; the batch side (and the df-count write
-          // below) reuse the read-back, so the tokenize+explode pass runs
-          // once per batch instead of three times
-          val (toksB, all) = acc.add(sp, bid, s"$store/batch=$bid")
-          toksB.groupBy(col("lang"), col("source"), col("w"))
-            .agg(count(lit(1)).as("cnt"))
-            .transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$dfStore/batch=$bid")
-          val (_, dfAll) = dfAcc.add(sp, bid, s"$dfStore/batch=$bid")
-          batch.select(col("lang"), col("source"), col("doc_id"))
-            .transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$docsStore/batch=$bid")
-          // running df = summed per-batch counts (≡ counting the full
-          // occurrence store, at vocabulary- not occurrence-cost)
-          val banded = dfAll
-            .groupBy(col("lang"), col("source"), col("w"))
-            .agg(sum(col("cnt")).as("df"))
-            .filter(col("df") >= 2 && col("df") <= ceil)
-            .select(col("lang"), col("source"), col("w"))
-          val pairs = toksB.join(banded, Seq("lang", "source", "w"))
-            .select(col("lang"), col("source"), col("w"), col("doc_id").as("nid"))
-            .join(all.join(banded, Seq("lang", "source", "w"))
-              .select(col("lang"), col("source"), col("w"), col("doc_id").as("oid")),
-              Seq("lang", "source", "w"))
-            .filter(col("nid") =!= col("oid"))
-            .select(least(col("nid"), col("oid")).as("a_id"),
-              greatest(col("nid"), col("oid")).as("b_id"))
-            .distinct()
-          pairs.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$pairsOut/batch=$bid")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      acc.close()
-      dfAcc.close()
-      s.conf.set("spark.sql.shuffle.partitions", prev)
+    screen(fileStream(s, docSchema, srcDir), s"wj_$tag",
+        Seq(store, dfStore, docsStore, pairsOut)) { (batch, bid, stores) =>
+      val toks = batch.select(col("lang"), col("source"), col("doc_id"),
+        explode(array_distinct(graft.text.TextOps.tokens(col("text")))).as("w"))
+      // the occurrence store feeds the read-out's df COUNTS and
+      // docsStore feeds n_docs, so the keyed stores are what keep a
+      // replay from doubling both and shifting idf weights.
+      // round 17 (VERDICT r16 #1): the occurrence-store side of the
+      // candidate join is the in-session union, not a full parquet
+      // rescan per trigger; the batch side (and the df-count write
+      // below) reuse the read-back, so the tokenize+explode pass runs
+      // once per batch instead of three times
+      val (toksB, all) = stores.append(toks, store, bid)
+      val (_, dfAll) = stores.append(
+        toksB.groupBy(col("lang"), col("source"), col("w")).agg(count(lit(1)).as("cnt")),
+        dfStore, bid)
+      writeBatch(batch.select(col("lang"), col("source"), col("doc_id")), docsStore, bid)
+      // running df = summed per-batch counts (≡ counting the full
+      // occurrence store, at vocabulary- not occurrence-cost)
+      val banded = dfAll
+        .groupBy(col("lang"), col("source"), col("w"))
+        .agg(sum(col("cnt")).as("df"))
+        .filter(col("df") >= 2 && col("df") <= ceil)
+        .select(col("lang"), col("source"), col("w"))
+      val pairs = toksB.join(banded, Seq("lang", "source", "w"))
+        .select(col("lang"), col("source"), col("w"), col("doc_id").as("nid"))
+        .join(all.join(banded, Seq("lang", "source", "w"))
+          .select(col("lang"), col("source"), col("w"), col("doc_id").as("oid")),
+          Seq("lang", "source", "w"))
+        .filter(col("nid") =!= col("oid"))
+        .select(least(col("nid"), col("oid")).as("a_id"),
+          greatest(col("nid"), col("oid")).as("b_id"))
+        .distinct()
+      writeBatch(pairs, pairsOut, bid)
     }
     // read-out: the batch query's exact scoring, semi-joined to candidates
     // (batch= partition column dropped BEFORE distinct — a candidate
@@ -2086,14 +1893,17 @@ object StreamQueries {
       .orderBy("a_id", "b_id")
   }
 
+  /** Incremental-semdedup core behind `streaming_semdedup_keep`, srcDir
+    * and scratch tag injected so StreamingSemDedupSpec can feed it
+    * hash-INTERLEAVED files (smaller ids arriving in later batches) and
+    * assert the result still equals the batch [[graft.vec.VecOps
+    * .semDedupKeep]] — the order-independence proof for the pair-coverage
+    * argument above. */
   private[graft] def semdedupIncrementalRun(s: SparkSession, dir: String,
       srcDir: String, tag: String): DataFrame = {
     graft.functions.DotF32.register(s)
     val store = s"/dev/shm/graft-semdedup/store_$tag"
     val pairsOut = s"/dev/shm/graft-semdedup/pairs_$tag"
-    val ckpt = s"/dev/shm/graft-ckpt/semdedup_$tag"
-    rmrf(new java.io.File(store)); rmrf(new java.io.File(pairsOut))
-    rmrf(new java.io.File(ckpt))
     // hierarchical assignment index (round 12, mirroring the batch twin's
     // two-stage rule — the shared oracle demands identical cells): coarse
     // anchors + fine→coarse map derived ONCE from the shared centroid
@@ -2104,71 +1914,40 @@ object StreamQueries {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),
       StructField("label", IntegerType)))
-    val stream = s.readStream.schema(embSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts)
-    val acc = new BatchAcc
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch0: DataFrame, bid: Long) =>
-          val sp = batch0.sparkSession
-          // repartition to the drain width BEFORE the assignment maps:
-          // one file per trigger means the batch scan yields ~(file size /
-          // maxPartitionBytes) splits — 2 at the 1000× decade — and the
-          // broadcast-join dot-product stages (hierAssign's coarse cross
-          // + fine f2g join) inherit that width, so without this the
-          // screen's dominant stages run ~2-wide however many shuffle
-          // partitions the drain sets (measured: widening the shuffle
-          // alone moved 729 → 792 s @1000×; BASELINE.md round-16)
-          val batch = batch0.repartition(drainParts.toInt)
-          val assigned = graft.vec.VecOps.hierAssign(
-            batch.select(col("vec_id"), col("embedding")), idx)
-          // one part-file per batch: the store is re-read EVERY batch, so
-          // without this it accumulates (shuffle partitions × batches)
-          // tiny files and the read-back dominates the drain.
-          // batchId-keyed OVERWRITE (round 14, the dsir ADVICE r13 fix
-          // applied family-wide): the read-out `st` below emits one row
-          // per stored vector with no dedup, so an at-least-once replay
-          // of an un-keyed append would duplicate output rows; keying on
-          // batchId makes a replay replace its own earlier attempt.
-          // repartition(1), NOT coalesce(1) (round 16): coalesce is a
-          // NARROW transformation — it collapses the upstream shuffle
-          // stage itself to one task, so the assignment join (and below,
-          // the whole batch×store dot-product band) was running
-          // single-threaded however wide the drain; repartition keeps
-          // one file but puts a real exchange between the parallel work
-          // and the writer (measured 516 → 180 s @1000×, BASELINE.md
-          // round-16).
-          assigned.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$store/batch=$bid")
-          // round 17 (VERDICT r16 #1): store side = in-session union, not
-          // a full parquet rescan; batch side = the read-back, so
-          // hierAssign runs once per batch instead of twice
-          val (assignedB, all) = acc.add(sp, bid, s"$store/batch=$bid")
-          val pairs = assignedB.select(col("cid"), col("vec_id").as("nid"),
-              col("embedding").as("ne"))
-            .join(all.select(col("cid"), col("vec_id").as("oid"),
-              col("embedding").as("oe")), "cid")
-            .filter(col("nid") =!= col("oid"))
-            .withColumn("sim", expr("dot_f32(ne, oe)"))
-            .filter(col("sim") >= 0.45)
-            .select(greatest(col("nid"), col("oid")).as("vec_id"),
-              least(col("nid"), col("oid")).as("dup_cand"))
-          // pairs read-out min-aggregates (replay-duplicate-tolerant),
-          // but the same batchId keying keeps the sink uniformly
-          // idempotent; repartition(1) for the same narrow-collapse
-          // reason as the store write above
-          pairs.transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$pairsOut/batch=$bid")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      acc.close()
-      s.conf.set("spark.sql.shuffle.partitions", prev)
+    screen(fileStream(s, embSchema, srcDir), s"semdedup_$tag", Seq(store, pairsOut)) {
+      (batch0, bid, stores) =>
+        // repartition to the drain width BEFORE the assignment maps:
+        // one file per trigger means the batch scan yields ~(file size /
+        // maxPartitionBytes) splits — 2 at the 1000× decade — and the
+        // broadcast-join dot-product stages (hierAssign's coarse cross
+        // + fine f2g join) inherit that width, so without this the
+        // screen's dominant stages run ~2-wide however many shuffle
+        // partitions the drain sets (measured: widening the shuffle
+        // alone moved 729 → 792 s @1000×; BASELINE.md round-16)
+        val batch = batch0.repartition(drainParts)
+        val assigned = graft.vec.VecOps.hierAssign(
+          batch.select(col("vec_id"), col("embedding")), idx)
+        // the read-out `st` below emits one row per stored vector with
+        // no dedup, so the keyed store is what keeps a replay from
+        // duplicating output rows. Its one-file write puts a real
+        // exchange between the assignment join (and the batch×store
+        // dot-product band below) and the writer: coalesce(1) ran them
+        // single-threaded (measured 516 → 180 s @1000×, BASELINE.md
+        // round-16).
+        // round 17 (VERDICT r16 #1): store side = in-session union, not
+        // a full parquet rescan; batch side = the read-back, so
+        // hierAssign runs once per batch instead of twice
+        val (assignedB, all) = stores.append(assigned, store, bid)
+        val pairs = assignedB.select(col("cid"), col("vec_id").as("nid"),
+            col("embedding").as("ne"))
+          .join(all.select(col("cid"), col("vec_id").as("oid"),
+            col("embedding").as("oe")), "cid")
+          .filter(col("nid") =!= col("oid"))
+          .withColumn("sim", expr("dot_f32(ne, oe)"))
+          .filter(col("sim") >= 0.45)
+          .select(greatest(col("nid"), col("oid")).as("vec_id"),
+            least(col("nid"), col("oid")).as("dup_cand"))
+        writeBatch(pairs, pairsOut, bid)
     }
     val st = s.read.parquet(store).select(col("vec_id"), col("cid"))
     val d = s.read.parquet(pairsOut)
@@ -2196,57 +1975,32 @@ object StreamQueries {
       srcDir: String, tag: String): DataFrame = {
     val bStore = s"/dev/shm/graft-dsir/buckets_$tag"
     val dStore = s"/dev/shm/graft-dsir/docs_$tag"
-    val ckpt = s"/dev/shm/graft-ckpt/dsir_$tag"
-    rmrf(new java.io.File(bStore)); rmrf(new java.io.File(dStore))
-    rmrf(new java.io.File(ckpt))
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts)
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val sp = batch.sparkSession
-          val tok = batch.select(col("doc_id"), col("source"),
-              explode(graft.text.TextOps.tokens(col("text"))).as("w"))
-            .withColumn("b", graft.text.TextOps.hash60(col("w")) % 64)
-          // batchId-keyed OVERWRITE sinks (round 14, ADVICE r13):
-          // foreachBatch is at-least-once, and these counts are plain
-          // additive sums — a replayed micro-batch re-running an
-          // un-keyed append would double its bucket/doc counts and
-          // silently corrupt the screen. Keying each batch's output on
-          // its batchId and overwriting makes the sink idempotent: a
-          // replay replaces its own earlier attempt, never adds a
-          // second copy (the exactly-once foreachBatch sink contract).
-          // The batch= dirname is a partition column the read-out
-          // never selects.
-          // round 17: the doc store is written FIRST, carrying the doc's
-          // source (a doc has exactly one source, so the extra grouping
-          // column splits no group and the read-out's (doc_id) agg is
-          // unchanged); the bucket counts then derive from the written
-          // file's read-back, so the tokenize+explode pass runs once per
-          // batch instead of twice. cr = Σ doc counts ≡ the old token
-          // count(); ct's src0 sum defaults missing buckets to 0
-          // explicitly (sum over an empty when() is NULL where the old
-          // count() was 0, and the read-out's lr algebra needs the 0).
-          tok.groupBy(col("doc_id"), col("source"), col("b"))
-            .agg(count(lit(1)).as("cnt"))
-            .transform(oneFileStore).write.mode("overwrite").parquet(s"$dStore/batch=$bid")
-          sp.read.parquet(s"$dStore/batch=$bid")
-            .groupBy(col("b"))
-            .agg(sum(col("cnt")).as("cr"),
-              sum(when(col("source") === "src0", col("cnt")).otherwise(lit(0L))).as("ct"))
-            .transform(oneFileStore).write.mode("overwrite").parquet(s"$bStore/batch=$bid")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    screen(fileStream(s, docSchema, srcDir), s"dsir_$tag", Seq(bStore, dStore)) {
+      (batch, bid, _) =>
+        val tok = batch.select(col("doc_id"), col("source"),
+            explode(graft.text.TextOps.tokens(col("text"))).as("w"))
+          .withColumn("b", graft.text.TextOps.hash60(col("w")) % 64)
+        // these counts are plain additive sums, so the keyed stores are
+        // what keep a replayed micro-batch from doubling its bucket/doc
+        // counts. The batch= dirname is a partition column the read-out
+        // never selects.
+        // round 17: the doc store is written FIRST, carrying the doc's
+        // source (a doc has exactly one source, so the extra grouping
+        // column splits no group and the read-out's (doc_id) agg is
+        // unchanged); the bucket counts then derive from the written
+        // file's read-back, so the tokenize+explode pass runs once per
+        // batch instead of twice. cr = Σ doc counts ≡ the old token
+        // count(); ct's src0 sum defaults missing buckets to 0
+        // explicitly (sum over an empty when() is NULL where the old
+        // count() was 0, and the read-out's lr algebra needs the 0).
+        val docs = writeBatch(tok.groupBy(col("doc_id"), col("source"), col("b"))
+          .agg(count(lit(1)).as("cnt")), dStore, bid)
+        writeBatch(batch.sparkSession.read.parquet(docs)
+          .groupBy(col("b"))
+          .agg(sum(col("cnt")).as("cr"),
+            sum(when(col("source") === "src0", col("cnt")).otherwise(lit(0L))).as("ct")),
+          bStore, bid)
+    }
     val counts = s.read.parquet(bStore)
       .groupBy(col("b"))
       .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
@@ -2282,12 +2036,6 @@ object StreamQueries {
   private[graft] def decontamIncrementalRun(s: SparkSession, dir: String,
       srcDir: String, tag: String): DataFrame = {
     val hitStore = s"/dev/shm/graft-decon/hits_$tag"
-    val ckpt = s"/dev/shm/graft-ckpt/decon_$tag"
-    rmrf(new java.io.File(hitStore)); rmrf(new java.io.File(ckpt))
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
     // round 17: the eval index rides the session Shared registry — an
     // eval set is STATIC by definition (the screen's own design comment),
     // yet each bench rep re-derived the same shingle explode; the
@@ -2299,29 +2047,14 @@ object StreamQueries {
         .filter(col("source") === "src0")
         .select(col("doc_id"),
           explode(graft.text.TextOps.shingles(col("text"), 5)).as("g")))
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts)
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val bg = batch.filter(col("source") =!= "src0")
-            .select(explode(
-              graft.text.TextOps.shingles(col("text"), 5)).as("g"))
-            .distinct()
-          // batchId-keyed OVERWRITE (round 14): the monotone-union hit
-          // store is replay-tolerant (distinct at read-out), but the
-          // keyed sink keeps the incremental family uniformly idempotent
-          evalG.join(bg, Seq("g"), "left_semi")
-            .transform(oneFileStore).write.mode("overwrite")
-            .parquet(s"$hitStore/batch=$bid")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    screen(fileStream(s, docSchema, srcDir), s"decon_$tag", Seq(hitStore)) {
+      (batch, bid, _) =>
+        val bg = batch.filter(col("source") =!= "src0")
+          .select(explode(
+            graft.text.TextOps.shingles(col("text"), 5)).as("g"))
+          .distinct()
+        writeBatch(evalG.join(bg, Seq("g"), "left_semi"), hitStore, bid)
+    }
     val totals = evalG.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
     // batch= partition column dropped BEFORE distinct: a (doc, gram) hit
     // landed by two batches is ONE hit of the monotone union

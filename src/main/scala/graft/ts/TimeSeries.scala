@@ -1,7 +1,7 @@
 package graft.ts
 
 import graft.functions.ParamLiteral
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.catalyst.expressions.{Literal, TruncTimestamp}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,16 +46,22 @@ object TimeSeries {
   def candles(events: DataFrame, unit: String, seriesCol: String = "event_type",
               tsCol: String = "ts", valCol: String = "value"): DataFrame = {
     checkUnit(unit)
-    events
-      .groupBy(date_trunc(unit, col(tsCol)).as("bucket"), col(seriesCol).as("series"))
-      .agg(
-        min_by(col(valCol), col(tsCol)).as("open"),
-        max(col(valCol)).as("high"),
-        min(col(valCol)).as("low"),
-        max_by(col(valCol), col(tsCol)).as("close"),
-        sum(col(valCol)).as("volume"),
-        count(lit(1)).as("trades"))
+    ohlcv(events.groupBy(date_trunc(unit, col(tsCol)).as("bucket"), col(seriesCol).as("series")),
+      tsCol, valCol)
   }
+
+  /** The OHLCV candle aggregate over each group of `g`: open, high, low,
+    * close, volume, trades. The one definition behind the batch candles,
+    * [[candlesFixed]] and the streaming candle queries, so their plans
+    * stay the same. */
+  def ohlcv(g: RelationalGroupedDataset, tsCol: String = "ts", valCol: String = "value"): DataFrame =
+    g.agg(
+      min_by(col(valCol), col(tsCol)).as("open"),
+      max(col(valCol)).as("high"),
+      min(col(valCol)).as("low"),
+      max_by(col(valCol), col(tsCol)).as("close"),
+      sum(col(valCol)).as("volume"),
+      count(lit(1)).as("trades"))
 
   /** Fixed-width bucket start for widths date_trunc can't express (15 min,
     * 4 h, ...). Integer µs arithmetic — exact, no double rounding.
@@ -74,15 +80,8 @@ object TimeSeries {
   /** OHLCV candles at a fixed-width bucket of `seconds` (15 min etc.). */
   def candlesFixed(events: DataFrame, seconds: Long, seriesCol: String = "event_type",
                    tsCol: String = "ts", valCol: String = "value"): DataFrame =
-    events
-      .groupBy(bucketStart(col(tsCol), seconds).as("bucket"), col(seriesCol).as("series"))
-      .agg(
-        min_by(col(valCol), col(tsCol)).as("open"),
-        max(col(valCol)).as("high"),
-        min(col(valCol)).as("low"),
-        max_by(col(valCol), col(tsCol)).as("close"),
-        sum(col(valCol)).as("volume"),
-        count(lit(1)).as("trades"))
+    ohlcv(events.groupBy(bucketStart(col(tsCol), seconds).as("bucket"), col(seriesCol).as("series")),
+      tsCol, valCol)
 
   /** Hierarchical resample of candles to a coarser fixed-width bucket of
     * `seconds` (e.g. 4h = 14400). open = open of earliest child candle,

@@ -2095,12 +2095,10 @@ object TsQueries {
         // agg + windows re-ran per loop step (measured 8.2 s → ~1 s at
         // sf0.1 when this landed for the daily grain).
         // The whole recursion ALSO materializes under 4 shuffle
-        // partitions (drain()'s SEQUENTIAL CONTRACT — Verify/Bench run
-        // queries sequentially): loop steps over ≤150 rows at the
-        // session's 32 partitions is pure task-scheduling overhead.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
+        // partitions (Shared.withConf — Verify/Bench run queries
+        // sequentially): loop steps over ≤150 rows at the session's 32
+        // partitions is pure task-scheduling overhead.
+        graft.Shared.withConf(s, "spark.sql.shuffle.partitions" -> "4") {
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("event_type")).orderBy(col("d"))
           Tables(s, dir).events
@@ -2128,7 +2126,7 @@ object TsQueries {
               ON r.event_type = l.event_type AND r.rn = l.rn
           """).localCheckpoint(true)
             .orderBy("event_type", "week_start")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        }
       },
       Some("""
         WITH RECURSIVE

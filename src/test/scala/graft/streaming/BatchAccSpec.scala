@@ -56,4 +56,23 @@ class BatchAccSpec extends SparkSpec {
       "fold must preserve the exact accumulated content")
     acc.close()
   }
+
+  test("a replay of a batchId already folded throws instead of duplicating it") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_batchacc_fold_spec").toString
+    val acc = new StreamQueries.BatchAcc
+    try {
+      for (bid <- 0L to StreamQueries.BatchAcc.FoldAt.toLong)
+        acc.add(spark, bid, writeBatch(dir, bid, Seq(bid)))
+      // bid 0 now lives in the folded relation: re-adding it must not
+      // append a second copy next to the folded one
+      val e = intercept[IllegalStateException](
+        acc.add(spark, 0L, writeBatch(dir, 0L, Seq(0L))))
+      assert(e.getMessage.contains("batch 0"))
+      // the current (unfolded) batch still replays by replacement
+      val last = StreamQueries.BatchAcc.FoldAt.toLong
+      val (_, all) = acc.add(spark, last, writeBatch(dir, last, Seq(last)))
+      assert(all.count() == StreamQueries.BatchAcc.FoldAt + 1)
+    } finally acc.close()
+  }
 }
