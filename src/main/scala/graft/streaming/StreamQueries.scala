@@ -141,17 +141,25 @@ object StreamQueries {
   }
 
   /** Drains `df` into a memory sink under a fresh query name and returns
-    * the sink's table. The default trigger is the micro-batch trigger;
+    * the sink's rows. The default trigger is the micro-batch trigger;
     * Trigger.AvailableNow is the scheduled-incremental-job trigger, which
-    * paces itself through the input and ends on its own. */
+    * paces itself through the input and ends on its own.
+    *
+    * The memory sink registers its table as a temp view named after the
+    * query. The view is resolved into the returned frame and then
+    * dropped, also when the drain fails, so the session's catalog does
+    * not keep every drained result alive: the rows live as long as the
+    * returned frame does. */
   private def drain(df: DataFrame, mode: String, partitions: Int = 2,
       trigger: Trigger = Trigger.ProcessingTime(0L), rocksDb: Boolean = false): DataFrame = {
     val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
-    runStream(df, partitions,
-      s"$CkptRoot/${name}_${java.util.UUID.randomUUID().toString.take(8)}",
-      trigger = trigger, rocksDb = rocksDb)(
-      _.format("memory").queryName(name).outputMode(mode))
-    df.sparkSession.table(name)
+    try {
+      runStream(df, partitions,
+        s"$CkptRoot/${name}_${java.util.UUID.randomUUID().toString.take(8)}",
+        trigger = trigger, rocksDb = rocksDb)(
+        _.format("memory").queryName(name).outputMode(mode))
+      df.sparkSession.table(name)
+    } finally df.sparkSession.catalog.dropTempView(name)
   }
 
   /** Micro-batch parallelism of the sinks and the INCREMENTAL SCREENS (the

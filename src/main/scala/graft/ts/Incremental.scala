@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * replaces JUST those tail day-partitions via dynamic partition
   * overwrite. History partitions are never read or rewritten.
   *
-  * Scale notes: at 100 TB of candle history the per-tick cost is
-  * O(new data + one day of candles), not O(history) — the property the
+  * Scale notes: at 100 TB of candle history the store side of a tick
+  * costs O(one day of candles), not O(history) — the property the
   * incremental operator exists for. The high-water day is the newest
   * `pdate=YYYY-MM-DD` directory under the store that holds a data file,
   * found by listing the store root (and that one day directory) through
@@ -25,8 +25,13 @@ import org.apache.spark.sql.functions._
   * `to_date(max(bucket))` because `pdate = to_date(bucket)` under the
   * session time zone, which is pinned to UTC (build.sbt), so the day's
   * UTC midnight is `max(bucket)` truncated to the day. The incremental
-  * aggregation's `ts >= dayStart` filter is sargable and pushes to the
-  * parquet scan.
+  * aggregation's `ts >= dayStart` filter is listed in the events scan's
+  * `PushedFilters`, but on the fixtures here it skips no parquet row
+  * group: their `ts` is a local (NTZ) timestamp in one row group, and on
+  * the 100,000-row events table a day past that row group's max still
+  * reads all 100,000 rows, which the filter then drops. The events side
+  * of a tick is therefore a full scan of the events source; reading only
+  * new events needs a source laid out by time, such as day partitions.
   *
   * Only when no day directory qualifies does `update` read the store:
   * a missing store rebuilds, a readable store with zero rows (null
@@ -138,8 +143,8 @@ object Incremental {
       // drop every row): full rebuild
       case None => rebuild(events, storePath, unit)
       case Some(day) =>
-        // a literal UTC midnight keeps the comparison sargable (pushed to
-        // parquet row-group stats)
+        // a literal UTC midnight keeps the comparison a pushed scan
+        // filter (it prunes no row group of an NTZ `ts`; see above)
         val dayStart = java.sql.Timestamp.from(day.atStartOfDay(ZoneOffset.UTC).toInstant)
         val fresh = withPdate(TimeSeries.candles(
           events.filter(col("ts") >= lit(dayStart)), unit))

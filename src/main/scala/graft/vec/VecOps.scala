@@ -28,14 +28,27 @@ object VecOps {
       lit(0.0),
       (s, x) => s + x)
 
-  /** All-pairs scores (qid ≠ nid). Quadratic — baseline only. The stream
-    * side is repartitioned first: the fixture arrives as one parquet
-    * split, and an unrepartitioned nested-loop join would score all n²
-    * pairs on a single core. */
+  /** The query side of a pair-scoring stage, hash-partitioned by `qid`
+    * into `spark.sql.shuffle.partitions` parts. The embeddings fixture is
+    * one parquet split, so without it every pair is scored in one task.
+    * The count is explicit because AQE may coalesce a shuffle whose count
+    * it chooses (the LSH query side's 2,000 vectors, about 0.5 MB, fold
+    * into one partition), but never a count-pinned one
+    * (REPARTITION_BY_NUM). With the corpus side broadcast, the join keeps
+    * this partitioning, so the per-qid cut after it adds no exchange. A
+    * corpus past the broadcast threshold makes the join shuffle both
+    * sides by its key, and then this exchange is one extra pass over the
+    * query side. */
+  private def spreadQueries(q: DataFrame): DataFrame =
+    q.repartition(q.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col("qid"))
+
+  /** All-pairs scores (qid ≠ nid). Quadratic — baseline only. The query
+    * side is spread over the session's shuffle width ([[spreadQueries]])
+    * and the corpus side broadcast into the nested-loop join, so the n²
+    * pairs are scored on every core. */
   def bruteForceScores(emb: DataFrame): DataFrame = {
     graft.functions.DotF32.register(emb.sparkSession)
-    val q = emb.select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      .repartition(col("qid"))
+    val q = spreadQueries(emb.select(col("vec_id").as("qid"), col("embedding").as("qe")))
     val n = emb.select(col("vec_id").as("nid"), col("embedding").as("ne"))
     q.crossJoin(n).filter(col("qid") =!= col("nid"))
       .withColumn("score", expr("dot_f32(qe, ne)"))
@@ -275,7 +288,7 @@ object VecOps {
   def annLshTopK(emb: DataFrame, planes: Int, k: Int): DataFrame = {
     graft.functions.DotF32.register(emb.sparkSession)
     val b = lshBucket(emb, planes)
-    val q = b.select(col("vec_id").as("qid"), col("embedding").as("qe"), col("bucket"))
+    val q = spreadQueries(b.select(col("vec_id").as("qid"), col("embedding").as("qe"), col("bucket")))
     val n = b.select(col("vec_id").as("nid"), col("embedding").as("ne"), col("bucket"))
     val scores = q.join(n, "bucket").filter(col("qid") =!= col("nid"))
       .withColumn("score", expr("dot_f32(qe, ne)"))

@@ -8,6 +8,17 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  /** Runs `body` with a fresh checkpoint path for a streaming query the
+    * test starts itself, `/dev/shm/graft-ckpt/<prefix>_<8 hex>`, and
+    * deletes that directory once `body` returns or throws: the root is
+    * RAM-backed tmpfs that outlives the test JVM. */
+  def withCheckpoint[T](prefix: String)(body: String => T): T = {
+    val dir = new java.io.File(
+      s"/dev/shm/graft-ckpt/${prefix}_${java.util.UUID.randomUUID().toString.take(8)}")
+    try body(dir.getPath)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir): Unit
+  }
 }
 
 object SparkSpec {

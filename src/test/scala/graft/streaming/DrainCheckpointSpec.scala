@@ -12,7 +12,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
 /** A memory-sink drain gets a fresh checkpoint under /dev/shm/graft-ckpt
   * (RAM-backed) per call; the sink cannot recover from it, so the drain
   * must delete it once its query stops, or the host keeps one directory
-  * per drain. The query is found by name and its checkpoint by the path
+  * per drain. Likewise the sink's temp view must go, or the session keeps
+  * every drained result. The query is found by name and its checkpoint by the path
   * the started query resolved, not by counting the directory, so other
   * runs sharing the root (and their leftovers) do not matter. */
 class DrainCheckpointSpec extends SparkSpec {
@@ -44,5 +45,17 @@ class DrainCheckpointSpec extends SparkSpec {
     assert(ckpt.getParent == "/dev/shm/graft-ckpt" && ckpt.getName.startsWith(name + "_"),
       s"drain $name checkpointed at $root")
     assert(!ckpt.exists(), s"drain $name left its checkpoint $ckpt behind")
+  }
+
+  test("a memory-sink drain drops its sink view; the returned frame still reads its rows") {
+    val dir = sf("sf0.001")
+    val df = graft.SparkEntry.queries("streaming_running_counts")(spark, dir)
+    val views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_sink_"))
+    assert(views.isEmpty, s"drain left sink views: ${views.mkString(", ")}")
+    val batch = graft.Tables(spark, dir).events.groupBy("user_id").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.nonEmpty && got == batch)
   }
 }

@@ -17,34 +17,35 @@ class StreamingDedupSpec extends SparkSpec {
     java.sql.Timestamp.valueOf(s).getTime * 1000L
 
   test("within-watermark dup dropped; post-expiry dup re-emitted") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Long)] // (id, epoch micros)
-    val deduped = input.toDF().toDF("id", "us")
-      .withColumn("ts", timestamp_micros(col("us")))
-      .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("id")
-    val q = deduped.writeStream.format("memory").queryName("wm_dedup")
-      .outputMode("append")
-      .option("checkpointLocation",
-        s"/dev/shm/graft-ckpt/wmdedup_${java.util.UUID.randomUUID().toString.take(8)}")
-      .start()
-    try {
-      // batch 1: id=1 twice within the delay → second dropped
-      input.addData((1L, us("2024-01-01 10:00:00")), (1L, us("2024-01-01 10:01:00")))
-      q.processAllAvailable()
-      // batch 2: watermark advances to 10:50 → id=1 state (expires
-      // 10:10) is evicted
-      input.addData((2L, us("2024-01-01 11:00:00")))
-      q.processAllAvailable()
-      // batch 3: id=1 again, after expiry → re-emitted
-      input.addData((1L, us("2024-01-01 11:05:00")))
-      q.processAllAvailable()
-    } finally q.stop()
+    withCheckpoint("wmdedup") { ckpt =>
+      implicit val sqlCtx = spark.sqlContext
+      val input = MemoryStream[(Long, Long)] // (id, epoch micros)
+      val deduped = input.toDF().toDF("id", "us")
+        .withColumn("ts", timestamp_micros(col("us")))
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark("id")
+      val q = deduped.writeStream.format("memory").queryName("wm_dedup")
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .start()
+      try {
+        // batch 1: id=1 twice within the delay → second dropped
+        input.addData((1L, us("2024-01-01 10:00:00")), (1L, us("2024-01-01 10:01:00")))
+        q.processAllAvailable()
+        // batch 2: watermark advances to 10:50 → id=1 state (expires
+        // 10:10) is evicted
+        input.addData((2L, us("2024-01-01 11:00:00")))
+        q.processAllAvailable()
+        // batch 3: id=1 again, after expiry → re-emitted
+        input.addData((1L, us("2024-01-01 11:05:00")))
+        q.processAllAvailable()
+      } finally q.stop()
 
-    val got = spark.table("wm_dedup")
-      .select(col("id"), date_format(col("ts"), "HH:mm").as("t"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got == Set((1L, "10:00"), (2L, "11:00"), (1L, "11:05")), got.toString)
+      val got = spark.table("wm_dedup")
+        .select(col("id"), date_format(col("ts"), "HH:mm").as("t"))
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(got == Set((1L, "10:00"), (2L, "11:00"), (1L, "11:05")), got.toString)
+    }
   }
 
   test("streaming sliding candles equal the batch sliding aggregation") {
