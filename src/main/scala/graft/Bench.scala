@@ -69,7 +69,11 @@ object Bench {
     // MEDIAN of 3 — a single control run is itself subject to the
     // transient bursts it is supposed to measure (a first reading of
     // 4.8 s against a 1.75 s reference was observed minutes from a
-    // 1.5 s one).
+    // 1.5 s one). The drain control got cheaper when drains stopped
+    // forking a process per checkpoint file and started returning one
+    // partition (BASELINE.md, "Drain floor"), so cal2 readings from
+    // before and after that change are not comparable; cal2QuietRefS
+    // still holds the earlier reference.
     val calName = "boilerplate_ngram_ratio"
     val calQuietRefS = 1.75
     val cal2Name = "streaming_running_counts"

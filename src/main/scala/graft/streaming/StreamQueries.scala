@@ -101,6 +101,13 @@ object StreamQueries {
     * from a checkpoint (the memory sink cannot), so one left behind is
     * only tmpfs held for the life of the host.
     *
+    * Checkpoint files: the query's offset, commit and source logs and its
+    * state-store files go through [[LocalCheckpointFileManager]], which
+    * starts no `chmod` or `readlink` process per file. That is safe here
+    * because every checkpoint is per-invocation tmpfs, deleted on stop,
+    * so no other process or host reads it, and a POSIX rename within one
+    * directory is atomic, which is all `createAtomic` needs.
+    *
     * Width: state-store instance count = shuffle partitions at query
     * start, and per-partition commit overhead dominates a small finite
     * drain, so `partitions` is set for the query's life and restored
@@ -124,7 +131,9 @@ object StreamQueries {
       rocksDb: Boolean = false)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
     (ckpt +: scratch).foreach(p => rmrf(new java.io.File(p)))
-    val confs = Seq("spark.sql.shuffle.partitions" -> partitions.toString) ++
+    val confs = Seq("spark.sql.shuffle.partitions" -> partitions.toString,
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[LocalCheckpointFileManager].getName) ++
       (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       else Nil)
@@ -149,8 +158,13 @@ object StreamQueries {
     * query. The view is resolved into the returned frame and then
     * dropped, also when the drain fails, so the session's catalog does
     * not keep every drained result alive: the rows live as long as the
-    * returned frame does. */
-  private def drain(df: DataFrame, mode: String, partitions: Int = 2,
+    * returned frame does.
+    *
+    * The rows come back as one partition. They already sit in driver
+    * memory, and split over the session's default parallelism every
+    * post-drain aggregate or sort would pay a shuffle (and a sort its
+    * range-sampling job) to bring them back together. */
+  private[streaming] def drain(df: DataFrame, mode: String, partitions: Int = 2,
       trigger: Trigger = Trigger.ProcessingTime(0L), rocksDb: Boolean = false): DataFrame = {
     val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
     try {
@@ -158,7 +172,7 @@ object StreamQueries {
         s"$CkptRoot/${name}_${java.util.UUID.randomUUID().toString.take(8)}",
         trigger = trigger, rocksDb = rocksDb)(
         _.format("memory").queryName(name).outputMode(mode))
-      df.sparkSession.table(name)
+      df.sparkSession.table(name).coalesce(1)
     } finally df.sparkSession.catalog.dropTempView(name)
   }
 

@@ -27,8 +27,11 @@ import org.apache.spark.sql.functions._
   * UTC midnight is `max(bucket)` truncated to the day. The incremental
   * aggregation's `ts >= dayStart` filter is listed in the events scan's
   * `PushedFilters`, but on the fixtures here it skips no parquet row
-  * group: their `ts` is a local (NTZ) timestamp in one row group, and on
-  * the 100,000-row events table a day past that row group's max still
+  * group. Their `ts` is a local (NTZ) timestamp, an INT64 annotated
+  * `isAdjustedToUTC = false`, and Spark 4.1's `ParquetFilters` builds a
+  * parquet-mr predicate for an INT64 timestamp only when it is annotated
+  * `isAdjustedToUTC = true`. So no row-group statistics are consulted:
+  * on the 100,000-row events table a day past its row group's max still
   * reads all 100,000 rows, which the filter then drops. The events side
   * of a tick is therefore a full scan of the events source; reading only
   * new events needs a source laid out by time, such as day partitions.
