@@ -71,9 +71,11 @@ object Bench {
     // 4.8 s against a 1.75 s reference was observed minutes from a
     // 1.5 s one). The drain control got cheaper when drains stopped
     // forking a process per checkpoint file and started returning one
-    // partition (BASELINE.md, "Drain floor"), so cal2 readings from
-    // before and after that change are not comparable; cal2QuietRefS
-    // still holds the earlier reference.
+    // partition (BASELINE.md, "Drain floor"), and again when drains
+    // stopped recompiling their micro-batch code in every cloned session
+    // (BASELINE.md, "Drain codegen scope"), so cal2 readings from before
+    // and after either change are not comparable; cal2QuietRefS still
+    // holds the earliest reference.
     val calName = "boilerplate_ngram_ratio"
     val calQuietRefS = 1.75
     val cal2Name = "streaming_running_counts"

@@ -72,9 +72,13 @@ object Shared {
   /** Runs `body` with the session confs `kvs` set, restoring each one's
     * previous value (or unsetting it) afterwards. The confs are session-
     * wide for the duration, so callers share the streaming runner's
-    * SEQUENTIAL CONTRACT (graft.streaming.StreamQueries.runStream). */
+    * SEQUENTIAL CONTRACT (graft.streaming.StreamQueries.runStream).
+    * The previous value is the session's own setting (`getAll`), not
+    * `getOption`, which reads a registered conf's default when it is
+    * unset and would leave that default set. */
   def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val set = spark.conf.getAll
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prev.foreach {

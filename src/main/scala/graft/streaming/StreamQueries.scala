@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.Reg
 import graft.ts.TimeSeries.ohlcv
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -108,6 +109,24 @@ object StreamQueries {
     * so no other process or host reads it, and a POSIX rename within one
     * directory is atomic, which is all `createAtomic` needs.
     *
+    * Compiled code: the query runs in a clone of `df`'s session, copied
+    * at `start()`, and the clone is started with artifact isolation off
+    * (`spark.sql.artifact.isolation.enabled`). Spark's codegen cache is
+    * keyed by the task's class loader, and an isolated session's tasks
+    * get a class loader of their own on the executors, so every drain
+    * would compile its micro-batch classes again (13 for
+    * `streaming_running_counts`' drain), and the JIT would warm each
+    * copy again. With isolation off, the clone's tasks run in the
+    * executors' default class loader and reuse the code earlier drains
+    * compiled, in any session of the JVM. That is safe
+    * because the engine adds no artifacts: its classes are on the
+    * application class path, which every loader sees. A session that has
+    * added jars, classes or files of its own keeps isolation, so its
+    * stream still sees them. The parent session is not changed: its own
+    * artifact state is fixed when its artifact manager is built, at the
+    * latest by the guard's read before the conf is set, and the conf is
+    * restored on return.
+    *
     * Width: state-store instance count = shuffle partitions at query
     * start, and per-partition commit overhead dominates a small finite
     * drain, so `partitions` is set for the query's life and restored
@@ -126,18 +145,24 @@ object StreamQueries {
     * Verify and Bench both run queries strictly sequentially. A service
     * embedding these ops concurrently should isolate each drain on
     * `spark.newSession()` (cheap: shares the SparkContext, forks conf). */
-  private def runStream(df: DataFrame, partitions: Int, ckpt: String,
+  private[streaming] def runStream(df: DataFrame, partitions: Int, ckpt: String,
       scratch: Seq[String] = Nil, trigger: Trigger = Trigger.ProcessingTime(0L),
       rocksDb: Boolean = false)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
     (ckpt +: scratch).foreach(p => rmrf(new java.io.File(p)))
+    val session = df.sparkSession
+    // read before the opt-out below is set on `session`: the read builds
+    // the session's artifact manager if nothing has yet, which fixes the
+    // session's own artifact state from its conf
+    val ownArtifacts = GraftShim.sessionArtifactAdded(session)
     val confs = Seq("spark.sql.shuffle.partitions" -> partitions.toString,
       "spark.sql.streaming.checkpointFileManagerClass" ->
         classOf[LocalCheckpointFileManager].getName) ++
       (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else Nil)
-    graft.Shared.withConf(df.sparkSession, confs: _*) {
+      else Nil) ++
+      (if (ownArtifacts) Nil else Seq("spark.sql.artifact.isolation.enabled" -> "false"))
+    graft.Shared.withConf(session, confs: _*) {
       try {
         val q = sink(df.writeStream).option("checkpointLocation", ckpt).trigger(trigger).start()
         try {

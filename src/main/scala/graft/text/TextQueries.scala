@@ -2379,11 +2379,13 @@ object TextQueries {
           .withColumn("sy", expr("aggregate(arr, CAST(0 AS DOUBLE), (a, s) -> a + s.y)"))
           .withColumn("sxy", expr("aggregate(arr, CAST(0 AS DOUBLE), (a, s) -> a + s.x * s.y)"))
           .withColumn("sxx", expr("aggregate(arr, CAST(0 AS DOUBLE), (a, s) -> a + s.x * s.x)"))
+          // try_divide: an empty corpus (n = 0) gives NULLs, as DuckDB's
+          // x / 0 does, where ANSI `/` throws
           .select(col("n"),
-            round((col("n") * col("sxy") - col("sx") * col("sy")) /
-              (col("n") * col("sxx") - col("sx") * col("sx")), 6).as("zipf_slope"),
-            round((col("sy") - ((col("n") * col("sxy") - col("sx") * col("sy")) /
-              (col("n") * col("sxx") - col("sx") * col("sx"))) * col("sx")) / col("n"), 6)
+            round(try_divide(col("n") * col("sxy") - col("sx") * col("sy"),
+              col("n") * col("sxx") - col("sx") * col("sx")), 6).as("zipf_slope"),
+            round(try_divide(col("sy") - try_divide(col("n") * col("sxy") - col("sx") * col("sy"),
+              col("n") * col("sxx") - col("sx") * col("sx")) * col("sx"), col("n")), 6)
               .as("intercept"))
       },
       Some("""

@@ -743,10 +743,17 @@ object TsQueries {
         // lands mid-day, so update() replaces a PARTIAL day plus full
         // tail days — the interesting lifecycle shape
         val hi = ev.agg(max(col("ts"))).head().getTimestamp(0)
-        val split = new java.sql.Timestamp(hi.getTime - 3L * 86400 * 1000)
-        Incremental.update(s, ev.filter(col("ts") < lit(split)), store.toString)
-        Incremental.update(s, ev, store.toString)
-        s.read.parquet(store.toString)
+        val candles =
+          // no events: no max(ts) to split at, and a store built from no
+          // rows holds no file to read back; its candles are none
+          if (hi == null) TimeSeries.candles(ev, "hour")
+          else {
+            val split = new java.sql.Timestamp(hi.getTime - 3L * 86400 * 1000)
+            Incremental.update(s, ev.filter(col("ts") < lit(split)), store.toString)
+            Incremental.update(s, ev, store.toString)
+            s.read.parquet(store.toString)
+          }
+        candles
           .select(date_format(col("bucket"), fmt).as("bucket"),
             col("series").as("event_type"),
             col("open"), col("high"), col("low"), col("close"),
@@ -781,12 +788,15 @@ object TsQueries {
     Reg("merge_upsert_candles",
       (s, dir) => {
         val ev = Tables(s, dir).events
+        // a NULL max(ts) (no events) or max(bucket) (no base) stays NULL,
+        // as the oracle's split and d0 do: every comparison with it is
+        // NULL, so base, delta and the merge come out empty
         val hi = ev.agg(max(col("ts"))).head().getTimestamp(0)
-        val split = new java.sql.Timestamp(hi.getTime - 3L * 86400 * 1000)
+        val split = Option(hi).map(t => new java.sql.Timestamp(t.getTime - 3L * 86400 * 1000)).orNull
         val base = TimeSeries.candles(ev.filter(col("ts") < lit(split)), "hour")
         val mark = base.agg(max(col("bucket"))).head().getTimestamp(0)
-        val dayStart = java.sql.Timestamp.from(
-          mark.toInstant.truncatedTo(java.time.temporal.ChronoUnit.DAYS))
+        val dayStart = Option(mark).map(m => java.sql.Timestamp.from(
+          m.toInstant.truncatedTo(java.time.temporal.ChronoUnit.DAYS))).orNull
         val delta = TimeSeries.candles(
           ev.filter(col("ts") >= lit(dayStart)), "hour")
         Incremental.merge(base, delta, dayStart)
