@@ -27,6 +27,33 @@ import org.apache.spark.sql.functions._
   * occupancy held ≈constant → ≈linear): the knob IS the scale story.
   */
 object ScaleDemo {
+  /** The scale demos' local session: 32 cores, 32 shuffle partitions,
+    * UTC, spill under /dev/shm; `conf` adds per-demo settings. */
+  private[graft] def session(conf: (String, String)*): SparkSession = {
+    val b = SparkSession.builder()
+      .master("local[32]")
+      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.local.dir", "/dev/shm/graft-spark")
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Runs `f` `reps` times and prints the median wall time (with 3 reps,
+    * rep 1 warms and the reported value is the middle one) and rep 1's
+    * row count. */
+  private[graft] def time(tag: String, reps: Int = 3)(f: => Long): Unit = {
+    val runs = (1 to reps).map { _ =>
+      val t0 = System.nanoTime(); val n = f
+      ((System.nanoTime() - t0) / 1e9, n)
+    }
+    val mid = runs.map(_._1).sorted.apply(runs.size / 2)
+    println(f"[scale] $tag%-44s ${mid}%8.2f s   rows=${runs.head._2}")
+  }
+
   private[graft] def md5Bit(s: String): Boolean = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val hex = md.digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
@@ -136,36 +163,19 @@ object ScaleDemo {
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/dev/shm/graft-scale10x"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     buildCore(spark, base, out, 10)
     buildStar(spark, base, out, 10)
-
-    def time(tag: String, f: => Long): Unit = {
-      // rep 1 warms, reps 2-3 measure; report the median-like mid value
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); val n = f
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      val mid = runs.map(_._1).sorted.apply(1)
-      println(f"[scale] $tag%-38s ${mid}%8.2f s   rows=${runs.head._2}")
-    }
 
     val headline = Seq("candles_1h", "asof_bucketed_global_click",
       "neardup_minhash_lsh", "ann_lsh_topk", "decontamination_bloom")
     for (dir <- Seq(base, out); q <- headline)
-      time(s"$q @ ${if (dir == base) "1x" else "10x"}",
+      time(s"$q @ ${if (dir == base) "1x" else "10x"}")(
         SparkEntry.queries(q)(spark, dir).count())
     // the LSH sizing knob at 10×: planes scaled 4 → 8 holds per-bucket
     // occupancy ≈ constant (buckets 16 → 256 for 10× rows)
     for ((dir, tag) <- Seq((base, "1x"), (out, "10x")))
-      time(s"annLshTopK planes=8 @ $tag",
+      time(s"annLshTopK planes=8 @ $tag")(
         graft.vec.VecOps.annLshTopK(Tables(spark, dir).embeddings,
           planes = 8, k = 3).count())
     // round-8 operators: graph (pagerank — 10 disjoint subgraphs, joins
@@ -173,24 +183,23 @@ object ScaleDemo {
     // Matryoshka prefix-LSH with the same fixed-vs-scaled-planes story
     for ((dir, tag) <- Seq((base, "1x"), (out, "10x"));
          q <- Seq("pagerank_3iter", "editdist1_pairs", "cms_heavy_hitters"))
-      time(s"$q @ $tag", SparkEntry.queries(q)(spark, dir).count())
+      time(s"$q @ $tag")(SparkEntry.queries(q)(spark, dir).count())
     for ((dir, tag) <- Seq((base, "1x"), (out, "10x")))
-      time(s"matryoshka planes=4 @ $tag",
+      time(s"matryoshka planes=4 @ $tag")(
         graft.vec.VecOps.matryoshkaTopK(Tables(spark, dir).embeddings,
           planes = 4, mDims = 16, shortlist = 8, k = 3).count())
-    time("matryoshka planes=7 @ 10x",
+    time("matryoshka planes=7 @ 10x")(
       graft.vec.VecOps.matryoshkaTopK(Tables(spark, out).embeddings,
         planes = 7, mDims = 16, shortlist = 8, k = 3).count())
     // round-9: the two de-weakened dedup operators (VERDICT r8). The df
     // CEILING bounds jaccard's self-join fan-out at C² per (block, gram);
     // semdedup's k now scales with the corpus (k = ceil(n/128): 16 @ 1x,
     // 157 @ 10x here), holding E[cell] ≈ constant so the within-cluster
-    // pair join stays linear. The fixed-k contrast row replays the r8
-    // defect — k pinned at 16 while the corpus decades, Σ cell² → n²/16
-    // — the same fixed-vs-scaled-knob story as the 4-vs-8-plane LSH rows.
+    // pair join stays linear (the retired fixed-k=16 row's readings stay
+    // in BASELINE.md).
     for ((dir, tag) <- Seq((base, "1x"), (out, "10x"));
          q <- Seq("jaccard_bigram_pairs", "semdedup_keep"))
-      time(s"$q @ $tag", SparkEntry.queries(q)(spark, dir).count())
+      time(s"$q @ $tag")(SparkEntry.queries(q)(spark, dir).count())
     // round-9 operators: the distributed two-level prefix sum under
     // seq_packing (level 1 parallel per block, level 2 one row per
     // block), synchronous LPA (same linear-per-iteration join shape as
@@ -201,7 +210,7 @@ object ScaleDemo {
     for ((dir, tag) <- Seq((base, "1x"), (out, "10x"));
          q <- Seq("seq_packing", "label_prop_3iter",
            "streaming_event_seq_cep", "event_seq_regex"))
-      time(s"$q @ $tag", SparkEntry.queries(q)(spark, dir).count())
+      time(s"$q @ $tag")(SparkEntry.queries(q)(spark, dir).count())
     // round-9 close: prefix-filtered exact Jaccard (the 10× corpus also
     // 10×es the VOCABULARY — per-copy word suffixes make the copies'
     // shingle spaces disjoint, so prefix candidates never cross copies
@@ -214,14 +223,7 @@ object ScaleDemo {
     for ((dir, tag) <- Seq((base, "1x"), (out, "10x"));
          q <- Seq("jaccard_prefix_join", "interval_overlap_join",
            "bellman_ford_3"))
-      time(s"$q @ $tag", SparkEntry.queries(q)(spark, dir).count())
-    time("semdedup fixed k=16 @ 10x", {
-      val emb = Tables(spark, out).embeddings
-      var cent = graft.vec.VecOps.seedCentroids(emb, 16)
-      for (_ <- 0 until 2)
-        cent = graft.vec.VecOps.lloydStep(emb, cent, snap = true)
-      graft.vec.VecOps.semDedupKeep(emb, cent, tau = 0.45).count()
-    })
+      time(s"$q @ $tag")(SparkEntry.queries(q)(spark, dir).count())
     // round-9 continuation: k-core peeling and item-item CF share the
     // basket-keyed co-purchase self-join (Σ basket², linear in baskets;
     // 10 disjoint subgraphs at 10× — and kcore's DATA-DERIVED k holds
@@ -234,7 +236,7 @@ object ScaleDemo {
     for ((dir, tag) <- Seq((base, "1x"), (out, "10x"));
          q <- Seq("kcore_3", "copurchase_cosine", "bpe_learn_merges",
            "streaming_pareto_frontier"))
-      time(s"$q @ $tag", SparkEntry.queries(q)(spark, dir).count())
+      time(s"$q @ $tag")(SparkEntry.queries(q)(spark, dir).count())
     // round-10 operators: BM25 (one token agg + broadcast df sides — the
     // suffixed copies 10× the vocabulary, so the corpus stats decade
     // while the query-term postings stay copy-0-sized); bigram-LM
@@ -248,7 +250,7 @@ object ScaleDemo {
     for ((dir, tag) <- Seq((base, "1x"), (out, "10x"));
          q <- Seq("bm25_topk_docs", "lm_perplexity_score",
            "tdigest_clusters", "weighted_sample_aes"))
-      time(s"$q @ $tag", SparkEntry.queries(q)(spark, dir).count())
+      time(s"$q @ $tag")(SparkEntry.queries(q)(spark, dir).count())
     // round-10 close: hybrid retrieval (bounded-candidate RRF — both
     // arms truncate to top-50 BEFORE fusion, so the fuse is flat by
     // construction and only the arm scans scale), Viterbi segmentation
@@ -260,7 +262,7 @@ object ScaleDemo {
     for ((dir, tag) <- Seq((base, "1x"), (out, "10x"));
          q <- Seq("hybrid_bm25_vec_rrf", "unigram_viterbi_segment",
            "feature_hashing_vec", "mann_whitney_u"))
-      time(s"$q @ $tag", SparkEntry.queries(q)(spark, dir).count())
+      time(s"$q @ $tag")(SparkEntry.queries(q)(spark, dir).count())
     // round-10 continuation: survival analysis (two linear per-user aggs
     // + a ≤ 49-row risk table — the window cost is DOMAIN-bounded, so
     // 10× users only scale the aggs); KS (distinct-CENTS window: the
@@ -278,7 +280,7 @@ object ScaleDemo {
            "hits_hubs_authorities", "silhouette_simplified",
            "seasonal_decompose_hourly", "word_burstiness",
            "seq_pattern_support", "forecast_hw_mae", "psi_value_drift"))
-      time(s"$q @ $tag", SparkEntry.queries(q)(spark, dir).count())
+      time(s"$q @ $tag")(SparkEntry.queries(q)(spark, dir).count())
     // round-11 operators: the correlation trio's new members (day-grain
     // aggs linear; spearman's rank windows walk the calendar spine; the
     // kendall row OBSERVES the documented O(d²)-in-DAYS cost — the
@@ -296,7 +298,7 @@ object ScaleDemo {
            "adamic_adar_links", "heavy_hitters_mg_verified",
            "local_clustering_coeff", "degree_assortativity",
            "good_turing_counts"))
-      time(s"$q @ $tag", SparkEntry.queries(q)(spark, dir).count())
+      time(s"$q @ $tag")(SparkEntry.queries(q)(spark, dir).count())
     spark.stop()
   }
 }
@@ -313,39 +315,25 @@ object ScaleDemo {
   * is the blowup's magnitude, not a tight median):
   *  - LSH planes pinned at 4 while the corpus 100×es (bucket count
   *    constant → occupancy ×100 → in-bucket join ×10⁴);
-  *  - SemDeDup k pinned at 16 (cells ×100 → Σ cell² ×100 vs k ∝ n flat);
   *  - phash Hamming chunks pinned at 8 bits (256 buckets per chunk
   *    position can't absorb a 100× corpus — the production escalation is
   *    wider chunks on a wider fingerprint, here demoed as 2×16-bit
   *    chunks at hd ≤ 1 on the same 32-bit hash: bucket count ×256).
+  * The retired flat-IVF, flat-Lloyd and fixed-k SemDeDup contrast rows'
+  * readings stay in BASELINE.md.
   */
 object ScaleDemo100 {
+  import ScaleDemo.{session, time}
+
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out10 = if (args.length > 1) args(1) else "/dev/shm/graft-scale10x"
     val out100 = if (args.length > 2) args(2) else "/dev/shm/graft-scale100x"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     ScaleDemo.buildCore(spark, base, out10, 10)
     ScaleDemo.buildStar(spark, base, out10, 10)
     ScaleDemo.buildCore(spark, base, out100, 100)
     ScaleDemo.buildStar(spark, base, out100, 100)
-
-    def timeN(tag: String, reps: Int)(f: => Long): Unit = {
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime(); val n = f
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      val mid = runs.map(_._1).sorted.apply(runs.size / 2)
-      println(f"[scale] $tag%-44s ${mid}%8.2f s   rows=${runs.head._2}")
-    }
-    def time(tag: String)(f: => Long): Unit = timeN(tag, 3)(f)
 
     val decades = Seq((base, "1x"), (out10, "10x"), (out100, "100x"))
     // resume support: skip already-recorded rows after a partial run
@@ -396,54 +384,32 @@ object ScaleDemo100 {
          if !skip(s"$q@$tag"))
       time(s"$q @ $tag")(SparkEntry.queries(q)(spark, dir).count())
     // round-13 rung, round-16 re-platform (VERDICT r15 #1): the graded
-    // ann_ivfpq_topk is now the HIERARCHICAL residual search at the wide
-    // fprobes = 3 dial — decade rows below measure that production form.
-    // The retired fixed-lists=16 knob lives ONLY here as the priced
-    // contrast (its probed-cell candidate join is 2n·(n/lists) — the
-    // documented fixed-knob IVF quadratic; it stops at 10× like
-    // mm_phash). The lists=160 (∝ n) flat row keeps the middle rung of
-    // that ladder measured: scaled lists fix the candidate join but
-    // leave the O(n·k) broadcast-argmax coarse assignment, whose 100×
-    // refusal arithmetic (1600 × 508 k ≈ 8×10⁸ window rows ≈ 450 GB
-    // shuffled) is the reading that motivates the hier quantizer.
-    // (raw pipeline + routing-cache clear per rep — the refine-row
-    // discipline: the graded query reads a session-shared relation and
-    // the memoized routing table, either of which would make reps 2-3
-    // time a cache read)
+    // ann_ivfpq_topk is the HIERARCHICAL residual search at the wide
+    // fprobes = 3 dial — decade rows below measure that production form
+    // (the retired fixed-lists flat contrast rows' readings stay in
+    // BASELINE.md). Raw pipeline with a fresh routing table per rep —
+    // the refine-row discipline: the graded query reads a session-shared
+    // relation and the session's routing table, either of which would
+    // make reps 2-3 time a cache read.
     for ((dir, tag) <- decades if !skip(s"annIvfpqHierF3@$tag"))
       time(s"ann_ivfpq_topk hier f3 @ $tag")({
-        graft.vec.VecOps.clearRoutingCache()
         val emb = Tables(spark, dir).embeddings
         graft.vec.VecOps.ivfPqHierTopK(emb,
           graft.vec.VecOps.lloyd2CentroidsShared(emb, dir),
-          fprobes = 3, k = 3).count()
+          graft.vec.VecOps.hierRouting(emb,
+            graft.vec.VecOps.hierIndexShared(emb, dir), probes = 2, fprobes = 3),
+          k = 3).count()
       })
-    for ((dir, tag) <- Seq((base, "1x"), (out10, "10x"))
-         if !skip(s"annIvfpq@$tag"))
-      time(s"CONTRAST ivfPqResidualTopK lists=16 @ $tag")(
-        graft.vec.VecOps.ivfPqResidualTopK(Tables(spark, dir).embeddings,
-          lists = 16, probes = 2, k = 3).count())
-    if (!skip("annIvfpqScaled@10x"))
-      time("CONTRAST ivfPqResidualTopK lists=160 @ 10x")(
-        graft.vec.VecOps.ivfPqResidualTopK(Tables(spark, out10).embeddings,
-          lists = 160, probes = 2, k = 3).count())
     // round-16: ivf_ann_topk re-platformed the same way (hier search,
-    // fprobes = 3) — production decade rows, with the retired
-    // fixed-lists=16 flat form preserved as the priced contrast here
-    // (the 79×/decade quadratic COVERAGE.md documents).
+    // fprobes = 3) — production decade rows, same raw-pipeline discipline
     for ((dir, tag) <- decades if !skip(s"ivfAnnHierF3@$tag"))
       time(s"ivf_ann_topk hier f3 @ $tag")({
-        graft.vec.VecOps.clearRoutingCache()
         val emb = Tables(spark, dir).embeddings
         graft.vec.VecOps.ivfHierTopK(emb,
-          graft.vec.VecOps.lloyd2CentroidsShared(emb, dir),
-          fprobes = 3, k = 3).count()
+          graft.vec.VecOps.hierRouting(emb,
+            graft.vec.VecOps.hierIndexShared(emb, dir), probes = 2, fprobes = 3),
+          k = 3).count()
       })
-    for ((dir, tag) <- Seq((base, "1x"), (out10, "10x"))
-         if !skip(s"ivfAnnFlat@$tag"))
-      time(s"CONTRAST ivfTopK lists=16 @ $tag")(
-        graft.vec.VecOps.ivfTopK(Tables(spark, dir).embeddings,
-          lists = 16, probes = 2, k = 3).count())
     // round-13: the refine rung with the LSH planes knob scaled ∝ log n
     // (the annLshTopK sizing rule) — the exact re-score is n·shortlist
     // id-keyed dots regardless of decade, so the rung inherits the
@@ -462,7 +428,9 @@ object ScaleDemo100 {
         val emb = Tables(spark, dir).embeddings
         graft.vec.VecOps.ivfPqHierTopK(emb,
           graft.vec.VecOps.lloyd2CentroidsShared(emb, dir),
-          fprobes = 2, k = 3).count()
+          graft.vec.VecOps.hierRouting(emb,
+            graft.vec.VecOps.hierIndexShared(emb, dir), probes = 2, fprobes = 2),
+          k = 3).count()
       })
     for ((dir, tag) <- Seq((base, "1x"), (out10, "10x"))
          if !skip(s"mm_phash_neardup_pairs@$tag"))
@@ -501,20 +469,11 @@ object ScaleDemo100 {
 
     // round-14: ivf_lloyd2_topk re-platformed onto the hierarchical
     // machinery at coarse probes = 3 (VERDICT r13 #1 — the last flat
-    // O(n·k) graded plan retired). Production rows across the decades;
-    // the FLAT probe it replaced is replayed once at 100× as the
-    // contrast (its 56.35 s r13 reading came from the graded path; the
-    // class must stay measured now that no graded query carries it).
+    // O(n·k) graded plan retired; the flat form's 100× reading stays in
+    // BASELINE.md). Production rows across the decades.
     for ((dir, tag) <- decades if !skip(s"ivfLloyd2Hier@$tag"))
       time(s"ivf_lloyd2_topk hier p=3 @ $tag")(
         SparkEntry.queries("ivf_lloyd2_topk")(spark, dir).count())
-    if (!skip("contrastIvfFlat@100x"))
-      timeN("CONTRAST ivfSearch flat k∝n probes=2 @ 100x", 1)({
-        val emb = Tables(spark, out100).embeddings
-        graft.vec.VecOps.ivfSearch(emb,
-          graft.vec.VecOps.lloyd2CentroidsShared(emb, out100),
-          probes = 2, k = 3).count()
-      })
     // round-14: the 64-bit fingerprint rung (VERDICT r13 #5) — the
     // "wider fingerprint" escalation autoChunkBits' refusal names, as a
     // measured occupancy row: at 100× (508 k docs) fpBits=64/maxHd=3
@@ -549,7 +508,7 @@ object ScaleDemo100 {
     for ((dir, tag) <- decades; q <- Seq("streaming_wj_neardup",
            "streaming_phash_neardup") if !skip(s"$q@$tag")) {
       graft.sources.Fixtures.ensureDocStreamFiles(spark, dir, n = 3)
-      timeN(s"$q @ $tag", 1)(SparkEntry.queries(q)(spark, dir).count())
+      time(s"$q @ $tag", 1)(SparkEntry.queries(q)(spark, dir).count())
     }
 
     if (!skip("phash64refusal@100x")) {
@@ -564,47 +523,27 @@ object ScaleDemo100 {
     }
 
     // round-13: the k-means BUILD itself (VERDICT r12 #1 asked for the
-    // build's own decade row, not just its consumer queries). The 2LVL
-    // rows are the production two-level build (coarse g-means → local
-    // per-cell k-means, n·√k-shaped and balance-preserving); the FLAT
-    // contrast below replays the retired per-iteration broadcast-argmax
-    // window (n·k rows shuffled, n²/128 dots once k ∝ n) at 100×, where
-    // the class is loudest. (The in-loop hierAssign alternative was
-    // measured fast-but-skew-collapsing — max cell 6 541 vs 742 at
-    // 100× — so its contrast metric is cell balance, recorded in
-    // BASELINE.md, not a wall-clock row here.)
+    // build's own decade row, not just its consumer queries): the
+    // production two-level build (coarse g-means → local per-cell
+    // k-means, n·√k-shaped and balance-preserving). The retired flat
+    // per-iteration window build's 100× reading and the in-loop
+    // hierAssign alternative's cell-balance readings (max cell 6 541 vs
+    // 742 at 100×) stay in BASELINE.md.
     for ((dir, tag) <- decades if !skip(s"lloydBuild2lvl@$tag"))
       time(s"lloyd2 build scaled-k 2LVL @ $tag")(
         graft.vec.VecOps.twoLevelCentroids(Tables(spark, dir).embeddings)
           .count())
-    if (!skip("contrastLloydFlat@100x"))
-      timeN("CONTRAST lloyd2 build scaled-k FLAT @ 100x", 1)({
-        val emb = Tables(spark, out100).embeddings
-        var cent = graft.vec.VecOps.seedCentroids(emb,
-          graft.vec.VecOps.scaledLists(emb))
-        for (_ <- 0 until 2)
-          cent = graft.vec.VecOps.lloydStep(emb, cent, snap = true)
-        cent.count()
-      })
 
     // ---- fixed-knob defect contrast rows at 100× (single rep) ----------
     if (!skip("contrastLsh@100x"))
-      timeN("CONTRAST annLshTopK planes=4 @ 100x", 1)(
+      time("CONTRAST annLshTopK planes=4 @ 100x", 1)(
       graft.vec.VecOps.annLshTopK(Tables(spark, out100).embeddings,
         planes = 4, k = 3).count())
-    if (!skip("contrastSemdedup@100x"))
-      timeN("CONTRAST semdedup fixed k=16 @ 100x", 1)({
-      val emb = Tables(spark, out100).embeddings
-      var cent = graft.vec.VecOps.seedCentroids(emb, 16)
-      for (_ <- 0 until 2)
-        cent = graft.vec.VecOps.lloydStep(emb, cent, snap = true)
-      graft.vec.VecOps.semDedupKeep(emb, cent, tau = 0.45).count()
-    })
     // the defect replay LAST, single rep: 4×8-bit chunks at 500 k docs.
     // Expected outcome is a GC-wedged driver or a reading two decades
     // above the scaled-chunk row — either IS the recorded contrast.
     if (!skip("contrastPhash@100x"))
-      timeN("CONTRAST phash chunks=4x8 hd<=3 @ 100x", 1)(
+      time("CONTRAST phash chunks=4x8 hd<=3 @ 100x", 1)(
       graft.mm.MultiModal.hammingPairs(
         graft.mm.MultiModal.phash32(Tables(spark, out100).documents
           .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))),
@@ -620,8 +559,8 @@ object ScaleDemo100 {
   * sign-flip copies (the ScaleDemo shard model verbatim; a single
   * 1000-branch union would stall analysis).
   *
-  * The FLAT scaled-k build contrast is measured at 100× (ScaleDemo100)
-  * and deliberately NOT attempted at 1000×: the retired window form
+  * The retired FLAT scaled-k build (its 100× reading is in BASELINE.md)
+  * is deliberately NOT attempted at 1000×: the window form
   * shuffles all n·k assignment candidates — 2 M × 15 625 ≈ 3.1×10¹⁰
   * rows of ~290 B (vec_id, 64-float embedding, cd, cid) ≈ 9 TB for ONE
   * iteration, two decades past the 100× row's ~90 GB and fatal to a
@@ -636,34 +575,37 @@ object ScaleDemo100 {
   * checkpointed RDDs unpersist only on JVM exit here, and three
   * 2 M-vector rows' worth of retained blocks plus tmpfs shuffle space
   * exceed physical memory together even though each row alone fits.
-  * An optional third arg names the row(s) to run ("build" /
-  * "semdedup_keep" / "ivf_hier_topk" / "matryoshka", comma-separable);
-  * tools/scaledemo1000.sh drives one sbt JVM per row so every reading
-  * starts from a clean heap — the scripted, babysit-free protocol. No
-  * arg = all rows (the old single-JVM behavior, for small re-checks). */
+  * An optional third arg names the row(s) to run (comma-separated
+  * names from `Rows`; an unknown name is an error, so a typo cannot run
+  * nothing and exit 0); tools/scaledemo1000.sh drives one sbt JVM per
+  * row so every reading starts from a clean heap — the scripted,
+  * babysit-free protocol. No arg = the first five rows (the old
+  * single-JVM behavior, for small re-checks). */
 object ScaleDemo1000 {
+  import ScaleDemo.{session, time}
+
+  private val Rows: Seq[String] = Seq("build", "semdedup_keep", "ivf_hier_topk",
+    "ivf_hier_refine_topk", "matryoshka", "ann_ivfpq_hier_topk",
+    "streaming_semdedup_keep", "streaming_wj_neardup",
+    "mm_phash64_neardup_pairs", "mm_phash128_neardup_pairs",
+    "streaming_phash_refusal")
+
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/dev/shm/graft-scale1000x"
     val rows: Set[String] =
       if (args.length > 2) args(2).split(",").toSet
-      else Set("build", "semdedup_keep", "ivf_hier_topk",
-        "ivf_hier_refine_topk", "matryoshka")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      // third-decade protocol: the heap-agg rows (hier family,
-      // matryoshka shortlists) want keys-in-memory at 1000x candidate
-      // volumes — the measured 2x lever (BASELINE.md round-15). The
-      // sf0.1 bench keeps the 128 default: the knob's sign flips for
-      // large list buffers (same BASELINE table).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "8388608")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      else Rows.take(5).toSet
+    val unknown = rows.filterNot(Rows.contains)
+    require(unknown.isEmpty, s"ScaleDemo1000: unknown row(s) " +
+      s"${unknown.mkString(",")}; known rows: ${Rows.mkString(",")}")
+    // third-decade protocol: the heap-agg rows (hier family,
+    // matryoshka shortlists) want keys-in-memory at 1000x candidate
+    // volumes — the measured 2x lever (BASELINE.md round-15). The
+    // sf0.1 bench keeps the 128 default: the knob's sign flips for
+    // large list buffers (same BASELINE table).
+    val spark = session(
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "8388608")
     val outPath = java.nio.file.Paths.get(out)
     if (!java.nio.file.Files.exists(outPath.resolve("embeddings.parquet"))) {
       val t = Tables(spark, base)
@@ -684,37 +626,28 @@ object ScaleDemo1000 {
       println(s"[scale] embeddings built at $out (1000x)")
     }
 
-    def timeN(tag: String, reps: Int)(f: => Long): Unit = {
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime(); val n = f
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      val mid = runs.map(_._1).sorted.apply(runs.size / 2)
-      println(f"[scale] $tag%-44s ${mid}%8.2f s   rows=${runs.head._2}")
-    }
-
     // the build alone, uncached (no Shared registry): every rep pays the
     // full two-level build at k ≈ n/128 (g = 125 coarse, k_c ∝ cell mass)
     if (rows("build"))
-      timeN("lloyd2 build scaled-k 2LVL @ 1000x", 2)(
+      time("lloyd2 build scaled-k 2LVL @ 1000x", 2)(
         graft.vec.VecOps.twoLevelCentroids(Tables(spark, out).embeddings)
           .count())
     // the graded consumers (3 reps, session-shared build across reps —
     // the same methodology as the 10×/100× decades; the uncached build
     // cost is the row above)
     for (q <- Seq("semdedup_keep") if rows(q))
-      timeN(s"$q @ 1000x", 3)(SparkEntry.queries(q)(spark, out).count())
+      time(s"$q @ 1000x")(SparkEntry.queries(q)(spark, out).count())
     // round 16: ivf_hier_topk's registry entry reads the session-shared
     // top-3 relation now — time the RAW pipeline (the refine-row
-    // discipline), clearing the routing memo per rep so every rep pays
+    // discipline) with a fresh routing table per rep, so every rep pays
     // the full search
     if (rows("ivf_hier_topk"))
-      timeN("ivf_hier_topk @ 1000x", 3)({
-        graft.vec.VecOps.clearRoutingCache()
+      time("ivf_hier_topk @ 1000x")({
         val emb = Tables(spark, out).embeddings
         graft.vec.VecOps.ivfHierTopK(emb,
-          graft.vec.VecOps.lloyd2CentroidsShared(emb, out),
-          fprobes = 2, k = 3).count()
+          graft.vec.VecOps.hierRouting(emb,
+            graft.vec.VecOps.hierIndexShared(emb, out), probes = 2, fprobes = 2),
+          k = 3).count()
       })
     // ivf_hier_refine (round 14): the rescore-bounding rung at the
     // decade where the bound matters — full-dot volume per query is 16
@@ -724,12 +657,12 @@ object ScaleDemo1000 {
     // top-3 relation, whose reps 2-3 would time a cache read, not the
     // search (the annRefineTopK-row discipline in ScaleDemo100).
     if (rows("ivf_hier_refine_topk"))
-      timeN("ivf_hier_refine_topk @ 1000x", 3)({
-        graft.vec.VecOps.clearRoutingCache() // see ivf_hier_topk row
+      time("ivf_hier_refine_topk @ 1000x")({
         val emb = Tables(spark, out).embeddings
         graft.vec.VecOps.ivfHierRefineTopK(emb,
-          graft.vec.VecOps.lloyd2CentroidsShared(emb, out),
-          fprobes = 2, shortlist = 16, k = 3).count()
+          graft.vec.VecOps.hierRouting(emb,
+            graft.vec.VecOps.hierIndexShared(emb, out), probes = 2, fprobes = 2),
+          shortlist = 16, k = 3).count()
       })
     // matryoshka with planes holding per-bucket OCCUPANCY ≈ the 100×
     // row's (planes = 14 → 2 M/16384 ≈ 122/bucket): the +3-per-decade
@@ -738,20 +671,21 @@ object ScaleDemo1000 {
     // (occ 244) 214.0 s vs planes=14 (occ 122) 130.9 s. Bucket count
     // must track the CORPUS, not the decade count.
     if (rows("matryoshka"))
-      timeN("matryoshka planes=14 @ 1000x", 3)(
+      time("matryoshka planes=14 @ 1000x")(
         graft.vec.VecOps.matryoshkaTopK(Tables(spark, out).embeddings,
           planes = 14, mDims = 16, shortlist = 8, k = 3).count())
     // round-16 (VERDICT r15 #3): the hierarchical residual rung's
     // third-decade row — same routing as ivf_hier_topk plus the
-    // residual-PQ encode and the asymmetric re-score; raw pipeline +
-    // routing clear per rep (the refine-row discipline)
+    // residual-PQ encode and the asymmetric re-score; raw pipeline with
+    // a fresh routing table per rep (the refine-row discipline)
     if (rows("ann_ivfpq_hier_topk"))
-      timeN("ann_ivfpq_hier_topk @ 1000x", 3)({
-        graft.vec.VecOps.clearRoutingCache()
+      time("ann_ivfpq_hier_topk @ 1000x")({
         val emb = Tables(spark, out).embeddings
         graft.vec.VecOps.ivfPqHierTopK(emb,
           graft.vec.VecOps.lloyd2CentroidsShared(emb, out),
-          fprobes = 2, k = 3).count()
+          graft.vec.VecOps.hierRouting(emb,
+            graft.vec.VecOps.hierIndexShared(emb, out), probes = 2, fprobes = 2),
+          k = 3).count()
       })
     // round-16 (VERDICT r15 #3): the streaming semdedup twin at the
     // third decade — 3 micro-batches against the shared hier index;
@@ -766,7 +700,7 @@ object ScaleDemo1000 {
       val emb = Tables(spark, out).embeddings
       graft.vec.VecOps.lloyd2CentroidsShared(emb, out).count()
       graft.sources.Fixtures.ensureEmbeddingStreamFiles(spark, out, n = 3)
-      timeN("streaming_semdedup_keep @ 1000x", 1)(
+      time("streaming_semdedup_keep @ 1000x", 1)(
         SparkEntry.queries("streaming_semdedup_keep")(spark, out).count())
     }
     // round-17 (VERDICT r16 #8): 1000× DOCUMENTS corpus for the heavy
@@ -798,7 +732,7 @@ object ScaleDemo1000 {
     if (rows("streaming_wj_neardup")) {
       ensureDocs1000()
       graft.sources.Fixtures.ensureDocStreamFiles(spark, out, n = 3)
-      timeN("streaming_wj_neardup @ 1000x", 1)(
+      time("streaming_wj_neardup @ 1000x", 1)(
         SparkEntry.queries("streaming_wj_neardup")(spark, out).count())
     }
     // wide-fingerprint rungs at the decade they exist FOR: at 5 M docs
@@ -810,7 +744,7 @@ object ScaleDemo1000 {
     // annRefine-row discipline); single rep, fresh JVM per row.
     if (rows("mm_phash64_neardup_pairs")) {
       ensureDocs1000()
-      timeN("mm_phash64_neardup_pairs RAW @ 1000x", 1)(
+      time("mm_phash64_neardup_pairs RAW @ 1000x", 1)(
         graft.mm.MultiModal.hammingPairs(
           graft.mm.MultiModal.phash64(Tables(spark, out).documents
             .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))),
@@ -818,7 +752,7 @@ object ScaleDemo1000 {
     }
     if (rows("mm_phash128_neardup_pairs")) {
       ensureDocs1000()
-      timeN("mm_phash128_neardup_pairs RAW @ 1000x", 1)(
+      time("mm_phash128_neardup_pairs RAW @ 1000x", 1)(
         graft.mm.MultiModal.hammingPairsMulti(
           graft.mm.MultiModal.phash128(Tables(spark, out).documents
             .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))),

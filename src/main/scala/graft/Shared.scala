@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
   * which is exactly the accumulation that broke the bench gate.
   *
   * This is NOT the unbounded `.cache()` leak CacheLifecycleSpec guards
-  * against: the registry is keyed by (application, session, dir, tag), so
+  * against: the registry is keyed by (session, dir, tag), so
   * its cardinality is #tags × #fixture-dirs per session (single digits),
   * and every registered relation is OUTPUT-sized (pair lists, top-k
   * lists), per-ROW-bounded (one row per document: the gopher signal
@@ -31,14 +31,19 @@ import org.apache.spark.storage.StorageLevel
   */
 object Shared {
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
 
-  /** The session memo: `build`'s value, built once per (application,
-    * session, dir, tag). The persisted relations below, the Tables read
-    * handles and RelQueries' graph artifacts all go through it. */
+  /** The session memo: `build`'s value, built once per (session, dir,
+    * tag). The persisted relations below, the Tables read handles,
+    * RelQueries' graph artifacts and VecOps' hier index and routing
+    * tables all go through it. The key holds the session OBJECT:
+    * SparkSession does not override equals, so lookup is reference
+    * identity, and two live sessions never share an entry (an identity
+    * hash, which the key was before, is not unique among live objects).
+    * A session's entries live as long as the JVM; their values hold the
+    * session anyway. */
   def memo[T <: AnyRef](spark: SparkSession, dir: String, tag: String)(build: => T): T = {
-    val key = spark.sparkContext.applicationId + "#" +
-      System.identityHashCode(spark) + "|" + dir + "|" + tag
+    val key = (spark, dir, tag)
     // check-then-put, NOT computeIfAbsent: build functions nest Shared
     // calls (hier3Top3Shared builds on lloyd2CentroidsShared), and a
     // nested computeIfAbsent on the same ConcurrentHashMap throws
@@ -54,6 +59,12 @@ object Shared {
       val prev = cache.putIfAbsent(key, v)
       (if (prev != null) prev else v).asInstanceOf[T]
     }
+  }
+
+  /** The (dir, tag) keys of `spark`'s memo entries. */
+  private[graft] def keys(spark: SparkSession): Set[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    cache.keySet.asScala.collect { case (s, d, t) if s eq spark => (d, t) }.toSet
   }
 
   /** [[memo]] of a relation persisted MEMORY_AND_DISK.

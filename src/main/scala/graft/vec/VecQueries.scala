@@ -596,13 +596,12 @@ object VecQueries {
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
                FROM rx)"""
 
-  /** DuckDB CTEs mirroring [[VecOps.ivfPqResidualTopK]] (lists=16,
-    * probes=2) stage-for-stage, ending in `ipr(qid, nid, d, rank)` — the
-    * full ranked candidate relation the three IVF-PQ-residual consumers
-    * (topk / recall / NDCG) slice differently. Residual and
-    * reconstruction arithmetic is CAST AS FLOAT (double-compute +
-    * round-to-float of float operands ≡ float ops — the 2p+2 theorem),
-    * so reconstructed vectors match Spark bit-for-bit. */
+  /** DuckDB CTEs mirroring [[VecOps.ivfPqEncode]] (lists=16)
+    * stage-for-stage, ending in `rassign(vec_id, s, rcid, x, cw, crank)`
+    * — the per-subspace residual codeword ranking whose `crank = 1` rows
+    * ivfpq_reconstruction_error reads. Residual arithmetic is CAST AS
+    * FLOAT (double-compute + round-to-float of float operands ≡ float
+    * ops — the 2p+2 theorem), so residuals match Spark bit-for-bit. */
   private val ivfpqEncCtes: String = """
         seeds AS (
           SELECT vec_id AS cid, embedding AS ce
@@ -947,8 +946,8 @@ object VecQueries {
     // Re-platformed off the fixed-lists flat IVF (16 md5-seeded cells,
     // 2 probes — the documented quadratic: with FIXED lists the
     // probed-cell candidate join is n²·probes/lists, 79× measured across
-    // one ScaleDemo decade; that form survives only as the ScaleDemo
-    // contrast row) onto the scaled-k hierarchical search, grading the
+    // one ScaleDemo decade; that form is retired, its readings stay in
+    // BASELINE.md) onto the scaled-k hierarchical search, grading the
     // FINE-probe width dial: fprobes = 3 best fine cells per query vs
     // ivf_hier_topk's 2 (ivf_lloyd2_topk grades the COARSE twin dial at
     // probes = 3). Recall dominates ann_recall_hier's by construction —
@@ -1066,11 +1065,10 @@ object VecQueries {
       (s, dir) => {
         graft.functions.DotF32.register(s)
         val emb = Tables(s, dir).embeddings
-        val cent = VecOps.lloyd2CentroidsShared(emb, dir)
         // d2 == 1.0 exactly ⇒ zero denominator; Spark would cast the
         // resulting Inf/NaN while DuckDB errors on the cast — sentinel 0
         // on BOTH sides (the pearson/ccf zero-variance discipline).
-        VecOps.hierCandidates(emb, VecOps.hierIndex(cent))
+        VecOps.hierCandidates(emb, VecOps.hierIndexShared(emb, dir))
           .groupBy(col("vec_id"))
           .agg(VecOps.heapCol(s, col("cd"), col("cid"), 2,
             routing = true).as("top"))
@@ -1130,15 +1128,15 @@ object VecQueries {
     // cell can differ from flat argmax only when its true nearest
     // centroid's anchor is outside the probed set — probes is exactly
     // that dial). Distinct accuracy point from ivf_hier_topk's 2-probe
-    // rung; the flat form survives only as the ScaleDemo contrast row.
+    // rung; the flat form is retired (its readings stay in BASELINE.md).
     // Oracle mirrors the 3-probe assignment CTE-for-CTE (hierStageCtes
     // probes = 3, suffixed so names never collide with the 2-probe
     // block).
     Reg("ivf_lloyd2_topk",
       (s, dir) => {
         val emb = Tables(s, dir).embeddings
-        VecOps.ivfHierTopK(emb, VecOps.lloyd2CentroidsShared(emb, dir),
-            fprobes = 2, k = 3, probes = 3)
+        VecOps.ivfHierTopK(emb,
+            VecOps.hierRoutingShared(emb, dir, probes = 3, fprobes = 2), k = 3)
           .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
           .orderBy("qid", "rank")
       },
@@ -1310,7 +1308,7 @@ object VecQueries {
 
     // ---- label-centroid separation matrix --------------------------------
     // Cluster-geometry diagnostic: per-label mean vector, every component
-    // snapped to the 1e-4 integer grid (the lloydStep snap — the float
+    // snapped to the 1e-4 integer grid (the Lloyd-mean snap — the float
     // mean's last-ulp summation-order hazard collapses onto a round()
     // boundary), then EXACT BIGINT dots between all 45 unordered label
     // pairs. Confirms FIXTURES.md's "labels are not clusters": all dots
@@ -1407,8 +1405,7 @@ object VecQueries {
     Reg("semdedup_keep",
       (s, dir) => {
         val emb = Tables(s, dir).embeddings
-        VecOps.semDedupKeep(emb, VecOps.lloyd2CentroidsShared(emb, dir),
-            tau = 0.45)
+        VecOps.semDedupKeep(emb, VecOps.hierIndexShared(emb, dir), tau = 0.45)
           .orderBy("vec_id")
       },
       Some(semdedupKeepOracle)),
@@ -1451,11 +1448,11 @@ object VecQueries {
           .select(col("qid"), col("nid"), expr("1000000 div (60 + rank)").as("c_lsh"))
         // round 16: the IVF arm re-platformed off the fixed-lists flat
         // form (VERDICT r15 #1) onto the hier search at the graded
-        // fprobes = 2 dial — the k = 5 cut shares the memoized routing
-        // table with the whole hier family, so the arm costs one
+        // fprobes = 2 dial — the k = 5 cut shares the session's (2, 2)
+        // routing table with the hier family, so the arm costs one
         // candidate join, not a fresh index build
-        val ivf = VecOps.ivfHierTopK(emb, VecOps.lloyd2CentroidsShared(emb, dir),
-            fprobes = 2, k = 5)
+        val ivf = VecOps.ivfHierTopK(emb,
+            VecOps.hierRoutingShared(emb, dir, probes = 2, fprobes = 2), k = 5)
           .select(col("qid"), col("nid"), expr("1000000 div (60 + rank)").as("c_ivf"))
         val fused = lsh.join(ivf, Seq("qid", "nid"), "full_outer")
           .select(col("qid"), col("nid"),
@@ -1847,8 +1844,8 @@ object VecQueries {
     // ---- IVF-PQ residual rung, WIDE fine probing (round 16) -------------
     // Re-platformed (VERDICT r15 #1) off the fixed-lists flat coarse
     // quantizer (lists = 16 — the same n²/lists candidate quadratic as
-    // the retired flat IVF; contrast-only in ScaleDemo now) onto the
-    // hierarchical residual machinery of ann_ivfpq_hier_topk, grading
+    // the retired flat IVF) onto the hierarchical residual machinery of
+    // ann_ivfpq_hier_topk, grading
     // the fprobes = 3 point of the fine-probe dial (the hier sibling
     // holds fprobes = 2): coarse→fine routing over the scaled-k Lloyd
     // table, residual v − ce(cell) product-quantized against the salted

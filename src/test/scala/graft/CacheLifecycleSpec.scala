@@ -61,6 +61,17 @@ class CacheLifecycleSpec extends SparkSpec {
     assert(a eq b)
   }
 
+  test("Shared memo keys on the session object") {
+    val dir = sf("sf0.001")
+    val other = spark.newSession()
+    val a = graft.Shared.memo(spark, dir, "memo_key_probe")(new Object)
+    val b = graft.Shared.memo(spark, dir, "memo_key_probe")(new Object)
+    val c = graft.Shared.memo(other, dir, "memo_key_probe")(new Object)
+    assert(a eq b, "the same session must get the memoized value")
+    assert(!(a eq c), "another session with the same (dir, tag) must get its own value")
+    assert(graft.Shared.keys(other) == Set(dir -> "memo_key_probe"))
+  }
+
   test("single-pass LSH candidates match the self-join formulation (text)") {
     val dir = sf("sf0.001")
     val docs = Tables(spark, dir).documents

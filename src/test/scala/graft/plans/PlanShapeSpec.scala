@@ -411,7 +411,7 @@ class PlanShapeSpec extends SparkSpec {
     // round-14 (VERDICT r13 #1): re-platformed from the flat
     // crossJoin(broadcast(k ∝ n)) + n·k rank window onto the hier
     // machinery at probes = 3 — same shape class as ivf_hier_topk; the
-    // flat form survives only as a ScaleDemo contrast row
+    // flat form is retired (its readings stay in BASELINE.md)
     "ivf_lloyd2_topk" -> (6, 1),
     // round-12: recall-ladder completions (shared brute InMemoryScan +
     // the sibling index pipelines + hit-count agg)

@@ -30,7 +30,7 @@ class StreamingSemDedupSpec extends SparkSpec {
       .semdedupIncrementalRun(spark, dir, src, "spec_interleaved")
       .collect().toSeq
     val batch = VecOps
-      .semDedupKeep(emb, VecOps.lloyd2CentroidsShared(emb, dir), tau = 0.45)
+      .semDedupKeep(emb, VecOps.hierIndexShared(emb, dir), tau = 0.45)
       .orderBy("vec_id")
       .collect().toSeq
 

@@ -116,53 +116,6 @@ class VecOpsSpec extends SparkSpec {
     assert(multi > 0)
   }
 
-  test("IVF: probed-cell results overlap the brute-force ranking") {
-    val emb = graft.Tables(spark, sf("sf0.001")).embeddings
-    val ivf = VecOps.ivfTopK(emb, lists = 16, probes = 2, k = 3)
-    val brute = VecOps.topK(VecOps.bruteForceScores(emb), 50)
-      .select($"qid", $"nid").as[(Long, Long)].collect().toSet
-    val picks = ivf.select($"qid", $"nid").as[(Long, Long)].collect()
-    assert(picks.nonEmpty)
-    val hits = picks.count(brute.contains)
-    assert(hits * 2 >= picks.length, s"hits=$hits of ${picks.length}")
-    // every query probes ≤ 2 cells → candidate count is bounded by the
-    // probed cells' sizes, not n² (the only all-pairs op is the
-    // broadcast against 16 centroids — the linear IVF assignment)
-    val n = emb.count()
-    val cand = VecOps.ivfTopK(emb, 16, 2, Int.MaxValue).count()
-    assert(cand < n * (n - 1) / 2)
-  }
-
-  test("Lloyd step: k-means objective is non-increasing") {
-    val emb = graft.Tables(spark, sf("sf0.001")).embeddings
-    // start from the IVF sampled seeds
-    val seeds = emb
-      .withColumn("_h", expr("CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"))
-      .orderBy($"_h", $"vec_id").limit(16)
-      .select($"vec_id".as("cid"), $"embedding".as("ce"))
-    // objective: Σ ‖v − c(v)‖²; with ‖v‖=1, = Σ (1 − 2·v·c + ‖c‖²)
-    def objective(cents: org.apache.spark.sql.DataFrame): Double = {
-      graft.functions.DotF32.register(spark)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"vec_id").orderBy($"cd".desc, $"cid")
-      emb.select($"vec_id", $"embedding")
-        .crossJoin(broadcast(cents))
-        .withColumn("cd", expr("dot_f32(embedding, ce)"))
-        .withColumn("cc", expr("dot_f32(ce, ce)"))
-        .withColumn("crank", row_number().over(w)).filter($"crank" === 1)
-        .select(sum(lit(1.0) - lit(2.0) * $"cd" + $"cc"))
-        .head().getDouble(0)
-    }
-    val before = objective(seeds)
-    val c1 = VecOps.lloydStep(emb, seeds)
-    assert(c1.count() <= 16 && c1.head().getSeq[Float](1).length == 64)
-    val mid = objective(c1)
-    val c2 = VecOps.lloydStep(emb, c1)
-    val after = objective(c2)
-    assert(mid <= before + 1e-9, s"step1 $before -> $mid")
-    assert(after <= mid + 1e-9, s"step2 $mid -> $after")
-  }
-
   test("hierAssign preserves every input vector on the fixture corpus") {
     val emb = graft.Tables(spark, sf("sf0.001")).embeddings
     val cent = VecOps.seedCentroids(emb, 16)
