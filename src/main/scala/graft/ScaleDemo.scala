@@ -27,12 +27,14 @@ import org.apache.spark.sql.functions._
   * occupancy held ≈constant → ≈linear): the knob IS the scale story.
   */
 object ScaleDemo {
-  /** The scale demos' local session: 32 cores, 32 shuffle partitions,
-    * UTC, spill under /dev/shm; `conf` adds per-demo settings. */
+  /** The scale demos' local session: `SPARK_GRAFT_CPUS` cores (default
+    * 32) and as many shuffle partitions, UTC, spill under /dev/shm;
+    * `conf` adds per-demo settings. */
   private[graft] def session(conf: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val b = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", "/dev/shm/graft-spark")
@@ -42,16 +44,21 @@ object ScaleDemo {
     spark
   }
 
-  /** Runs `f` `reps` times and prints the median wall time (with 3 reps,
-    * rep 1 warms and the reported value is the middle one) and rep 1's
-    * row count. */
+  /** Runs `f` `reps` times and prints rep 1's wall time, the median wall
+    * time of reps 2..`reps` (omitted when `reps` is 1) and rep 1's row
+    * count. Rep 1 pays the session's one-time builds, so it is reported
+    * apart rather than folded into the median. */
   private[graft] def time(tag: String, reps: Int = 3)(f: => Long): Unit = {
     val runs = (1 to reps).map { _ =>
       val t0 = System.nanoTime(); val n = f
       ((System.nanoTime() - t0) / 1e9, n)
     }
-    val mid = runs.map(_._1).sorted.apply(runs.size / 2)
-    println(f"[scale] $tag%-44s ${mid}%8.2f s   rows=${runs.head._2}")
+    val warm = runs.tail.map(_._1).sorted
+    val warmCol = if (warm.isEmpty) "" else {
+      val mid = (warm((warm.size - 1) / 2) + warm(warm.size / 2)) / 2
+      f"   warm $mid%8.2f s"
+    }
+    println(f"[scale] $tag%-44s rep1 ${runs.head._1}%8.2f s$warmCol   rows=${runs.head._2}")
   }
 
   private[graft] def md5Bit(s: String): Boolean = {
@@ -692,7 +699,7 @@ object ScaleDemo1000 {
     // per-batch cost ∝ batch (never batch × corpus) is the claim this
     // row prices. The session-shared Lloyd build and the stream-file
     // fixture are warmed OUTSIDE the timer: the batch semdedup row's
-    // median-of-3 excludes the build (it lands in rep 1), so a single
+    // warm median excludes the build (it lands in rep 1), so a single
     // timed drain rep must exclude it too or the row prices the build,
     // not the screen (the first recorded 959 s reading did exactly
     // that — BASELINE.md round-16).

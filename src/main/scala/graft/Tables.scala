@@ -12,7 +12,8 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
   * empty, see SURVEY.md §0). At 100 TB these would be directory-partitioned
   * datasets (e.g. events partitioned by date) — the read path is identical:
   * `spark.read.parquet(dir)` + Catalyst partition pruning. Filters written
-  * against `ts`/key columns push down to parquet row-group stats either way.
+  * against key columns push down to parquet row-group stats. A `ts` filter
+  * does only on some fixture generations; see [[eventsRange]].
   */
 final case class Tables(spark: SparkSession, dir: String) {
   /** One DataFrame OBJECT per (session, dir, table) — round 16. The
@@ -49,9 +50,16 @@ final case class Tables(spark: SparkSession, dir: String) {
   /** The tsdb core read path: time-range scan over events with the range
     * predicate applied to the RAW column, BEFORE the µs conversion — a
     * filter on the converted nanos column is opaque to parquet pushdown
-    * (PushedFilters shows only IsNotNull), while this formulation reaches
-    * the row-group stats. `from`/`until` are "yyyy-MM-dd[ HH:mm:ss]" UTC,
-    * half-open.
+    * (PushedFilters shows only IsNotNull), while this formulation puts the
+    * range in PushedFilters. Whether parquet then skips row groups depends
+    * on the fixture generation: Spark 4.1's `ParquetFilters` builds a
+    * row-group predicate for an INT64 column only when it carries no
+    * annotation (a plain long, as the ScaleDemo shard copies write nanos)
+    * or a `timestamp(isAdjustedToUTC = true)` one. The NTZ `timestamp[us]`
+    * fixtures (sf0.001–sf0.1, perfbench's events) are annotated
+    * `isAdjustedToUTC = false`, and the early TIMESTAMP(NANOS) fixtures,
+    * read as long, keep their NANOS annotation: both scan every row group.
+    * `from`/`until` are "yyyy-MM-dd[ HH:mm:ss]" UTC, half-open.
     *
     * The bounds are [[graft.functions.ParamLiteral]]s: parameters of the
     * generated code rather than constants inlined into it, so reads over

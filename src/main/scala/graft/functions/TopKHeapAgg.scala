@@ -4,34 +4,36 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** Primitive-array top-k buffer for [[TopKHeapAgg]]: two parallel arrays
-  * kept sorted by (score DESC, id ASC), bounded at k. Same total order
-  * and same bounded-insertion discipline as [[TopKAggregator]] — a
-  * candidate below a full buffer's floor is rejected in O(1), an
-  * accepted one shifts the tail in O(k) (k ≤ 16 at every graded call
-  * site; System.arraycopy, no allocation). */
+  * kept sorted by (score DESC, id ASC), bounded at k. A candidate below a
+  * full buffer's floor is rejected in O(1), an accepted one shifts the
+  * tail in O(k) (k ≤ 16 at every graded call site; System.arraycopy, no
+  * allocation). Insert and merge allocate nothing: the buffer is the
+  * whole per-group state, from a k = 2 routing heap to a k = 16 shortlist
+  * heap. */
 final class TopKHeapBuf(val k: Int) {
   val scores = new Array[Double](k)
   val ids = new Array[Long](k)
   var size = 0
 
-  /** (score DESC, id ASC) strict before: does (s, i) rank before slot p? */
-  @inline private def before(s: Double, i: Long, p: Int): Boolean =
-    s > scores(p) || (s == scores(p) && i < ids(p))
+  /** (score DESC, id ASC) strict before: does (s, i) rank before slot p
+    * of `h`? */
+  @inline private def before(s: Double, i: Long, h: TopKHeapBuf, p: Int): Boolean =
+    s > h.scores(p) || (s == h.scores(p) && i < h.ids(p))
 
   def insert(s: Double, i: Long): Unit = {
-    if (size >= k && !before(s, i, k - 1)) return
+    if (size >= k && !before(s, i, this, k - 1)) return
     // binary search for the insertion point in the sorted prefix
     var lo = 0
     var hi = size
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
-      if (before(s, i, mid)) hi = mid else lo = mid + 1
+      if (before(s, i, this, mid)) hi = mid else lo = mid + 1
     }
     val last = math.min(size, k - 1)
     if (last > lo) {
@@ -43,49 +45,48 @@ final class TopKHeapBuf(val k: Int) {
     if (size < k) size += 1
   }
 
-  /** Linear merge of two sorted runs, bounded at k — the
-    * [[TopKAggregator.merge]] order, arrival-independent. */
+  /** Linear merge of two sorted runs, bounded at k, written in place:
+    * a forward pass counts how many of the first n slots each run
+    * supplies, then the merge runs back to front, so no write lands on a
+    * slot of `this` that is still to be read. The result depends only on
+    * the union of the two runs, not on which side arrived first. */
   def mergeIn(o: TopKHeapBuf): Unit = {
     if (o.size == 0) return
     val n = math.min(k, size + o.size)
-    val ms = new Array[Double](n)
-    val mi = new Array[Long](n)
-    var a = 0; var b = 0; var w = 0
-    while (w < n) {
-      val takeA = b >= o.size || (a < size &&
-        (scores(a) > o.scores(b) ||
-          (scores(a) == o.scores(b) && ids(a) < o.ids(b))))
-      if (takeA) { ms(w) = scores(a); mi(w) = ids(a); a += 1 }
-      else { ms(w) = o.scores(b); mi(w) = o.ids(b); b += 1 }
-      w += 1
+    var a = 0; var b = 0
+    while (a + b < n) {
+      if (b >= o.size || (a < size && before(scores(a), ids(a), o, b))) a += 1
+      else b += 1
     }
-    System.arraycopy(ms, 0, scores, 0, n)
-    System.arraycopy(mi, 0, ids, 0, n)
+    var w = n - 1
+    a -= 1; b -= 1
+    while (b >= 0) {
+      if (a >= 0 && !before(scores(a), ids(a), o, b)) {
+        scores(w) = scores(a); ids(w) = ids(a); a -= 1
+      } else { scores(w) = o.scores(b); ids(w) = o.ids(b); b -= 1 }
+      w -= 1
+    }
     size = n
   }
 }
 
-/** Native `TypedImperativeAggregate` top-k heap — the round-16 escalation
-  * of [[TopKAggregator]] (VERDICT r15 #2): the udaf(ScalaAggregator) form
-  * pays a per-row encoder round-trip (input row → ScoredId Product →
-  * buffer Seq re-encode) on EVERY candidate row, which the 1000× refine
-  * decade measured as the dominant cost of the shortlist heap over
-  * 5.1×10⁸ rows. This form is the Spark-internal sketch pattern
-  * (percentile_approx / HyperLogLogPlusPlus): the buffer is two primitive
-  * arrays living as a JVM object in the ObjectHashAggregate map, updated
-  * in place with zero per-row allocation in the reject path (the common
-  * case at scale: a candidate below the floor of a full heap touches two
-  * array slots and returns); serialization to bytes happens only at
-  * partial-agg shuffle boundaries, k·16+4 bytes per group.
-  *
-  * Output, ordering and null semantics are EXACTLY [[TopKAggregator]]'s:
-  * array<struct<score double, id bigint>> sorted (score DESC, id ASC),
-  * null score or id rows skipped — asserted row-identical across 10⁴
-  * adversarial tie-heavy rows by TopKHeapAggSpec, so every consumer can
-  * swap forms without touching its oracle.
+/** The engine's one bounded-heap top-k: per group, the k best rows
+  * under (score DESC, id ASC) as array<struct<score double, id bigint>>,
+  * sorted, null score or id rows skipped. A `TypedImperativeAggregate`,
+  * the Spark-internal sketch pattern (percentile_approx /
+  * HyperLogLogPlusPlus): the buffer is a [[TopKHeapBuf]] living as a JVM
+  * object in the ObjectHashAggregate map, updated in place with no
+  * per-row allocation, and serialized to k·16+4 bytes only at
+  * partial-aggregation shuffle boundaries and, in a streaming
+  * aggregation, as the state-store value. Partial aggregation carries at
+  * most k entries per (partition, group), so candidate volume never hits
+  * a sort. The order is total, so the output is independent of row
+  * arrival and merge order: TopKHeapAggSpec checks it against the window
+  * `row_number() <= k` formulation that the DuckDB oracles use.
   *
   * SQL surface: `topk_heap(score, id, k)` (k a foldable INT), registered
-  * per session by [[TopKHeapAgg.register]].
+  * per session by [[TopKHeapAgg.register]]; DataFrame callers go
+  * through [[graft.vec.VecOps.heapCol]].
   */
 case class TopKHeapAgg(
     scoreExpr: Expression,
@@ -201,15 +202,4 @@ object TopKHeapAgg {
           TopKHeapAgg(exprs.head, exprs(1), exprs(2)))
     }
   }
-
-  /** `topk_heap(score, id, k)` as a Column for DataFrame callers. */
-  def topkHeap(spark: SparkSession, score: String, id: String,
-               k: Int): org.apache.spark.sql.Column = {
-    register(spark)
-    org.apache.spark.sql.functions.expr(s"topk_heap($score, $id, $k)")
-  }
-
-  /** Literal-k helper for builders that already hold Expressions. */
-  def apply(score: Expression, id: Expression, k: Int): TopKHeapAgg =
-    TopKHeapAgg(score, id, Literal(k))
 }

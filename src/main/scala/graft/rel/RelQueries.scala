@@ -1374,18 +1374,19 @@ object RelQueries {
         ORDER BY o_orderkey
       """)),
 
-    // ---- per-group top-k via the bounded-heap Aggregator ----------------
+    // ---- per-group top-k via the bounded heap --------------------------
     // (§2.10: the scale-true per-group top-k — partial aggregation moves
     // k rows per map partition per group, not whole sorted groups; graded
     // against the window row_number oracle, same total order
-    // (price DESC, partkey ASC) on both sides.)
+    // (price DESC, partkey ASC) on both sides. The engine's one heap,
+    // [[graft.vec.VecOps.heapCol]]; its struct fields are NOT NULL, so
+    // p_partkey and p_retailprice come out NOT NULL.)
     Reg("topk_heap_parts_by_brand",
       (s, dir) => {
-        val topk = udaf(new graft.functions.TopKAggregator(3),
-          org.apache.spark.sql.Encoders.product[graft.functions.ScoredId])
         Tables(s, dir).part
           .groupBy(col("p_brand"))
-          .agg(topk(col("p_retailprice"), col("p_partkey")).as("top"))
+          .agg(graft.vec.VecOps.heapCol(s, col("p_retailprice"),
+            col("p_partkey"), 3).as("top"))
           .select(col("p_brand"), posexplode(col("top")).as(Seq("i", "t")))
           .select(col("p_brand"), (col("i") + 1).cast("int").as("rank"),
             col("t.id").as("p_partkey"), col("t.score").as("p_retailprice"))

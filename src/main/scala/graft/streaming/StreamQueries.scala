@@ -87,6 +87,20 @@ object StreamQueries {
     }
   }
 
+  /** `streaming_stratified_sample`'s aggregation over an events relation,
+    * streaming or batch: per (event_type, user parity) stratum, the heap
+    * of the 5 smallest salted 48-bit event hashes (scored negated, so the
+    * heap's score DESC keeps the smallest). */
+  private[streaming] def stratifiedSampleAgg(events: DataFrame): DataFrame =
+    events
+      .withColumn("hv", expr(
+        "CAST(conv(substring(md5(concat('ssamp:'," +
+          " CAST(event_id AS STRING))), 1, 12), 16, 10) AS BIGINT)"))
+      .withColumn("par", expr("user_id % 2"))
+      .groupBy(col("event_type"), col("par"))
+      .agg(graft.vec.VecOps.heapCol(events.sparkSession,
+        -col("hv").cast("double"), col("event_id"), 5).as("top"))
+
   /** Root of every checkpoint the queries here write (RAM-backed tmpfs). */
   private val CkptRoot = "/dev/shm/graft-ckpt"
 
@@ -656,30 +670,23 @@ object StreamQueries {
       """)),
 
     // ---- streaming stratified sampling: bounded heap as state (round-10)
-    // The sampling family's streaming rung, and a reuse proof for the
-    // custom typed Aggregator surface: the SAME bounded-heap
-    // [[graft.functions.TopKAggregator]] that powers the batch
-    // `topk_heap_parts_by_brand` runs here as STREAMING AGGREGATION
-    // STATE — per (event_type, user-parity) stratum the state is the 5
-    // smallest salted hashes seen so far (k ScoredIds, ~80 bytes/key,
-    // mergeable across micro-batches exactly like its map-side partials
-    // merge in batch — min-k-of-hashes is an order-independent sketch,
-    // the KMV argument, so ANY batch split yields the same sample).
-    // Hashes are 48-bit (12 md5 hex chars) so the Double score is exact
-    // (< 2⁵³); complete-mode drain emits the final sample. This is the
-    // deterministic streaming form of per-stratum uniform sampling —
-    // the balanced train/eval quota maintained INCREMENTALLY.
+    // The sampling family's streaming rung: the engine's one bounded heap
+    // ([[graft.vec.VecOps.heapCol]], the same `topk_heap` that powers the
+    // batch `topk_heap_parts_by_brand`) runs here as STREAMING
+    // AGGREGATION STATE — per (event_type, user-parity) stratum the state
+    // is the 5 smallest salted hashes seen so far (the heap's serialized
+    // buffer, 4 + 5·16 bytes per key), merged across micro-batches
+    // exactly like its map-side partials merge in batch — min-k-of-hashes
+    // is an order-independent sketch, the KMV argument, so ANY batch
+    // split yields the same sample (StratifiedSampleRestartSpec drains it
+    // across a restart). Hashes are 48-bit (12 md5 hex chars) so the
+    // Double score is exact (< 2⁵³); complete-mode drain emits the final
+    // sample. This is the deterministic streaming form of per-stratum
+    // uniform sampling — the balanced train/eval quota maintained
+    // INCREMENTALLY.
     Reg("streaming_stratified_sample",
       (s, dir) => {
-        val topk = udaf(new graft.functions.TopKAggregator(5),
-          org.apache.spark.sql.Encoders.product[graft.functions.ScoredId])
-        val src = readEventsStream(s, dir)
-          .withColumn("hv", expr(
-            "CAST(conv(substring(md5(concat('ssamp:'," +
-              " CAST(event_id AS STRING))), 1, 12), 16, 10) AS BIGINT)"))
-          .withColumn("par", expr("user_id % 2"))
-        val agg = src.groupBy(col("event_type"), col("par"))
-          .agg(topk(-col("hv").cast("double"), col("event_id")).as("top"))
+        val agg = stratifiedSampleAgg(readEventsStream(s, dir))
         drain(agg, "complete")
           .select(col("event_type"), col("par"),
             posexplode(col("top")).as(Seq("i", "t")))

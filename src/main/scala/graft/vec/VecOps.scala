@@ -56,7 +56,15 @@ object VecOps {
   }
 
   /** Top-k per query from a (qid, nid, score) relation; rank ties broken
-    * by nid. */
+    * by nid. A rank window, not the [[heapCol]] heap, for three reasons:
+    *  - its graded outputs keep the input's nullable `nid`/`score`; the
+    *    heap struct's fields are NOT NULL, so a swap would change written
+    *    parquet schemas;
+    *  - the heap was measured in the brute truth: it halved the brute
+    *    stage's CPU but left `ann_recall_lsh` no faster end to end;
+    *  - `ann_lsh_topk` and `ann_recall_lsh`, the benchmark's
+    *    `batch_pipeline` traffic, run it, so a swap there is a
+    *    benchmark-visible change with no measured gain. */
   def topK(scores: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("score").desc, col("nid"))
@@ -65,53 +73,24 @@ object VecOps {
   }
 
   /** Bounded-heap aggregate column: per-group top-`k` under
-    * (score DESC, id ASC) as array<struct<score double, id bigint>>.
-    * Two ROW-IDENTICAL engines (TopKHeapAggSpec asserts it across
-    * tie-heavy, descending-feed and null cases): the round-16 native
-    * TypedImperativeAggregate [[graft.functions.TopKHeapAgg]] —
-    * primitive arrays updated in place inside the ObjectHashAggregate
-    * map, no per-row encoder round-trip (VERDICT r15 #2: the
-    * udaf(ScalaAggregator) form paid input-row → ScoredId Product →
-    * buffer-Seq re-encode on every one of the refine rung's 5.1×10⁸
-    * candidate rows) — and the round-15 udaf(ScalaAggregator)
-    * [[graft.functions.TopKAggregator]]. The casts to (double, bigint)
-    * are exactly the coercion the udaf's ScoredId encoder always
-    * applied, so the two engines see identical values.
-    *
-    * `routing = true` marks the two-level ROUTING heaps (one group per
-    * corpus vector, k = probes/fprobes ≤ 4, ≤ probes·√k input rows per
-    * group) as opposed to the CUT/PRESCORE heaps (one group per query,
-    * fprobes·E[cell] ≈ hundreds of candidate rows per group). The 1000×
-    * pure-engine A/B (BASELINE.md round-16) measured the engines' sign
-    * SPLITTING on exactly this axis — native consistently faster where
-    * per-group candidate volume dominates (ann_ivfpq_hier_topk
-    * 180.5 → 155.5 s), consistently slower on the routing shape
-    * (ivf_hier_topk 112.3 → 132.4 s, where tiny heaps make the per-group
-    * BufferRow indirection of TypedImperativeAggregate the marginal cost
-    * rather than the per-row encoder) — so the engine is chosen PER
-    * SITE: udaf on routing heaps, native on cut/prescore heaps, the
-    * mixed assignment validated by that A/B's third arm. */
+    * (score DESC, id ASC) as array<struct<score double, id bigint>>, both
+    * fields NOT NULL, through the native [[graft.functions.TopKHeapAgg]].
+    * The one Column entry point to the engine's top-k heap: every heap
+    * site — the routing heaps (one group per corpus vector, k ≤ 4), the
+    * cut and prescore heaps (one group per query, hundreds of candidate
+    * rows), the relational and streaming samples — builds it here. The
+    * casts let callers pass float, int or decimal columns. */
   private[graft] def heapCol(spark: org.apache.spark.sql.SparkSession,
-                             score: Column, id: Column, k: Int,
-                             routing: Boolean = false): Column = {
-    if (routing) {
-      val h = org.apache.spark.sql.functions.udaf(
-        new graft.functions.TopKAggregator(k),
-        org.apache.spark.sql.Encoders.product[graft.functions.ScoredId])
-      h(score, id)
-    } else {
-      graft.functions.TopKHeapAgg.register(spark)
-      org.apache.spark.sql.functions.call_function("topk_heap",
-        score.cast("double"), id.cast("bigint"), lit(k))
-    }
+                             score: Column, id: Column, k: Int): Column = {
+    graft.functions.TopKHeapAgg.register(spark)
+    org.apache.spark.sql.functions.call_function("topk_heap",
+      score.cast("double"), id.cast("bigint"), lit(k))
   }
 
   /** [[topK]] with the rank window replaced by the bounded-heap
-    * [[heapCol]] (the native [[graft.functions.TopKHeapAgg]]) — the
-    * matryoshka shortlist discipline (round 12) applied to a final top-k
-    * cut. Same
-    * (score DESC, nid ASC) total order and the same (qid, rank, nid,
-    * score) columns, so swapping a consumer from [[topK]] to this leaves
+    * [[heapCol]] — the matryoshka shortlist discipline (round 12) applied
+    * to a final top-k cut. Same (score DESC, nid ASC) total order and
+    * the same (qid, rank, nid, score) columns, so swapping a consumer from [[topK]] to this leaves
     * the graded values and their oracle untouched. The schema differs in
     * nullability: `nid` and `score` come out of the heap struct
     * ([[graft.functions.TopKHeapAgg]]'s `dataType`) non-nullable, where
@@ -316,8 +295,7 @@ object VecOps {
     * the full-vector column never shuffles; only (bucket, prefix) pairs
     * do, an mDims/64 shuffle-volume cut on the heavy stage.
     *
-    * The shortlist cut is the bounded-heap [[graft.functions
-    * .TopKAggregator]], NOT a rank window: the round-11 100× ScaleDemo
+    * The shortlist cut is the bounded-heap [[heapCol]], NOT a rank window: the round-11 100× ScaleDemo
     * measured the window form going 75× super-linear across the second
     * decade (BASELINE.md matryoshka row — sorting 39 M candidate rows
     * per-qid spills), while the heap carries at most `shortlist` entries
@@ -932,8 +910,7 @@ object VecOps {
     val probed = v.crossJoin(broadcast(idx.coarse))
       .withColumn("vg", expr("dot_f32(embedding, ge)"))
       .groupBy(col("vec_id"))
-      .agg(heapCol(vecs.sparkSession, col("vg"), col("gid"), probes,
-        routing = true).as("top"))
+      .agg(heapCol(vecs.sparkSession, col("vg"), col("gid"), probes).as("top"))
       .select(col("vec_id"), explode(col("top")).as("t"))
       .select(col("vec_id"), col("t.id").as("gid"))
     probed.join(v, "vec_id")
@@ -947,8 +924,8 @@ object VecOps {
     * k ∝ n the flat pass is n·k = n²/TargetCellSize dots, measured 18×
     * across the second ScaleDemo decade). Stage 1 scores each vector
     * against the ⌈√k⌉ coarse anchors and keeps its `probes` best (2,
-    * [[hierCandidates]]' default) via the bounded-heap
-    * [[graft.functions.TopKAggregator]] (no rank window — candidate
+    * [[hierCandidates]]' default) via the bounded-heap [[heapCol]]
+    * (no rank window — candidate
     * volume never hits a sort); stage 2 compares only against
     * fine centroids whose anchor was probed (a gid equi-join, expected
     * probes·√k comparisons per vector) and takes the argmax with the cid
@@ -1003,7 +980,8 @@ object VecOps {
     * [[hierCandidates]] relation under the same (cd DESC, cid ASC)
     * total order: the assignment argmax is element 1 of the query
     * side's fprobes-bounded heap. So: aggregate once, localCheckpoint
-    * the RESULT (n rows × fprobes ScoredIds — a routing table, vs the
+    * the RESULT (n rows × one fprobes-bounded heap array — a routing
+    * table, vs the
     * n·probes·√k candidate rows that now materialize exactly once),
     * and serve both consumers from it. Output-identical by
     * construction — same relation, same total order, so the graded
@@ -1015,8 +993,7 @@ object VecOps {
                                  fprobes: Int): DataFrame =
     hierCandidates(vecs, idx, probes)
       .groupBy(col("vec_id"))
-      .agg(heapCol(vecs.sparkSession, col("cd"), col("cid"), fprobes,
-        routing = true).as("top"))
+      .agg(heapCol(vecs.sparkSession, col("cd"), col("cid"), fprobes).as("top"))
       .localCheckpoint()
 
   /** The session's [[hierRouting]] table at (probes, fprobes) over

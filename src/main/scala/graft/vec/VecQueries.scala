@@ -1070,8 +1070,7 @@ object VecQueries {
         // on BOTH sides (the pearson/ccf zero-variance discipline).
         VecOps.hierCandidates(emb, VecOps.hierIndexShared(emb, dir))
           .groupBy(col("vec_id"))
-          .agg(VecOps.heapCol(s, col("cd"), col("cid"), 2,
-            routing = true).as("top"))
+          .agg(VecOps.heapCol(s, col("cd"), col("cid"), 2).as("top"))
           .filter(size(col("top")) === 2)
           .select(col("vec_id"), expr("top[0].id").as("cid"),
             expr("top[0].score").as("d1"), expr("top[1].score").as("d2"))

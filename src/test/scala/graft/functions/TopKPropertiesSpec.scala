@@ -4,55 +4,65 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Distribution-invariance properties of the bounded-buffer top-k
-  * aggregator — the law a partial/final aggregate MUST satisfy for the
-  * map-side combine to be correct at any partitioning: reduce rows in
-  * any order, merge partial buffers in any grouping, and the result
-  * equals global sort-take-k. (Pure JVM: the aggregator's reduce/merge
-  * are plain functions, no Spark session needed.) */
+/** Distribution-invariance properties of the bounded top-k buffer
+  * ([[TopKHeapBuf]], the state of `topk_heap`) — the law a partial/final
+  * aggregate MUST satisfy for the map-side combine to be correct at any
+  * partitioning: insert rows in any order, merge partial buffers in any
+  * grouping, and the result equals global sort-take-k. (Pure JVM: insert
+  * and mergeIn are plain methods, no Spark session needed.) */
 class TopKPropertiesSpec extends AnyFunSuite {
 
   private def samples[T](g: Gen[T], n: Int): Seq[T] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(1234L + i)))
 
   // scores drawn from few distinct values to exercise the id tie-break
-  private val rowsGen: Gen[List[ScoredId]] = for {
+  private val rowsGen: Gen[List[(Double, Long)]] = for {
     n <- Gen.choose(0, 200)
     rows <- Gen.listOfN(n, for {
       score <- Gen.oneOf(0.0, 1.0, 2.5, 2.5, 7.25, -3.0)
       id <- Gen.choose(0L, 50L)
-    } yield ScoredId(score, id))
+    } yield (score, id))
   } yield rows
 
+  private def fill(k: Int, rows: Seq[(Double, Long)]): TopKHeapBuf = {
+    val b = new TopKHeapBuf(k)
+    rows.foreach { case (s, i) => b.insert(s, i) }
+    b
+  }
+
+  private def merged(a: TopKHeapBuf, b: TopKHeapBuf): TopKHeapBuf = {
+    a.mergeIn(b); a
+  }
+
+  private def items(b: TopKHeapBuf): Seq[(Double, Long)] =
+    (0 until b.size).map(j => (b.scores(j), b.ids(j)))
+
   test("reduce-then-merge in any split equals global sort-take-k") {
-    val agg = new TopKAggregator(3)
     samples(rowsGen, 12).foreach { rows =>
       // NOTE: duplicate (score,id) rows are legal input and the buffer
       // keeps both (a group can contain equal-scored distinct rows
       // upstream; the fixture key is unique so dedup here mirrors it)
-      val data = rows.distinctBy(r => (r.score, r.id))
-      val expected = data.sortBy(r => (-r.score, r.id)).take(3)
-      // random 3-way split, each part reduced in its own order, then
+      val data = rows.distinct
+      val expected = data.sortBy { case (s, i) => (-s, i) }.take(3)
+      // random 3-way split, each part inserted in its own order, then
       // merged in a different association
       val (p1, rest) = data.splitAt(data.length / 3)
       val (p2, p3) = rest.splitAt(rest.length / 2)
-      def part(rows: Seq[ScoredId]) = rows.foldLeft(agg.zero)(agg.reduce)
-      val left = agg.merge(part(p1.reverse), part(p2))
-      val merged = agg.merge(left, part(p3.reverse))
-      assert(merged.items == expected,
-        s"split-merge diverged: ${merged.items} vs $expected")
+      val left = merged(fill(3, p1.reverse), fill(3, p2))
+      val all = merged(left, fill(3, p3.reverse))
+      assert(items(all) == expected,
+        s"split-merge diverged: ${items(all)} vs $expected")
       // merge must also be commutative
-      val swapped = agg.merge(part(p3), agg.merge(part(p2), part(p1)))
-      assert(swapped.items == expected)
+      val swapped = merged(fill(3, p3), merged(fill(3, p2), fill(3, p1)))
+      assert(items(swapped) == expected)
     }
   }
 
   test("buffer never exceeds k and stays totally ordered") {
-    val agg = new TopKAggregator(4)
     samples(rowsGen, 8).foreach { rows =>
-      val buf = rows.foldLeft(agg.zero)(agg.reduce)
-      assert(buf.items.length <= 4)
-      assert(buf.items == buf.items.sortBy(r => (-r.score, r.id)))
+      val buf = items(fill(4, rows))
+      assert(buf.length <= 4)
+      assert(buf == buf.sortBy { case (s, i) => (-s, i) })
     }
   }
 }
