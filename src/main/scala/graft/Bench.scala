@@ -28,18 +28,12 @@ object Bench {
       .config("spark.shuffle.compress", "false")
       .config("spark.shuffle.spill.compress", "false")
       .config("spark.broadcast.compress", "false")
-      // ObjectHashAggregate sort-fallback threshold: DELIBERATELY left at
-      // Spark's 128-key default here. The knob's sign flips with buffer
-      // shape (measured, BASELINE.md round-15): k-bounded heap buffers at
-      // third-decade candidate volumes want keys-in-memory (ivf_hier
-      // 1000× steady 219 → 110 s at 8M), but large list buffers
-      // (collect_list neighbor/basket lists) run 1.2–2.3× SLOWER
-      // hash-resident at sf0.1 (bellman_ford_3 2.90 → 6.75 s). The sf0.1
-      // bench is list-agg-heavy, so the default wins; the third-decade
-      // tool (ScaleDemo1000) sets 8M where the heap aggs dominate.
-      // Env-overridable for A/Bs.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG_THR", "128"))
+      // spark.sql.objectHashAggregate.sortBased.fallbackThreshold stays at
+      // Spark's 128-key default: list buffers (collect_list neighbor and
+      // basket lists) run 1.2–2.3× slower hash-resident at sf0.1
+      // (BASELINE.md round 15), and this bench is list-agg-heavy. Only
+      // ScaleDemo1000, where bounded heap aggs dominate, raises it (ivf_hier
+      // at 1000×: 219 → 110 s at 8M keys).
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (FS client, codegen compiler, shuffle infra) so the
@@ -128,8 +122,7 @@ object Bench {
     // on the heavy tail, which keeps the full rep discipline. At 300+
     // queries roughly half the registry sits under 0.3 s on a quiet
     // host, so this reclaims ~1 full rep-pass of cheap-query wall.
-    val fastS = sys.env.get("SPARK_GRAFT_BENCH_FAST_S").map(_.toDouble)
-      .getOrElse(0.3)
+    val fastS = 0.3
     for (rep <- 1 to reps; (name, fn) <- named) {
       val overBudget = (System.nanoTime() - benchT0) / 1e9 > budgetS
       val fastCapped = rep > 2 && times(name).headOption.exists(_ < fastS)

@@ -337,10 +337,6 @@ object ScaleDemo100 {
     val out10 = if (args.length > 1) args(1) else "/dev/shm/graft-scale10x"
     val out100 = if (args.length > 2) args(2) else "/dev/shm/graft-scale100x"
     val spark = session()
-    ScaleDemo.buildCore(spark, base, out10, 10)
-    ScaleDemo.buildStar(spark, base, out10, 10)
-    ScaleDemo.buildCore(spark, base, out100, 100)
-    ScaleDemo.buildStar(spark, base, out100, 100)
 
     val decades = Seq((base, "1x"), (out10, "10x"), (out100, "100x"))
     // resume support: skip already-recorded rows after a partial run
@@ -354,9 +350,21 @@ object ScaleDemo100 {
     // (all of that query's rows); unset = run everything not skipped
     val onlyRows: Option[Set[String]] = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").toSet)
-    def skip(key: String): Boolean =
-      skipSet(key) || onlyRows.exists(o =>
+    // every row key ends in its decade's tag; a decade's fixtures are
+    // built the first time a row that runs needs them
+    val fixtures = Map("10x" -> (out10, 10), "100x" -> (out100, 100))
+    val built = scala.collection.mutable.Set[String]()
+    def skip(key: String): Boolean = {
+      val skipped = skipSet(key) || onlyRows.exists(o =>
         !o.exists(p => key == p || key.startsWith(p + "@")))
+      val tag = key.drop(key.lastIndexOf('@') + 1)
+      if (!skipped && built.add(tag))
+        fixtures.get(tag).foreach { case (out, copies) =>
+          ScaleDemo.buildCore(spark, base, out, copies)
+          ScaleDemo.buildStar(spark, base, out, copies)
+        }
+      skipped
+    }
 
     // the scaled-knob production rows: every decade, knobs ∝ corpus.
     // mm_phash_neardup_pairs deliberately stops at 10×: its 4×8-bit

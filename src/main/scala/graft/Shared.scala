@@ -45,8 +45,9 @@ object Shared {
   def memo[T <: AnyRef](spark: SparkSession, dir: String, tag: String)(build: => T): T = {
     val key = (spark, dir, tag)
     // check-then-put, NOT computeIfAbsent: build functions nest Shared
-    // calls (hier3Top3Shared builds on lloyd2CentroidsShared), and a
-    // nested computeIfAbsent on the same ConcurrentHashMap throws
+    // calls (a hier family's top-3 builds on its routing table, which
+    // builds on lloyd2CentroidsShared), and a nested computeIfAbsent on
+    // the same ConcurrentHashMap throws
     // IllegalStateException("Recursive update") whenever the two keys
     // land in the same bin — a hash-layout-dependent landmine (round 16:
     // adding unrelated tags flipped it from latent to thrown). The graded

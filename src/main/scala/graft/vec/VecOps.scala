@@ -513,25 +513,6 @@ object VecOps {
     topK(scores, k)
   }
 
-  /** Session-shared shortlist-refine top-3 (planes = 4, shortlist = 10):
-    * the int8 bucket join + shortlist heap + full-precision re-rank is
-    * the expensive part, and its three graded consumers
-    * (ann_refine_topk + the recall/NDCG lenses) slice the same
-    * OUTPUT-sized ranked relation — the session-shared top-3 discipline
-    * (ADVICE r13: each consumer previously re-derived the whole refine
-    * pipeline, paying the bucket join three times per session).
-    *
-    * CONTRACT for this and every *Top3Shared helper below (ADVICE r16):
-    * the registry key is (session, dir, tag) and deliberately ignores
-    * which DataFrame `emb` is — callers MUST pass
-    * `Tables(s, dir).embeddings` (as every query-layer caller does); a
-    * filtered/derived frame would silently resolve to the canonical
-    * relation built from the full table. */
-  def refineTop3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "refine_top3") {
-      annRefineTopK(emb, planes = 4, shortlist = 10, k = 3)
-    }
-
   /** Flat IVF with RESIDUAL product quantization, encode stage only —
     * the faiss IndexIVFPQ shape that ivfpq_reconstruction_error grades:
     * (1) every vector is assigned to its nearest of `lists` md5-seeded
@@ -645,33 +626,6 @@ object VecOps {
       .select("qid", "nid", "score")
     topKHeap(scores, k)
   }
-
-  /** Session-shared hierarchical IVF-PQ top-3 over the scaled-k Lloyd
-    * table — the [[refineTop3Shared]] discipline for the hierarchical
-    * sibling: three graded consumers (topk + recall/NDCG lenses) slice
-    * one OUTPUT-sized ranked relation. */
-  def ivfpqHierTop3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "ivfpq_hier_top3") {
-      ivfPqHierTopK(emb, lloyd2CentroidsShared(emb, dir),
-        hierRoutingShared(emb, dir, probes = 2, fprobes = 2), k = 3)
-    }
-
-  /** Session-shared hierarchical IVF-PQ top-3 at the WIDE fine-probe
-    * dial (fprobes = 3) — round 16 (VERDICT r15 #1): the ann_ivfpq
-    * family re-platformed off the fixed-lists flat residual search
-    * (lists = 16 — the last graded quadratic: with fixed lists the
-    * probed-cell candidate join is n²·probes/lists) onto the scaled-k
-    * hierarchical machinery, grading the fprobes = 3 accuracy point of
-    * the residual rung (ann_ivfpq_hier_topk holds fprobes = 2; wider
-    * fine probing trades fprobes/2× candidate volume for recall, priced
-    * by the family's recall/NDCG lenses). The flat form is retired; its
-    * decade readings stay in BASELINE.md. Three graded consumers slice
-    * this one OUTPUT-sized relation. */
-  def ivfpqF3Top3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "ivfpq_f3_top3") {
-      ivfPqHierTopK(emb, lloyd2CentroidsShared(emb, dir),
-        hierRoutingShared(emb, dir, probes = 2, fprobes = 3), k = 3)
-    }
 
   /** Per-cell snapped means of an assigned (cid, embedding) relation —
     * the Lloyd mean-update of both levels of [[twoLevelCentroids]]. Each
@@ -891,8 +845,8 @@ object VecOps {
     * ([[lloyd2CentroidsShared]]): built once per (session, dir) in the
     * session memo and read by every graded consumer of the hier family —
     * silhouette, semdedup and its streaming twin, and each routing table
-    * of [[hierRoutingShared]]. Same caller contract as the *Top3Shared
-    * helpers: `emb` must be `Tables(s, dir).embeddings`. */
+    * of [[hierRoutingShared]]. The memo key ignores which frame `emb`
+    * is, so `emb` must be `Tables(s, dir).embeddings`. */
   def hierIndexShared(emb: DataFrame, dir: String): HierIndex =
     graft.Shared.memo(emb.sparkSession, dir, "hier_index")(
       hierIndex(lloyd2CentroidsShared(emb, dir)))
@@ -1118,76 +1072,6 @@ object VecOps {
       .select("qid", "nid", "score")
     topKHeap(scores, k)
   }
-
-  /** Session-shared hier-refine top-3 (fprobes = 2, shortlist = 16 —
-    * the graded knobs; the oracle's `r16 <= 16` cut mirrors them, so
-    * change both together) — the [[refineTop3Shared]] discipline for
-    * the rung's three graded consumers. */
-  def hierRefineTop3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "hier_refine_top3") {
-      ivfHierRefineTopK(emb, hierRoutingShared(emb, dir, probes = 2, fprobes = 2),
-        shortlist = 16, k = 3)
-    }
-
-  /** Session-shared two-level IVF top-3 (fprobes = 2 — ivf_hier_topk's
-    * graded knobs): round 16 applies the refineTop3Shared discipline to
-    * the hier family's three consumers (topk + recall/NDCG lenses),
-    * which each re-ran the full search before — the routing table was
-    * already shared ([[hierRoutingShared]]), but the candidate join +
-    * rescore was paid three times per session. */
-  def hierTop3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "hier_top3") {
-      ivfHierTopK(emb, hierRoutingShared(emb, dir, probes = 2, fprobes = 2), k = 3)
-    }
-
-  /** Session-shared two-level IVF top-3 at the WIDE fine-probe dial
-    * (fprobes = 3) — round 16 (VERDICT r15 #1): the ivf_ann family
-    * re-platformed off the fixed-lists flat IVF search (lists = 16, the
-    * priced quadratic, retired; its decade readings stay in BASELINE.md)
-    * onto the hierarchical search, grading the fine-probe width dial: three fine
-    * cells per query instead of ivf_hier_topk's two (the coarse width's
-    * twin dial — ivf_lloyd2_topk grades coarse probes = 3). Recall must
-    * dominate ann_recall_hier's by construction (a superset of probed
-    * cells); the lenses price exactly that. */
-  def hier3Top3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "hier_f3_top3") {
-      ivfHierTopK(emb, hierRoutingShared(emb, dir, probes = 2, fprobes = 3), k = 3)
-    }
-
-  /** Session-shared top-3 relations for the seven flat/compression ANN
-    * families (round 16): each family's topk query and its recall/NDCG
-    * lenses re-ran the identical (planes = 4, k = 3) pipeline once per
-    * consumer per rep — the refineTop3Shared discipline
-    * applied to the REST of the eval matrix. Every relation is
-    * output-sized (≤ 3 rows per query vector); the graded knobs are
-    * unchanged, so every consumer's output and oracle are untouched. */
-  def lshTop3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "lsh_top3")(
-      annLshTopK(emb, planes = 4, k = 3))
-
-  def multiprobeTop3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "multiprobe_top3")(
-      annMultiProbeTopK(emb, planes = 4, k = 3))
-
-  def int8Top3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "int8_top3")(
-      annInt8TopK(emb, planes = 4, k = 3))
-
-  def binaryTop3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "binary_top3")(
-      annBinaryTopK(emb, planes = 4, k = 3))
-
-  def pqTop3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "pq_top3")(
-      pqTopK(emb, planes = 4, k = 3))
-
-  def opqTop3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "opq_top3")(
-      pqTopK(opqRotate(emb).localCheckpoint(), planes = 4, k = 3))
-
-  def matryoshkaTop3Shared(emb: DataFrame, dir: String): DataFrame =
-    graft.Shared.relation(emb.sparkSession, dir, "matryoshka_top3")(
-      matryoshkaTopK(emb, planes = 4, mDims = 16, shortlist = 8, k = 3))
 
   /** SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication", 2023): embedding-level

@@ -1,7 +1,7 @@
 package graft.vec
 
-import graft.{Reg, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.{Reg, Shared, Tables}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graded similarity-search queries over `embeddings` (SURVEY.md §1.2).
@@ -248,7 +248,7 @@ object VecQueries {
         ORDER BY a.vec_id
       """
 
-  /** pm + sg + emb2 CTEs mirroring [[VecOps.opqTop3Shared]]'s rotation:
+  /** pm + sg + emb2 CTEs mirroring [[VecOps.opqRotate]]:
     * an md5-derived signed coordinate permutation of every vector. Ends
     * with `emb2(vec_id, embedding)`. */
   private val opqRotCtes: String = """
@@ -262,16 +262,11 @@ object VecQueries {
                          FOR j IN range(64)] AS embedding
                  FROM embeddings e, pm, sg)"""
 
-  /** The 25% md5 query sample as a WHERE clause on the query side `a`. */
-  private val sampleWhere: String =
-    "WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 15))::BIGINT % 4 = 0"
-
   /** The PQ-ANN pipeline over `src`, mirroring [[VecOps.pqTopK]] exactly:
     * LSH signature, the 4×8 codebook (slices of the md5-seeded vectors),
     * per-subspace encode, reconstruction, bucketed asymmetric rerank.
-    * `sample` narrows the query side ("" = all queries). Ends with
-    * `pr(qid, nid, d, rank)`. */
-  private def pqRankCtes(src: String, sample: String): String = s"""
+    * Ends with `pr(qid, nid, d, rank)`. */
+  private def pqRankCtes(src: String): String = s"""
         ${hpSigCtes(64, src)},
         seeds AS (
           SELECT vec_id AS cid, embedding AS ce
@@ -299,21 +294,10 @@ object VecQueries {
                        i -> a.embedding[i]::DOUBLE * r.recon[i]::DOUBLE)) AS d
               FROM sig a
               JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              JOIN recon r ON r.nid = b.vec_id
-              $sample),
+              JOIN recon r ON r.nid = b.vec_id),
         pr AS (SELECT qid, nid, d,
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
                FROM p)"""
-
-  /** The PQ top-3 oracle: `prefixCtes` (empty, or the OPQ rotation plus
-    * a trailing comma) then the identical pipeline over `src`. */
-  private def pqOracleSql(prefixCtes: String, src: String): String = s"""
-        WITH $prefixCtes
-        ${pqRankCtes(src, "")}
-        SELECT qid, rank, nid, round(d, 4) AS score
-        FROM pr WHERE rank <= 3
-        ORDER BY qid, rank
-      """
 
   // ---- the ANN evaluation lenses: recall@3 and NDCG@3 -------------------
   // Every graded index family carries both lenses, graded against ONE
@@ -340,11 +324,10 @@ object VecQueries {
 
   /** Per-query recall@3 of an index family's top-3 relation against the
     * shared sampled brute ground truth. */
-  private def annRecall3(emb: DataFrame, dir: String,
-                         top3: (DataFrame, String) => DataFrame): DataFrame = {
+  private def annRecall3(emb: DataFrame, dir: String, top3: DataFrame): DataFrame = {
     val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
       .select(col("qid"), col("nid"))
-    val hits = top3(emb, dir).filter(sampleKeep)
+    val hits = top3.filter(sampleKeep)
       .select(col("qid"), col("nid")).withColumn("hit", lit(1))
     brute.join(hits, Seq("qid", "nid"), "left")
       .groupBy(col("qid"))
@@ -354,9 +337,8 @@ object VecQueries {
 
   /** Per-query DCG/NDCG of an index family's top-3 relation, read as
     * (qid, nid, pos ≤ 3), against the shared sampled brute ground truth. */
-  private def annNdcg3(emb: DataFrame, dir: String,
-                       top3: (DataFrame, String) => DataFrame): DataFrame = {
-    val idx = top3(emb, dir).filter(sampleKeep)
+  private def annNdcg3(emb: DataFrame, dir: String, top3: DataFrame): DataFrame = {
+    val idx = top3.filter(sampleKeep)
       .select(col("qid"), col("nid"), col("rank").as("pos"))
     val brute = VecOps.bruteTop5Shared(emb, dir).filter(col("rank") <= 3)
       .select(col("qid"), col("nid"), (lit(4L) - col("rank")).as("rel"),
@@ -413,7 +395,7 @@ object VecQueries {
         ORDER BY i.qid
       """
 
-  // ---- per-family index CTEs, each ending in idx(qid, nid, pos) --------
+  // ---- per-family rank CTEs, each ending in a ranked relation -----------
 
   /** `idx` as the sampled top-3 of a ranked `(qid, nid, …, rank)` CTE
     * computed over all queries. */
@@ -432,12 +414,10 @@ object VecQueries {
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
                FROM lp)"""
 
-  private val lshIdxCtes: String = s"$lshRankCtes,${sampledTop3Idx("lr")}"
-
   /** Binary-quantized search ([[VecOps.annBinaryTopK]]): LSH buckets
-    * reranked by sign-bit Hamming similarity; `sample` narrows the query
-    * side ("" = all queries). Ends with `ir(qid, nid, score, rank)`. */
-  private def binRankCtes(sample: String): String = s"""
+    * reranked by sign-bit Hamming similarity. Ends with
+    * `ir(qid, nid, score, rank)`. */
+  private val binRankCtes: String = s"""
         ${hpSigCtes(64)},
         bq AS (SELECT s.vec_id, s.bucket,
                       CAST(sum(CASE WHEN s.embedding[i.i + 1]::DOUBLE > 0.0
@@ -448,15 +428,10 @@ object VecQueries {
         p AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
                      CAST(64 - bit_count(xor(a.bq0, b.bq0))
                              - bit_count(xor(a.bq1, b.bq1)) AS INT) AS score
-              FROM bq a JOIN bq b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              $sample),
+              FROM bq a JOIN bq b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
         ir AS (SELECT qid, nid, score,
                       row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
                FROM p)"""
-
-  private val binIdxCtes: String = s"""
-        ${binRankCtes(sampleWhere)},
-        idx AS (SELECT qid, nid, rank AS pos FROM ir WHERE rank <= 3)"""
 
   /** Multi-probe LSH search ([[VecOps.annMultiProbeTopK]]): each query
     * probes its own bucket and every bucket XOR one bit, exact dots.
@@ -472,17 +447,10 @@ object VecQueries {
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
                FROM lp)"""
 
-  private val mpIdxCtes: String = s"$mpRankCtes,${sampledTop3Idx("lr")}"
-
-  private val pqIdxCtes: String = s"""
-        ${pqRankCtes("embeddings", sampleWhere)},
-        idx AS (SELECT qid, nid, rank AS pos FROM pr WHERE rank <= 3)"""
-
   /** int8-quantized search ([[VecOps.annInt8TopK]]): LSH buckets
-    * reranked by the integer dot of round(x·127) vectors; `sample`
-    * narrows the query side ("" = all queries). Ends with
+    * reranked by the integer dot of round(x·127) vectors. Ends with
     * `ir(qid, nid, score, rank)`. */
-  private def int8RankCtes(sample: String): String = s"""
+  private val int8RankCtes: String = s"""
         ${hpSigCtes(64)},
         q8 AS (SELECT vec_id, bucket,
                       list_transform(embedding, x -> CAST(round(x::DOUBLE * 127) AS INT)) AS q
@@ -490,33 +458,21 @@ object VecQueries {
         p AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
                      CAST(list_sum(list_transform(range(1, 65),
                        i -> CAST(a.q[i] AS BIGINT) * b.q[i])) AS BIGINT) AS score
-              FROM q8 a JOIN q8 b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-              $sample),
+              FROM q8 a JOIN q8 b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
         ir AS (SELECT qid, nid, score,
                       row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
                FROM p)"""
 
-  private val int8IdxCtes: String = s"""
-        ${int8RankCtes(sampleWhere)},
-        idx AS (SELECT qid, nid, rank AS pos FROM ir WHERE rank <= 3)"""
-
-  private val opqIdxCtes: String = s"""
-        $opqRotCtes,
-        ${pqRankCtes("emb2", sampleWhere)},
-        idx AS (SELECT qid, nid, rank AS pos FROM pr WHERE rank <= 3)"""
-
   /** Matryoshka two-stage search ([[VecOps.matryoshkaTopK]]): 16-dim
     * prefix buckets and an 8-row prefix-dot shortlist, then the full
-    * 64-dim rerank; `sample` narrows the query side ("" = all queries).
-    * Ends with `mr(qid, nid, d, rank)`. */
-  private def matRankCtes(sample: String): String = s"""
+    * 64-dim rerank. Ends with `mr(qid, nid, d, rank)`. */
+  private val matRankCtes: String = s"""
         ${hpSigCtes(16)},
         cand AS (SELECT a.vec_id AS qid, a.embedding AS qe,
                         b.vec_id AS nid, b.embedding AS ne,
                         list_sum(list_transform(range(1, 17),
                           i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE)) AS d16
-                 FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-                 $sample),
+                 FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
         short AS (SELECT qid, nid, qe, ne,
                          row_number() OVER (PARTITION BY qid ORDER BY d16 DESC, nid) AS r16
                   FROM cand),
@@ -527,10 +483,6 @@ object VecQueries {
         mr AS (SELECT qid, nid, d,
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
                FROM scored)"""
-
-  private val matIdxCtes: String = s"""
-        ${matRankCtes(sampleWhere)},
-        idx AS (SELECT qid, nid, rank AS pos FROM mr WHERE rank <= 3)"""
 
   /** DuckDB CTEs mirroring [[VecOps.ivfHierTopK]] at the graded
     * fprobes = 2 dial over the shared lloyd2/hierAssign blocks: qf (the
@@ -556,8 +508,6 @@ object VecQueries {
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
                FROM sc)"""
 
-  private lazy val hierIdxCtes: String = s"$hierCoreCtes,${sampledTop3Idx("hr")}"
-
   /** DuckDB CTEs mirroring [[VecOps.ivfHierRefineTopK]] (fprobes = 2,
     * shortlist = 16, mDims = 32) stage-for-stage over the shared
     * lloyd2/hierAssign blocks: qf (2 best fine cells per query, as in
@@ -565,8 +515,8 @@ object VecQueries {
     * on (prefix-dot DESC, nid) ≡ the bounded heap's total order),
     * rx/rr (full-precision re-rank of shortlist pairs only). Ends with
     * `rr(qid, nid, d, rank)` — the relation the rung's three consumers
-    * slice. Knobs are part of the oracle contract: change them in
-    * hierRefineTop3Shared and here together or not at all. */
+    * slice. Knobs are part of the oracle contract: change them in the
+    * hier_refine family row and here together or not at all. */
   private lazy val hierRefineCoreCtes: String = s"""
         $lloyd2Ctes,
         $hierAssignCtes,
@@ -641,9 +591,8 @@ object VecQueries {
 
   /** Shortlist-then-refine CTEs mirroring [[VecOps.annRefineTopK]]
     * (planes=4, shortlist=10): int8 bucket rerank → top-10 cut → exact
-    * float re-score, ending in `rr(qid, nid, d, rank)`. `sample` narrows
-    * the query side for the recall/NDCG lenses ("" = all queries). */
-  private def refineCoreCtes(sample: String): String = s"""
+    * float re-score, ending in `rr(qid, nid, d, rank)`. */
+  private val refineCoreCtes: String = s"""
         ${hpSigCtes(64)},
         q8 AS (SELECT vec_id, bucket,
                       list_transform(embedding, x -> CAST(round(x::DOUBLE * 127) AS INT)) AS q
@@ -651,8 +600,7 @@ object VecQueries {
         ip AS (SELECT a.vec_id AS qid, b.vec_id AS nid,
                       CAST(list_sum(list_transform(range(1, 65),
                         i -> CAST(a.q[i] AS BIGINT) * b.q[i])) AS BIGINT) AS iscore
-               FROM q8 a JOIN q8 b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-               $sample),
+               FROM q8 a JOIN q8 b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
         sl AS (SELECT qid, nid FROM (
                  SELECT qid, nid,
                         row_number() OVER (PARTITION BY qid ORDER BY iscore DESC, nid) AS r
@@ -663,10 +611,6 @@ object VecQueries {
         rr AS (SELECT qid, nid, d,
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
                FROM rx)"""
-
-  private val refineIdxCtes: String = s"""
-        ${refineCoreCtes(sampleWhere)},
-        idx AS (SELECT qid, nid, rank AS pos FROM rr WHERE rank <= 3)"""
 
   /** Hier search CTEs at the WIDE fine-probe dial (fprobes = 3) — the
     * round-16 re-platform target for the ivf_ann family (VERDICT r15
@@ -693,8 +637,6 @@ object VecQueries {
         h3r AS (SELECT qid, nid, d,
                        row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
                 FROM sc3)"""
-
-  private lazy val hierF3IdxCtes: String = s"$hierF3CoreCtes,${sampledTop3Idx("h3r")}"
 
   /** DuckDB CTEs mirroring [[VecOps.ivfPqHierTopK]] over the shared
     * scaled-k Lloyd table, ending in `hr(qid, nid, d, rank)` — sliced by
@@ -750,46 +692,162 @@ object VecQueries {
                       row_number() OVER (PARTITION BY qid ORDER BY d DESC, nid) AS rank
                FROM hsc)"""
 
-  private lazy val ivfpqIdxCtes: String = s"${ivfpqHierCtes(3)},${sampledTop3Idx("hr")}"
+  /** One graded ANN index family, and the only place its index is
+    * defined. `search` is the raw index search at the graded knobs,
+    * (qid, nid, score, rank) for the top 3 of every query; [[top3]] holds
+    * it once per (session, dir) under the memo `tag`, and the family's
+    * three graded queries read that one relation: the top-k query `topk`
+    * and the lenses `ann_recall_<suffix>` and `ann_ndcg_<suffix>`.
+    * `rankCtes` replays the same search in DuckDB over every query and
+    * ends in `rel(qid, nid, d or score, rank)`: the top-k oracle cuts it
+    * at rank 3, the lens oracles at rank 3 on the 25% md5 query sample
+    * (a rank is a row_number per qid, so it does not depend on which
+    * other queries are present). Every oracle replays the index stage for
+    * stage, so the hash-match does not depend on the index's recall. An
+    * `intScore` family ranks by an integer score and reports it as is;
+    * the others report round(d, 4). `why` says what the lens pair prices
+    * for this family. */
+  private[vec] final case class AnnFamily(suffix: String, topk: String, tag: String,
+      search: (DataFrame, String) => DataFrame, rankCtes: String, rel: String,
+      why: String, intScore: Boolean = false) {
 
-  private lazy val ivfpqHierIdxCtes: String = s"${ivfpqHierCtes(2)},${sampledTop3Idx("hr")}"
+    /** The family's top-3 relation, searched over the session's own
+      * embeddings: the memo key names no frame, so none is taken. */
+    def top3(s: SparkSession, dir: String): DataFrame =
+      Shared.relation(s, dir, tag)(search(Tables(s, dir).embeddings, dir))
 
-  private lazy val hierRefineIdxCtes: String = s"$hierRefineCoreCtes,${sampledTop3Idx("rr")}"
+    val topkOracle: String = s"""
+        WITH $rankCtes
+        SELECT qid, rank, nid, ${if (intScore) "score" else "round(d, 4) AS score"}
+        FROM $rel WHERE rank <= 3
+        ORDER BY qid, rank
+      """
 
-  /** One graded ANN index family: `ann_recall_<suffix>` and
-    * `ann_ndcg_<suffix>` both read `top3`, the family's session-shared
-    * top-3 relation, and both oracles replay `idxCtes`, which ends with
-    * `idx(qid, nid, pos)` over the 25% md5 query sample. `why` says
-    * what the lens pair prices for this family. */
-  private final case class AnnFamily(suffix: String,
-      top3: (DataFrame, String) => DataFrame, idxCtes: String, why: String)
+    def regs: Seq[Reg] = {
+      val idxCtes = s"$rankCtes,${sampledTop3Idx(rel)}"
+      Seq(
+        Reg(topk,
+          (s, dir) => top3(s, dir)
+            .select(col("qid"), col("rank"), col("nid"),
+              if (intScore) col("score") else round(col("score"), 4).as("score"))
+            .orderBy("qid", "rank"),
+          Some(topkOracle)),
+        Reg(s"ann_recall_$suffix",
+          (s, dir) => annRecall3(Tables(s, dir).embeddings, dir, top3(s, dir)),
+          Some(recall3OracleSql(idxCtes))),
+        Reg(s"ann_ndcg_$suffix",
+          (s, dir) => annNdcg3(Tables(s, dir).embeddings, dir, top3(s, dir)),
+          Some(ndcg3OracleSql(idxCtes))))
+    }
+  }
 
-  private val annFamilies: Seq[AnnFamily] = Seq(
-    AnnFamily("lsh", VecOps.lshTop3Shared, lshIdxCtes,
-      "one table of hyperplane buckets, exact-dot rerank: the baseline rung"),
-    AnnFamily("ivf", VecOps.hier3Top3Shared, hierF3IdxCtes,
+  /** The lsh row; ann_persisted_index_topk and rrf_fusion_topk read its
+    * rank CTEs too. */
+  private val lshFamily: AnnFamily = AnnFamily("lsh", "ann_lsh_topk", "lsh_top3",
+    (emb, _) => VecOps.annLshTopK(emb, planes = 4, k = 3), lshRankCtes, "lr",
+    "one table of hyperplane buckets, exact-dot rerank: the baseline rung")
+
+  private[vec] val annFamilies: Seq[AnnFamily] = Seq(lshFamily,
+    // The fine-probe width dial of the hier search: 3 best fine cells per
+    // query against hier's 2 (ivf_lloyd2_topk grades the coarse twin dial,
+    // probes = 3). A fixed-lists flat IVF would pay the n²·probes/lists
+    // candidate join; the scaled-k hier search stays n·√k. The probed
+    // cells are a superset of hier's, and the lenses price that 3/2×
+    // candidate volume.
+    AnnFamily("ivf", "ivf_ann_topk", "hier_f3_top3",
+      (emb, dir) => VecOps.ivfHierTopK(emb,
+        VecOps.hierRoutingShared(emb, dir, probes = 2, fprobes = 3), k = 3),
+      hierF3CoreCtes, "h3r",
       "hier search at fprobes = 3: probes a superset of hier's cells, so never recalls less"),
-    AnnFamily("hier", VecOps.hierTop3Shared, hierIdxCtes,
+    // Two-level (IMI-style) IVF: neighbors and queries route coarse→fine
+    // the same way (2 coarse anchors → 2 best fine cells among their
+    // members → candidates in those cells), so neither side scans all k
+    // centroids and the search stays n·√k when k ∝ n. It shares the
+    // session's Lloyd centroid table; every stage is an argmax/top-m with
+    // (dot DESC, id) tiebreaks, and hierAssignCtes is semdedup's too.
+    AnnFamily("hier", "ivf_hier_topk", "hier_top3",
+      (emb, dir) => VecOps.ivfHierTopK(emb,
+        VecOps.hierRoutingShared(emb, dir, probes = 2, fprobes = 2), k = 3),
+      hierCoreCtes, "hr",
       "hier search at fprobes = 2: loses a neighbor whose cell's anchor is not probed"),
-    AnnFamily("int8", VecOps.int8Top3Shared, int8IdxCtes,
-      "LSH buckets ranked by the int8 dot: what 4x compression costs"),
-    AnnFamily("binary", VecOps.binaryTop3Shared, binIdxCtes,
-      "LSH buckets ranked by sign-bit Hamming: the 1-bit, tie-heavy rung"),
-    AnnFamily("multiprobe", VecOps.multiprobeTop3Shared, mpIdxCtes,
+    // lsh's buckets ranked by the integer dot of round(x·127) vectors: 4×
+    // smaller storage, and a BIGINT score that is hash-exact by
+    // construction. Quantized ties are more common than float ties, so
+    // the nid tiebreak is load-bearing.
+    AnnFamily("int8", "ann_int8_topk", "int8_top3",
+      (emb, _) => VecOps.annInt8TopK(emb, planes = 4, k = 3), int8RankCtes, "ir",
+      "LSH buckets ranked by the int8 dot: what 4x compression costs", intScore = true),
+    // lsh's buckets reranked by Hamming similarity of sign-bit fingerprints
+    // (64 bits per vector, 32× smaller than float32). Integer end to end;
+    // 1-bit ties are pervasive, so the nid tiebreak is load-bearing.
+    AnnFamily("binary", "ann_binary_topk", "binary_top3",
+      (emb, _) => VecOps.annBinaryTopK(emb, planes = 4, k = 3), binRankCtes, "ir",
+      "LSH buckets ranked by sign-bit Hamming: the 1-bit, tie-heavy rung", intScore = true),
+    AnnFamily("multiprobe", "ann_multiprobe_topk", "multiprobe_top3",
+      (emb, _) => VecOps.annMultiProbeTopK(emb, planes = 4, k = 3), mpRankCtes, "lr",
       "own bucket plus its Hamming-1 buckets: recall bought by probing, not tables"),
-    AnnFamily("pq", VecOps.pqTop3Shared, pqIdxCtes,
+    // 4 subspaces × 8 codewords (slices of the md5-seeded vectors); lsh's
+    // bucket candidates ranked by full-precision query × reconstruction.
+    // Codes match across engines because assignment maximizes
+    // dot(x_s, cw) − ‖cw‖²/2 with both dots index-ordered (the same IEEE
+    // op sequence); assignment and rank ties break on id.
+    AnnFamily("pq", "ann_pq_topk", "pq_top3",
+      (emb, _) => VecOps.pqTopK(emb, planes = 4, k = 3), pqRankCtes("embeddings"), "pr",
       "4x8-codeword reconstructions, asymmetric rerank: recall vs compression"),
-    AnnFamily("opq", VecOps.opqTop3Shared, opqIdxCtes,
+    // A signed coordinate permutation (orthonormal, so dots and rankings
+    // are exactly preserved) decorrelates the subspace slices before pq's
+    // pipeline runs. The rotated relation is localCheckpointed: the
+    // 64-term rotation otherwise re-evaluates in every branch of the PQ
+    // plan that reads it (3.1 → 1.5 s at sf0.1, values bit-identical).
+    AnnFamily("opq", "ann_opq_topk", "opq_top3",
+      (emb, _) => VecOps.pqTopK(VecOps.opqRotate(emb).localCheckpoint(), planes = 4, k = 3),
+      s"$opqRotCtes,${pqRankCtes("emb2")}", "pr",
       "PQ after a signed coordinate permutation: does decorrelation beat PQ"),
-    AnnFamily("matryoshka", VecOps.matryoshkaTop3Shared, matIdxCtes,
+    // Buckets and the 8-row shortlist read only the first 16 dims (4
+    // hyperplanes restricted to the prefix); the shortlist is re-ranked by
+    // the full 64-dim dot.
+    AnnFamily("matryoshka", "matryoshka_topk", "matryoshka_top3",
+      (emb, _) => VecOps.matryoshkaTopK(emb, planes = 4, mDims = 16, shortlist = 8, k = 3),
+      matRankCtes, "mr",
       "16-dim prefix shortlist of 8, full rerank: truth lost before the rerank"),
-    AnnFamily("ivfpq", VecOps.ivfpqF3Top3Shared, ivfpqIdxCtes,
+    // ivfpq_hier's residual search at 3 probed fine cells per query
+    // instead of 2. A fixed-lists flat coarse quantizer would pay the
+    // n²/lists candidate join; the widened probe set recovers true
+    // neighbors whose cell ranks third.
+    AnnFamily("ivfpq", "ann_ivfpq_topk", "ivfpq_f3_top3",
+      (emb, dir) => VecOps.ivfPqHierTopK(emb, VecOps.lloyd2CentroidsShared(emb, dir),
+        VecOps.hierRoutingShared(emb, dir, probes = 2, fprobes = 3), k = 3),
+      ivfpqHierCtes(3), "hr",
       "hier residual PQ at fprobes = 3: the wide-probe residual rung"),
-    AnnFamily("refine", VecOps.refineTop3Shared, refineIdxCtes,
+    // int8's bucket rerank retrieves 10 candidates per query and exact
+    // float re-scoring cuts the top 3: compressed-index cost, near-exact
+    // ranking of the survivors.
+    AnnFamily("refine", "ann_refine_topk", "refine_top3",
+      (emb, _) => VecOps.annRefineTopK(emb, planes = 4, shortlist = 10, k = 3),
+      refineCoreCtes, "rr",
       "int8's top-10 reranked exactly: same candidates, so never recalls less"),
-    AnnFamily("ivfpq_hier", VecOps.ivfpqHierTop3Shared, ivfpqHierIdxCtes,
+    // hier routing over the scaled-k Lloyd table (n·√k dots; with
+    // lists ∝ n a flat broadcast argmax is n·k), the residual
+    // v − ce(cell) product-quantized against a salted 8-codeword book,
+    // candidates re-scored by dot(q, ce + PQ(r)). The residual and recon
+    // arrays are bit-identical across engines: the oracle casts its
+    // snapped means to FLOAT before subtracting (see ivfPqHierTopK).
+    AnnFamily("ivfpq_hier", "ann_ivfpq_hier_topk", "ivfpq_hier_top3",
+      (emb, dir) => VecOps.ivfPqHierTopK(emb, VecOps.lloyd2CentroidsShared(emb, dir),
+        VecOps.hierRoutingShared(emb, dir, probes = 2, fprobes = 2), k = 3),
+      ivfpqHierCtes(2), "hr",
       "hier residual PQ at fprobes = 2: the rung whose lists grow with n"),
-    AnnFamily("hier_refine", VecOps.hierRefineTop3Shared, hierRefineIdxCtes,
+    // hier's routing, then a prescore on the leading 32 dims (half the
+    // arithmetic and shuffled bytes); a bounded heap keeps 16 per query on
+    // (prefix-dot DESC, nid), and only those pairs fetch full vectors:
+    // 16 full dots per query against E[cell]·fprobes ≈ 256. The (32, 16)
+    // dial was measured before it was picked (recall 0.480 against hier's
+    // 0.643 on this near-uniform fixture; the curve is in
+    // ivfHierRefineTopK's scaladoc). hierRefineCoreCtes mirrors the knobs.
+    AnnFamily("hier_refine", "ivf_hier_refine_topk", "hier_refine_top3",
+      (emb, dir) => VecOps.ivfHierRefineTopK(emb,
+        VecOps.hierRoutingShared(emb, dir, probes = 2, fprobes = 2), shortlist = 16, k = 3),
+      hierRefineCoreCtes, "rr",
       "hier search, 32-dim prefix shortlist of 16, exact rerank: rescore bound"))
 
   val all: Seq[Reg] = Seq(
@@ -843,20 +901,6 @@ object VecQueries {
         ORDER BY qid, rank
       """)),
 
-    // ---- ANN: random-hyperplane LSH bucket + in-bucket top-3 ------------
-    // Oracle mirrors the LSH exactly (md5-derived hyperplanes), so the
-    // hash-match is independent of LSH recall.
-    Reg("ann_lsh_topk",
-      (s, dir) => VecOps.lshTop3Shared(Tables(s, dir).embeddings, dir)
-        .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
-        .orderBy("qid", "rank"),
-      Some(s"""
-        WITH $lshRankCtes
-        SELECT qid, rank, nid, round(d, 4) AS score
-        FROM lr WHERE rank <= 3
-        ORDER BY qid, rank
-      """)),
-
     // ---- persisted ANN index lifecycle (round-9, VERDICT r8 #3) ---------
     // A 100 TB pipeline builds the ANN index ONCE to storage and serves
     // many query batches from it — this query grades that lifecycle, not
@@ -882,10 +926,13 @@ object VecQueries {
           java.nio.file.Files.size(src))
         val store = java.nio.file.Paths.get(s"/dev/shm/graft-annidx/$key")
         graft.sources.Fixtures.delete(store)
-        VecOps.lshBucket(Tables(s, dir).embeddings, planes = 4)
-          .select(col("vec_id"), col("embedding"), col("bucket"))
-          .write.partitionBy("bucket").parquet(store.toString)
-        val idx = s.read.parquet(store.toString)
+        // bucket is written as INT, the type a partition directory of
+        // small integers reads back as; the store is read with the schema
+        // written, since a zero-row corpus writes no file to infer one from
+        val written = VecOps.lshBucket(Tables(s, dir).embeddings, planes = 4)
+          .select(col("vec_id"), col("embedding"), col("bucket").cast("int"))
+        written.write.partitionBy("bucket").parquet(store.toString)
+        val idx = s.read.schema(written.schema).parquet(store.toString)
         val q = idx.select(col("vec_id").as("qid"),
           col("embedding").as("qe"), col("bucket"))
         val n = idx.select(col("vec_id").as("nid"),
@@ -898,12 +945,7 @@ object VecQueries {
             round(col("score"), 4).as("score"))
           .orderBy("qid", "rank")
       },
-      Some(s"""
-        WITH $lshRankCtes
-        SELECT qid, rank, nid, round(d, 4) AS score
-        FROM lr WHERE rank <= 3
-        ORDER BY qid, rank
-      """)),
+      Some(lshFamily.topkOracle)),
 
     // ---- array-function surface over embeddings (§2.8): sort/slice/fold -
     // Raw doubles are exact cross-engine here: abs(float32→double) and
@@ -927,109 +969,6 @@ object VecQueries {
                list_reverse_sort(list_transform(embedding, x -> abs(x::DOUBLE)))[3] AS a3
         FROM embeddings ORDER BY vec_id
       """)),
-
-    // ---- multi-probe LSH ANN: own bucket + all Hamming-1 buckets --------
-    // Oracle mirrors the probe enumeration (bucket XOR each bit), so the
-    // hash-match is recall-independent as with every bucketed query.
-    Reg("ann_multiprobe_topk",
-      (s, dir) => VecOps.multiprobeTop3Shared(Tables(s, dir).embeddings, dir)
-        .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
-        .orderBy("qid", "rank"),
-      Some(s"""
-        WITH $mpRankCtes
-        SELECT qid, rank, nid, round(d, 4) AS score
-        FROM lr WHERE rank <= 3
-        ORDER BY qid, rank
-      """)),
-
-    // ---- IVF ANN, WIDE fine probing (round 16, VERDICT r15 #1) ----------
-    // Re-platformed off the fixed-lists flat IVF (16 md5-seeded cells,
-    // 2 probes — the documented quadratic: with FIXED lists the
-    // probed-cell candidate join is n²·probes/lists, 79× measured across
-    // one ScaleDemo decade; that form is retired, its readings stay in
-    // BASELINE.md) onto the scaled-k hierarchical search, grading the
-    // FINE-probe width dial: fprobes = 3 best fine cells per query vs
-    // ivf_hier_topk's 2 (ivf_lloyd2_topk grades the COARSE twin dial at
-    // probes = 3). Recall dominates ann_recall_hier's by construction —
-    // the probed cells are a superset — and the family's lenses price
-    // exactly that trade (3/2× candidate volume). Three consumers slice
-    // the session-shared top-3 relation (hier3Top3Shared).
-    Reg("ivf_ann_topk",
-      (s, dir) => VecOps.hier3Top3Shared(Tables(s, dir).embeddings, dir)
-        .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
-        .orderBy("qid", "rank"),
-      Some(s"""
-        WITH $hierF3CoreCtes
-        SELECT qid, rank, nid, round(d, 4) AS score
-        FROM h3r WHERE rank <= 3
-        ORDER BY qid, rank
-      """)),
-
-    // ---- int8-quantized ANN: the vector-store compression path ----------
-    // Same LSH bucketing as ann_lsh_topk, but candidates are ranked by
-    // the INTEGER dot of round(x·127) vectors — 4× smaller storage, and
-    // the score column is BIGINT arithmetic, hash-exact by construction
-    // (float divergence cannot exist). Rank ties broken by nid on both
-    // engines; quantized ties are more common than float ties, so the
-    // tiebreak is load-bearing here.
-    Reg("ann_int8_topk",
-      (s, dir) => VecOps.int8Top3Shared(Tables(s, dir).embeddings, dir)
-        .select(col("qid"), col("rank"), col("nid"), col("score"))
-        .orderBy("qid", "rank"),
-      Some(s"""
-        WITH ${int8RankCtes("")}
-        SELECT qid, rank, nid, score
-        FROM ir WHERE rank <= 3
-        ORDER BY qid, rank
-      """)),
-
-    // ---- binary-quantized ANN: the 1-bit compression rung ---------------
-    // LSH bucket candidates reranked by Hamming similarity over sign-bit
-    // fingerprints (one BIGINT per vector, 256× smaller than float32).
-    // Integer end to end — score hash-exact by construction; the nid
-    // tiebreak is load-bearing (1-bit ties are pervasive).
-    Reg("ann_binary_topk",
-      (s, dir) => VecOps.binaryTop3Shared(Tables(s, dir).embeddings, dir)
-        .select(col("qid"), col("rank"), col("nid"), col("score"))
-        .orderBy("qid", "rank"),
-      Some(s"""
-        WITH ${binRankCtes("")}
-        SELECT qid, rank, nid, score
-        FROM ir WHERE rank <= 3
-        ORDER BY qid, rank
-      """)),
-
-    // ---- product-quantization ANN: asymmetric-distance ranking ----------
-    // The last rung of the compression ladder (LSH float → int8 → PQ):
-    // 4 subspaces × 8 codewords (codebook = slices of the md5-seeded
-    // vectors), vectors encoded as 4 codes, candidates from the LSH
-    // bucket ranked by full-precision-query × reconstruction. Codes match
-    // cross-engine because assignment maximizes dot(x_s, cw) − ‖cw‖²/2
-    // with BOTH dots index-ordered (identical IEEE op sequence);
-    // assignment and rank ties break on id.
-    Reg("ann_pq_topk",
-      (s, dir) => VecOps.pqTop3Shared(Tables(s, dir).embeddings, dir)
-        .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
-        .orderBy("qid", "rank"),
-      Some(pqOracleSql("", "embeddings"))),
-
-    // ---- OPQ-lite PQ ANN: rotate, then product-quantize -----------------
-    // The Optimized-PQ idea at the determinism-preserving end: a SIGNED
-    // COORDINATE PERMUTATION (orthonormal ⇒ dots, rankings, and the
-    // result contract are exactly preserved) decorrelates the subspace
-    // slices the codebook sees before the identical PQ pipeline runs.
-    // perm/sgn derive from md5 constants; the oracle rebuilds them and
-    // replays the whole rotated pipeline — same hash-exact grading as
-    // ann_pq_topk, zero tolerance.
-    Reg("ann_opq_topk",
-      // localCheckpoint the rotated relation: the 64-term rotation
-      // projection otherwise re-evaluates in every pipeline branch the
-      // PQ plan references it from — measured 3.1 → 1.5 s at sf0.1
-      // (values are bit-identical; the checkpoint only materializes)
-      (s, dir) => VecOps.opqTop3Shared(Tables(s, dir).embeddings, dir)
-        .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
-        .orderBy("qid", "rank"),
-      Some(pqOracleSql(s"$opqRotCtes,", "emb2"))),
 
     // ---- IVF ANN over the 2-iteration Lloyd build -----------------------
     // The distributed k-means build graded end to end: the shared
@@ -1160,28 +1099,6 @@ object VecQueries {
               FROM scw3)
         SELECT qid, rank, nid, round(d, 4) AS score
         FROM r WHERE rank <= 3
-        ORDER BY qid, rank
-      """)),
-
-    // ---- two-level (IMI-style) IVF search (round-12) --------------------
-    // The search-side application of the hierarchical index that fixed
-    // SemDeDup's assignment: neighbors route coarse→fine through
-    // VecOps.hierAssign, queries route the SAME way (2 coarse anchors →
-    // 2 best fine cells among their members → candidates in those cells)
-    // — no O(k) flat centroid scan on build OR search, the shape that
-    // stays n·√k when k ∝ n. Shares the session Lloyd centroid table;
-    // every stage argmax/top-m with (dot DESC, id) tiebreaks, oracle
-    // mirrored stage-for-stage (hierAssignCtes shared with semdedup).
-    Reg("ivf_hier_topk",
-      // round 16: the three hier consumers slice the session-shared
-      // top-3 relation (hierTop3Shared) instead of re-running the search
-      (s, dir) => VecOps.hierTop3Shared(Tables(s, dir).embeddings, dir)
-        .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
-        .orderBy("qid", "rank"),
-      Some(s"""
-        WITH $hierCoreCtes
-        SELECT qid, rank, nid, round(d, 4) AS score
-        FROM hr WHERE rank <= 3
         ORDER BY qid, rank
       """)),
 
@@ -1409,25 +1326,6 @@ object VecQueries {
       },
       Some(semdedupKeepOracle)),
 
-    // ---- Matryoshka (truncated-dimension) two-stage ANN (round-8) -------
-    // The DIMENSION axis of the compression ladder (ADVICE r7 asked this
-    // helper be graded or dropped): buckets and shortlist ranking read
-    // only the first 16 dims (4 hyperplanes restricted to the prefix),
-    // the 8-candidate shortlist is re-ranked with the full 64-dim dot.
-    // The oracle mirrors every stage — prefix hyperplanes, prefix-dot
-    // shortlist rank, full-dot final rank — so the hash-match is
-    // independent of Matryoshka recall, like every bucketed ANN query.
-    Reg("matryoshka_topk",
-      (s, dir) => VecOps.matryoshkaTop3Shared(Tables(s, dir).embeddings, dir)
-        .select(col("qid"), col("rank"), col("nid"), round(col("score"), 4).as("score"))
-        .orderBy("qid", "rank"),
-      Some(s"""
-        WITH ${matRankCtes("")}
-        SELECT qid, rank, nid, round(d, 4) AS score
-        FROM mr WHERE rank <= 3
-        ORDER BY qid, rank
-      """)),
-
     // ---- hybrid retrieval: reciprocal-rank fusion (round-9) -------------
     // The standard way to combine heterogeneous retrievers (Cormack et
     // al., SIGIR'09, public): fuse the LSH and IVF top-5 lists per query
@@ -1469,7 +1367,7 @@ object VecQueries {
           .orderBy("qid", "rank")
       },
       Some(s"""
-        WITH $lshRankCtes,
+        WITH ${lshFamily.rankCtes},
         lsh AS (SELECT qid, nid, 1000000 // (60 + rank) AS c_lsh
                 FROM lr WHERE rank <= 5),
         $hierCoreCtes,
@@ -1840,30 +1738,6 @@ object VecQueries {
         ORDER BY sel_rank
       """)),
 
-    // ---- IVF-PQ residual rung, WIDE fine probing (round 16) -------------
-    // Re-platformed (VERDICT r15 #1) off the fixed-lists flat coarse
-    // quantizer (lists = 16 — the same n²/lists candidate quadratic as
-    // the retired flat IVF) onto the hierarchical residual machinery of
-    // ann_ivfpq_hier_topk, grading
-    // the fprobes = 3 point of the fine-probe dial (the hier sibling
-    // holds fprobes = 2): coarse→fine routing over the scaled-k Lloyd
-    // table, residual v − ce(cell) product-quantized against the salted
-    // 8-codeword book, candidates re-scored by dot(q, ce + PQ(r)) in
-    // three probed cells per query instead of two. The widened probe
-    // set recovers true neighbors whose cell ranks third — the
-    // recall/NDCG lenses price exactly that against the fprobes = 2 row.
-    Reg("ann_ivfpq_topk",
-      (s, dir) => VecOps.ivfpqF3Top3Shared(Tables(s, dir).embeddings, dir)
-        .select(col("qid"), col("rank"), col("nid"),
-          round(col("score"), 4).as("score"))
-        .orderBy("qid", "rank"),
-      Some(s"""
-        WITH ${ivfpqHierCtes(3)}
-        SELECT qid, rank, nid, round(d, 4) AS score
-        FROM hr WHERE rank <= 3
-        ORDER BY qid, rank
-      """)),
-
     // ---- hard-negative mining (contrastive training-data prep) ----------
     // The embedding-side curation op a contrastive trainer consumes: for
     // each anchor, the top-3 most-similar vectors with a DIFFERENT label
@@ -1949,84 +1823,6 @@ object VecQueries {
                CAST(sum(err_x1e6) AS BIGINT) AS sum_err_x1e6,
                max(err_x1e6) AS max_err_x1e6
         FROM e GROUP BY 1 ORDER BY 1
-      """)),
-
-    // ---- shortlist-then-refine ANN (the ELEVENTH index family) ----------
-    // The production two-stage shape: int8 bucket rerank retrieves 10
-    // candidates per query, full-float re-scoring cuts the final top-3
-    // — compressed-index cost, near-exact ranking on the survivors.
-    // All three consumers slice the session-shared top-3 relation
-    // (round 14, ADVICE r13 — the ivfpqTop3Shared discipline).
-    Reg("ann_refine_topk",
-      (s, dir) => VecOps.refineTop3Shared(Tables(s, dir).embeddings, dir)
-        .select(col("qid"), col("rank"), col("nid"),
-          round(col("score"), 4).as("score"))
-        .orderBy("qid", "rank"),
-      Some(s"""
-        WITH ${refineCoreCtes("")}
-        SELECT qid, rank, nid, round(d, 4) AS score
-        FROM rr WHERE rank <= 3
-        ORDER BY qid, rank
-      """)),
-
-    // ---- hierarchical IVF-PQ (the lists ∝ n residual rung) --------------
-    // The escalation BASELINE.md's refusal-arithmetic row names, shipped:
-    // the fixed-lists ivfpq family's coarse quantizer replaced by the
-    // two-level machinery (scaled-k Lloyd table + hierIndex/hierAssign
-    // routing — n·√k build-side dots where lists ∝ n makes the flat
-    // broadcast argmax the retired O(n·k) window class), residual PQ and
-    // asymmetric re-scoring on top exactly as in ann_ivfpq_topk. Shares
-    // the session Lloyd centroid table with the semdedup/hier family;
-    // residual/recon arrays are bit-identical cross-engine (the oracle
-    // casts its double-snapped means to FLOAT before subtracting — see
-    // ivfPqHierTopK's scaladoc).
-    Reg("ann_ivfpq_hier_topk",
-      (s, dir) => {
-        val emb = Tables(s, dir).embeddings
-        VecOps.ivfpqHierTop3Shared(emb, dir)
-          .select(col("qid"), col("rank"), col("nid"),
-            round(col("score"), 4).as("score"))
-          .orderBy("qid", "rank")
-      },
-      Some(s"""
-        WITH ${ivfpqHierCtes(2)}
-        SELECT qid, rank, nid, round(d, 4) AS score
-        FROM hr WHERE rank <= 3
-        ORDER BY qid, rank
-      """)),
-
-    // ---- hier IVF + prefix-prescored refine (the THIRTEENTH family) -----
-    // Round 14: the hier family's rescore bound as a graded rung (the
-    // VERDICT r13 watch item — ivf_hier's 1000× row is dominated by
-    // full-precision-scoring every candidate in the probed cells). Same
-    // coarse→fine routing as ivf_hier_topk; candidates pre-score on the
-    // leading 32 dims only (matryoshka-head discipline: half the
-    // arithmetic and shuffled bytes), a bounded heap keeps 16 per query
-    // on (prefix-dot DESC, nid), and only those pairs fetch full
-    // vectors for the exact top-3. Full-dot cost per query:
-    // shortlist-sized (16 vs E[cell]·fprobes ≈ 256). The prefix recall
-    // trade was MEASURED across the dial before picking (32, 16) —
-    // 0.480 vs unrefined hier's 0.643 on this worst-case near-uniform
-    // fixture; see ivfHierRefineTopK's scaladoc for the full curve.
-    // All three consumers slice the session-shared top-3.
-    Reg("ivf_hier_refine_topk",
-      (s, dir) => VecOps.hierRefineTop3Shared(Tables(s, dir).embeddings, dir)
-        .select(col("qid"), col("rank"), col("nid"),
-          round(col("score"), 4).as("score"))
-        .orderBy("qid", "rank"),
-      Some(s"""
-        WITH $hierRefineCoreCtes
-        SELECT qid, rank, nid, round(d, 4) AS score
-        FROM rr WHERE rank <= 3
-        ORDER BY qid, rank
       """))
-  ) ++ annFamilies.flatMap { f =>
-    Seq(
-      Reg(s"ann_recall_${f.suffix}",
-        (s, dir) => annRecall3(Tables(s, dir).embeddings, dir, f.top3),
-        Some(recall3OracleSql(f.idxCtes))),
-      Reg(s"ann_ndcg_${f.suffix}",
-        (s, dir) => annNdcg3(Tables(s, dir).embeddings, dir, f.top3),
-        Some(ndcg3OracleSql(f.idxCtes))))
-  }
+  ) ++ annFamilies.flatMap(_.regs)
 }

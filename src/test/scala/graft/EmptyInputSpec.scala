@@ -46,4 +46,8 @@ class EmptyInputSpec extends SparkSpec {
   test("zipf_slope_corpus on an empty corpus: n = 0, NULL slope and intercept") {
     withEmpty("documents")(dir => assert(run("zipf_slope_corpus", dir) == Seq(Row(0L, null, null))))
   }
+
+  test("ann_persisted_index_topk on zero embeddings: no rows") {
+    withEmpty("embeddings")(dir => assert(run("ann_persisted_index_topk", dir).isEmpty))
+  }
 }

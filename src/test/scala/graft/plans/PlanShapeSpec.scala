@@ -43,18 +43,17 @@ class PlanShapeSpec extends SparkSpec {
     // filter + output sort over the InMemoryScan (derivation exchanges
     // paid once, reused by knn_label_purity / cosine_score_histogram)
     "cosine_neardup_pairs" -> (1, 0),
-    // Round 16: the seven flat/compression ANN families now slice
-    // session-shared top-3 relations (lshTop3Shared .. matryoshkaTop3Shared
-    // InMemoryScans — the refineTop3Shared discipline applied to the rest
-    // of the eval matrix): topk = output sort only (1,0); recall = brute
-    // join + hit agg (4,0); NDCG = DCG agg chain (5,0). Pipelines' own
-    // exchanges are paid once at materialization.
+    // Every ANN family's three consumers slice its row's session-shared
+    // top-3 relation (AnnFamily.top3, an InMemoryScan): topk = output
+    // sort only (1,0); recall = brute join + hit agg (4,0); NDCG = DCG
+    // agg chain (5,0). Pipelines' own exchanges are paid once at
+    // materialization.
     "ann_multiprobe_topk" -> (1, 0),
     // round-16 (VERDICT r15 #1): re-platformed off the fixed-lists flat
     // IVF onto the hier search at fprobes = 3, and the three consumers
-    // slice the session-shared top-3 relation (hier3Top3Shared
-    // InMemoryScan — output sort only; the search pipeline's exchanges
-    // are paid once at materialization, the ivfpqTop3 discipline)
+    // slice the ivf row's session-shared top-3 relation (InMemoryScan —
+    // output sort only; the search pipeline's exchanges are paid once at
+    // materialization)
     "ivf_ann_topk" -> (1, 0),
     // co-partition left + right + window + ORDER BY; ZERO broadcasts —
     // the custom exec's whole point is two key-clustered exchanges
@@ -404,7 +403,7 @@ class PlanShapeSpec extends SparkSpec {
     // the checkpoint — the graded tail keeps the cells equi-join, the
     // qid joins and the final heap agg only
     // Round 16 (6,1) → (1,0): the three hier consumers slice the
-    // session-shared top-3 relation (hierTop3Shared) — output sort over
+    // hier row's session-shared top-3 relation — output sort over
     // the InMemoryScan; the routing + candidate join exchanges are paid
     // once at materialization
     "ivf_hier_topk" -> (1, 0),
@@ -447,8 +446,8 @@ class PlanShapeSpec extends SparkSpec {
     // lm_perplexity_score 100 TB argument) + per-doc agg + lang-
     // partitioned rank window + bucket agg + sort
     "ccnet_perplexity_buckets" -> (8, 3),
-    // ivfpq family: all three consumers read the session-shared top-3
-    // relation (ivfpqTop3Shared InMemoryScan — output sort / hit + idcg
+    // ivfpq family: all three consumers read the row's session-shared
+    // top-3 relation (InMemoryScan — output sort / hit + idcg
     // aggs only); the index pipeline's own exchanges (coarse assignment
     // window + code window + recon agg + cell join + rank window, with
     // every broadcast a bounded plan-time relation) are paid ONCE at
@@ -475,7 +474,7 @@ class PlanShapeSpec extends SparkSpec {
     // TWO lang-partitioned doubled-midrank windows + per-lang agg + sort
     "quality_nll_agreement" -> (8, 4),
     // refine family re-pinned round 14 (ADVICE r13): all three consumers
-    // read the session-shared refineTop3Shared relation (InMemoryScan —
+    // read the refine row's session-shared top-3 relation (InMemoryScan —
     // output sort / hit + idcg aggs only); the int8 bucket join +
     // shortlist + full-precision re-rank exchanges are paid once at
     // materialization, exactly the ivfpq family's pin pattern.
@@ -487,7 +486,7 @@ class PlanShapeSpec extends SparkSpec {
     "ann_recall_refine" -> (4, 0),
     "ann_ndcg_refine" -> (5, 0),
     // hier IVF-PQ family: all three consumers read the session-shared
-    // top-3 relation (ivfpqHierTop3Shared InMemoryScan — output sort /
+    // top-3 relation (the row's InMemoryScan — output sort /
     // hit + idcg aggs only); the index pipeline's own exchanges (hier
     // assignment heap aggs, residual code window, recon agg, query
     // coarse/fine heap routing, unhinted f2g/ce joins) are paid ONCE at
@@ -496,7 +495,7 @@ class PlanShapeSpec extends SparkSpec {
     "ann_recall_ivfpq_hier" -> (4, 0),
     "ann_ndcg_ivfpq_hier" -> (5, 0),
     // round-14: hier-refine family — all three consumers read the
-    // session-shared hierRefineTop3Shared relation (the ivfpq/refine
+    // hier_refine row's session-shared top-3 relation (the ivfpq/refine
     // pin pattern)
     "ivf_hier_refine_topk" -> (1, 0),
     "ann_recall_hier_refine" -> (4, 0),

@@ -14,6 +14,10 @@ class HierMemoSpec extends SparkSpec {
   private def rddIds(df: DataFrame): Set[Int] =
     df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }.toSet
 
+  /** The session's top-3 relation of the ANN family row `suffix`. */
+  private def top3(suffix: String, dir: String): DataFrame =
+    VecQueries.annFamilies.find(_.suffix == suffix).get.top3(spark, dir)
+
   test("one routing table per (probes, fprobes), shared by every consumer at that dial") {
     val dir = sf("sf0.001")
     val emb = Tables(spark, dir).embeddings
@@ -24,9 +28,9 @@ class HierMemoSpec extends SparkSpec {
     assert(Set(r22, r23, r32).size == 3, "two dials resolved to one routing table")
 
     val at22 = Seq(
-      "hier_top3" -> VecOps.hierTop3Shared(emb, dir),
-      "hier_refine_top3" -> VecOps.hierRefineTop3Shared(emb, dir),
-      "ivfpq_hier_top3" -> VecOps.ivfpqHierTop3Shared(emb, dir),
+      "hier_top3" -> top3("hier", dir),
+      "hier_refine_top3" -> top3("hier_refine", dir),
+      "ivfpq_hier_top3" -> top3("ivfpq_hier", dir),
       "rrf_fusion_topk" -> SparkEntry.queries("rrf_fusion_topk")(spark, dir))
     for ((name, df) <- at22) {
       val ids = rddIds(df)
@@ -34,8 +38,8 @@ class HierMemoSpec extends SparkSpec {
       assert(!r23.subsetOf(ids) && !r32.subsetOf(ids), s"$name reads another dial's table")
     }
     for ((name, df) <- Seq(
-        "hier_f3_top3" -> VecOps.hier3Top3Shared(emb, dir),
-        "ivfpq_f3_top3" -> VecOps.ivfpqF3Top3Shared(emb, dir))) {
+        "hier_f3_top3" -> top3("ivf", dir),
+        "ivfpq_f3_top3" -> top3("ivfpq", dir))) {
       val ids = rddIds(df)
       assert(r23.subsetOf(ids) && !r22.subsetOf(ids), s"$name does not read the (2, 3) table")
     }
